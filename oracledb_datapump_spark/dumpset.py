@@ -444,9 +444,19 @@ class DumpSet:
             return
         with open(self.events_path) as f:
             for line in f:
-                line = line.strip()
-                if line:
-                    yield json.loads(line)
+                if not line.strip():
+                    continue
+                try:
+                    rec = json.loads(line)
+                except json.JSONDecodeError:
+                    # A writer killed mid-append leaves a torn final line
+                    # with no trailing newline: the events before it are
+                    # still the job's last complete state. A corrupt line
+                    # anywhere else is damage, and raises.
+                    if line.endswith("\n"):
+                        raise
+                    return
+                yield rec
 
     def read_logfile(self) -> str:
         """Job log text (reference job.py:322-328, client.py:55-60)."""

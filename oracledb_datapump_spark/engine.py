@@ -8,8 +8,29 @@ PARALLEL directive budget maps to (a) a driver thread pool submitting up to
 mirroring how Oracle sizes its worker pool (reference directives.py:400-409,
 job.py:136-140).
 
-Failures are per-table: caught, logged as events, counted into
-COMPLETED_WITH_ERRORS (reference status.py:38 precedent; test expectation
+Each table runs as a short chain of plain stage functions over its
+``TablePlan``, in which planning has already resolved the directives:
+
+- read: ``_read_source`` (the source scan) or ``_read_dump`` (the dump
+  scan, with the table's manifest entry read once);
+- row transforms: ``_transform_rows`` — SAMPLE → incremental watermark →
+  DEDUP_KEEP_BEST → REMAP_DATA, one copy for EXPORT and TRANSFER;
+- layout: ``_layout`` — repartition, ZORDER or SORT (EXPORT);
+- sink: ``_write_dump`` (FILESIZE, ENCRYPTION) or ``_write_import_df``
+  (TABLE_EXISTS_ACTION, schema evolution, and the MERGE family of
+  ``merge.py``);
+- account: ``_account_export`` (footer counts, snapshots, watermark,
+  checksums) or ``_fingerprint_done`` (the target fingerprint plus the
+  ``TABLE_*_DONE`` event).
+
+``export_table``, ``import_table`` and ``transfer_table`` chain them.
+Planning (``Job._thread_plan_extras``) owns every rule about which
+directives can be combined, so no stage rejects a combination halfway
+through a write.
+
+Failures are per-table: ``_run_one`` logs ``TABLE_*_START``, catches,
+logs ``TABLE_*_ERROR`` and the error counts into COMPLETED_WITH_ERRORS
+(reference status.py:38 precedent; test expectation
 tests/test_import.py:179).
 """
 
@@ -24,12 +45,17 @@ import traceback
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from .base import JobState
 from .catalog import Connector
+from .crypto import count_encrypted_dump, read_encrypted_dump, write_encrypted_dump
 from .directives import PlanConfig
 from .dumpset import DumpSet
+from .exceptions import FileError, UsageError
+from .merge import dtype_has_map, merge_df
 from .planner import TablePlan
 
 
@@ -69,19 +95,45 @@ def _map_codec(fmt: str, parquet_codec: str) -> str:
     return "gzip"
 
 
+def _dump_reader(spark: SparkSession, fmt: str, schema=None):
+    """The reader for a dump of format ``fmt``, typed by ``schema`` when
+    given. CSV dumps are headerless, and read multiLine: Spark's CSV
+    writer quotes embedded newlines on export, and without multiLine the
+    reader splits a quoted field across physical lines into null-padded
+    garbage rows — silent corruption on any text corpus."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if fmt == "csv":
+        reader = reader.option("header", "false").option("multiLine", "true")
+    return reader.format(fmt)
+
+
+def _part_names(d: str) -> set:
+    """Names of the part files of a flat dump dir."""
+    if not os.path.isdir(d):
+        return set()
+    return {n for n in os.listdir(d) if n.startswith("part-")}
+
+
+def data_file_paths(path: str):
+    """Paths of the data files under a dump table dir (hive leaves
+    included); ``_``/``.`` names — Spark markers, staging dirs — are
+    skipped."""
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for name in filenames:
+            if not name.startswith(("_", ".")):
+                yield os.path.join(dirpath, name)
+
+
 def _sniff_dump_format(path: str) -> str:
     """Physical format of a dump table dir, from the data files' own
     extensions (formats are self-describing — no manifest round-trip):
     part-*.snappy.parquet / *.orc / *.json(.gz) / *.csv(.gz)."""
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        for name in filenames:
-            if name.startswith(("_", ".")):
-                continue
-            stripped = name[:-3] if name.endswith(".gz") else name
-            for fmt in ("parquet", "orc", "json", "csv"):
-                if stripped.endswith("." + fmt):
-                    return fmt
+    for p in data_file_paths(path):
+        name = p[:-3] if p.endswith(".gz") else p
+        for fmt in ("parquet", "orc", "json", "csv"):
+            if name.endswith("." + fmt):
+                return fmt
     return "parquet"
 
 
@@ -93,98 +145,73 @@ def _count_dump_rows(path: str, fmt: str = "parquet", spark=None) -> tuple[int, 
     through Spark when a session is supplied, else -1 (unknown)."""
     rows = size = nfiles = 0
     have_rows = False
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        for name in filenames:
-            if name.startswith(("_", ".")):
-                continue
-            p = os.path.join(dirpath, name)
-            size += os.path.getsize(p)
-            nfiles += 1
+    for p in data_file_paths(path):
+        size += os.path.getsize(p)
+        nfiles += 1
+        name = os.path.basename(p)
+        try:
             if name.endswith(".parquet") or (
                 fmt == "parquet" and name.startswith("part-")
             ):
-                try:
-                    import pyarrow.parquet as pq
+                import pyarrow.parquet as pq
 
-                    rows += pq.ParquetFile(p).metadata.num_rows
-                    have_rows = True
-                except Exception:
-                    pass
+                rows += pq.ParquetFile(p).metadata.num_rows
             elif name.endswith(".orc"):
-                try:
-                    from pyarrow import orc as pa_orc
+                from pyarrow import orc as pa_orc
 
-                    rows += pa_orc.ORCFile(p).nrows
-                    have_rows = True
-                except Exception:
-                    pass
+                rows += pa_orc.ORCFile(p).nrows
+            else:
+                continue
+            have_rows = True
+        except Exception:
+            pass
     # parquet/orc included: a runtime without pyarrow (it is a test
     # extra, not a dependency) or any footer-read failure must fall back
     # to a Spark count, not report 0 rows for an intact dump
     # (VALIDATE_TBL_DATA would then fail a good run)
     if not have_rows and fmt in ("json", "csv", "orc", "parquet"):
         if spark is not None:
-            reader = spark.read
-            if fmt == "csv":
-                reader = reader.option("header", "false").option(
-                    "multiLine", "true"
-                )
-            rows = reader.format(fmt).load(path).count()
+            rows = _dump_reader(spark, fmt).load(path).count()
         else:
             rows = -1
     return rows, size, nfiles
 
 
-# backwards-compatible alias (parquet default) for existing callers/tests
-def _count_parquet_rows(path: str) -> tuple[int, int, int]:
-    return _count_dump_rows(path, "parquet")
-
-
 # FILESIZE estimate: schema byte widths (uncompressed logical size — the
 # on-disk parquet file is smaller, so a cap derived from this errs toward
-# under-full files, never oversized ones)
-_FIXED_TYPE_BYTES = {
+# under-full files, never oversized ones); binary / array / map / struct
+# count 64
+_TYPE_BYTES = {
     "long": 8, "integer": 4, "short": 2, "byte": 1, "double": 8,
     "float": 4, "boolean": 1, "date": 4, "timestamp": 8,
-    "timestamp_ntz": 8,
+    "timestamp_ntz": 8, "string": 24, "decimal": 16,
 }
 
 
 def _estimate_row_bytes(schema) -> int:
-    total = 0
-    for f in schema.fields:
-        t = f.dataType.typeName()
-        if t in _FIXED_TYPE_BYTES:
-            total += _FIXED_TYPE_BYTES[t]
-        elif t == "string":
-            total += 24
-        elif t == "decimal":
-            total += 16
-        else:  # binary / array / map / struct
-            total += 64
-    return max(1, total)
+    return max(
+        1, sum(_TYPE_BYTES.get(f.dataType.typeName(), 64) for f in schema.fields)
+    )
 
 
 def _max_data_file_bytes(path: str) -> int:
-    mx = 0
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        for name in filenames:
-            if not name.startswith(("_", ".")):
-                mx = max(mx, os.path.getsize(os.path.join(dirpath, name)))
-    return mx
+    return max((os.path.getsize(p) for p in data_file_paths(path)), default=0)
+
+
+# -- read ----------------------------------------------------------------
 
 
 def _read_source(
     spark: SparkSession, connector: Connector, dumpset: DumpSet, plan: TablePlan
 ):
-    """Source scan for EXPORT / TRANSFER, honoring the TABLE:PARTITION
-    scope (Oracle TABLES syntax): the named hive leaf is the only data
-    listed or read, and the pruning evidence (files scanned vs. the
-    table's total) is recorded in a TABLE_EXPORT_PARTITION_SCOPED event
-    so the job log proves the scan was partition-pruned."""
-    part = plan.extra.get("partition_scope")
+    """Read stage for EXPORT / TRANSFER: the source scan, honoring the
+    TABLE:PARTITION scope (Oracle TABLES syntax): the named hive leaf is
+    the only data listed or read, and the pruning evidence (files scanned
+    vs. the table's total) is recorded in a TABLE_EXPORT_PARTITION_SCOPED
+    event so the job log proves the scan was partition-pruned. Predicate
+    and column pruning happen in the connector so they push into the
+    scan."""
+    part = plan.partition_scope
     kwargs: dict[str, Any] = dict(
         as_of=plan.as_of,
         parallel=plan.parallel,
@@ -193,8 +220,6 @@ def _read_source(
     )
     if part:
         import inspect
-
-        from .exceptions import UsageError
 
         if "partition" not in inspect.signature(
             connector.read_table
@@ -223,388 +248,22 @@ def _read_source(
     return df
 
 
-def export_table(
-    spark: SparkSession,
-    connector: Connector,
-    dumpset: DumpSet,
-    plan: TablePlan,
-) -> TableResult:
-    """EXPORT one table: snapshot read → parquet dump dir.
-
-    Scale notes: the read is connector-partitioned (JDBC numPartitions /
-    parquet splits); we only repartition *up* when the source produced
-    fewer partitions than the parallel budget — never a gratuitous shuffle
-    for already-wide data. Predicate/column pruning happens in the
-    connector so it pushes into the scan.
-    """
-    out_dir = dumpset.table_dir(plan.schema, plan.table)
-    dumpset.log_event("TABLE_EXPORT_START", table=plan.source_key)
-    try:
-        if not plan.data_included:
-            # metadata-only export: record schema, move no rows
-            df = connector.read_table(
-                spark, plan.schema, plan.table, columns=plan.columns
-            )
-            dumpset.log_event(
-                "TABLE_EXPORT_METADATA_ONLY",
-                table=plan.source_key,
-                schema_json=df.schema.json(),
-            )
-            # a worker that never logs _DONE stays EXECUTING in
-            # status_from_events forever (it matches only the
-            # _START/_DONE/_ERROR suffixes)
-            dumpset.log_event(
-                "TABLE_EXPORT_DONE", table=plan.source_key, rows=0, bytes=0
-            )
-            return TableResult(
-                plan, ok=True, rows=0, bytes=0, files=0,
-                detail={"spark_schema": df.schema.json(), "metadata_only": True},
-            )
-        df = _read_source(spark, connector, dumpset, plan)
-        schema_json = df.schema.json()
-        if plan.sample:
-            # SAMPLE is evaluated engine-side on the scanned DataFrame —
-            # never pushed into connector SQL (the md5/CONV hash is
-            # Spark-dialect; remote engines would fail to bind it or
-            # sample a different row set). NULL sample keys are excluded
-            # by policy (see directives.Sample docstring).
-            ppm, col = plan.sample
-            from .functions.text import hash64
-            from pyspark.sql import functions as F
-
-            df = df.filter(
-                F.col(col).isNotNull()
-                & (hash64(F.col(col).cast("string")) % 1_000_000 < ppm)
-            )
-        inc_col = plan.extra.get("incremental_column")
-        prev_watermark = plan.extra.get("watermark")
-        write_mode = "overwrite"
-        if inc_col is not None and prev_watermark is not None:
-            # CDC-style increment: only rows past the manifest watermark,
-            # appended to the existing dump (Catalyst pushes the filter
-            # into the parquet/JDBC scan)
-            from pyspark.sql import functions as F
-
-            df = df.filter(F.col(inc_col) > F.lit(prev_watermark))
-            write_mode = "append"
-        n_before_dedup = None
-        if plan.dedup_keep_best:
-            # DEDUP_KEEP_BEST: one row per key survives — greatest score,
-            # ties to the smallest tiebreak (directives.DedupKeepBest).
-            # Engine-side after the pushed-down scan, SAMPLE and the
-            # incremental watermark slice, before REMAP_DATA (the policy
-            # judges raw values; the remap rewrites the survivors). One
-            # shuffle on the key; the pre-dedup count is a column-pruned
-            # count-star so the recorded drop is attributable. The count
-            # is a SECOND scan of the same plan: exact for snapshot-stable
-            # sources (parquet, as-of reads); on a live RDBMS source rows
-            # can change between the count and the write, so the manifest
-            # rows_dropped is best-effort there (clamped at 0 below).
-            from pyspark.sql import functions as F
-            from pyspark.sql.window import Window
-
-            key, score, tie = plan.dedup_keep_best
-            n_before_dedup = df.count()
-            w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(tie))
-            df = (
-                df.withColumn("__dkb_rk", F.row_number().over(w))
-                .filter(F.col("__dkb_rk") == 1)
-                .drop("__dkb_rk")
-            )
-        if plan.remap_data:
-            # REMAP_DATA rewrites are row-local projections applied after
-            # the pushed-down read and before any layout shuffle — the
-            # dump never contains the raw values
-            from .functions.remap_data import apply_remaps
-
-            df = apply_remaps(df, plan.remap_data)
-            schema_json = df.schema.json()
-        if plan.parallel > 1 and df.rdd.getNumPartitions() < plan.parallel:
-            df = df.repartition(plan.parallel)
-        fmt = plan.extra.get("dump_format", "parquet")
-
-        # snapshot tracking (time travel): remember which data files each
-        # export run added, so IMPORT ... AS_OF_VERSION(n) can read the
-        # dump as of any earlier run by file list alone — the
-        # Delta/Iceberg snapshot idea expressed with nothing but the
-        # manifest. Flat layouts only (a hive-partitioned dump nests its
-        # files per leaf; version it by partition instead).
-        def _data_files(d: str) -> set:
-            if not os.path.isdir(d):
-                return set()
-            return {n for n in os.listdir(d) if n.startswith("part-")}
-
-        track_snapshots = not plan.partition_by
-        pre_file_set = _data_files(out_dir) if track_snapshots else set()
-        # Snapshot footer counts before an append so TABLE_EXPORT_DONE
-        # reports THIS run's delta, not the cumulative dump (CDC runs).
-        prev_rows = prev_size = prev_files = 0
-        if write_mode == "append" and os.path.isdir(out_dir):
-            prev_rows, prev_size, prev_files = _count_dump_rows(
-                out_dir, fmt, spark
-            )
-        if plan.zorder_by:
-            # multi-dimensional clustering: range shuffle + local sort on
-            # the Morton value of the named columns (see functions.zorder)
-            from .functions.zorder import zorder_dataframe
-
-            df = zorder_dataframe(
-                df, [c.strip() for c in plan.zorder_by.split(",") if c.strip()]
-            )
-        elif plan.sort_by:
-            # local per-partition sort (no shuffle): clusters the sort key
-            # for parquet RLE/dictionary pages and row-group pruning
-            df = df.sortWithinPartitions(
-                *[c.strip() for c in plan.sort_by.split(",") if c.strip()]
-            )
-        enc = plan.extra.get("encryption")
-        enc_detail = None
-        if enc:
-            # ENCRYPTION: real Parquet modular encryption (AES-GCM),
-            # executor-distributed — see crypto.py. Row/byte counts come
-            # from the write tasks themselves (an ALL-scope dump has no
-            # readable footers to re-count from).
-            from .crypto import write_encrypted_dump
-            from .exceptions import UsageError
-
-            if fmt != "parquet":
-                raise UsageError(
-                    "ENCRYPTION requires a parquet dump (Parquet modular "
-                    f"encryption); this dump is {fmt} (DUMP_FORMAT)"
-                )
-            if plan.partition_by:
-                raise UsageError(
-                    "ENCRYPTION cannot be combined with "
-                    "EXPORT_PARTITION_BY (hive layouts nest files per "
-                    "leaf; the encrypted writer is flat-layout only)"
-                )
-            if inc_col is not None:
-                raise UsageError(
-                    "ENCRYPTION cannot be combined with "
-                    "INCREMENTAL_COLUMN (the watermark read-back would "
-                    "need the password at every later export)"
-                )
-            enc_res = write_encrypted_dump(
-                df,
-                out_dir,
-                enc["password"],
-                enc["scope"],
-                enc["algorithm"],
-                _map_codec(fmt, plan.codec),
-                encrypt_columns=enc.get("columns"),
-            )
-            rows, size, nfiles = (
-                enc_res["rows"],
-                enc_res["bytes"],
-                len(enc_res["files"]),
-            )
-            enc_detail = {
-                "scope": enc["scope"],
-                "algorithm": enc["algorithm"],
-                "salt_hex": enc_res["salt_hex"],  # public KDF salt
-            }
-            if enc.get("columns"):
-                # which columns are sealed is public metadata (the
-                # footer is plaintext under this scope anyway)
-                enc_detail["columns"] = list(enc["columns"])
-            dumpset.log_event(
-                "TABLE_EXPORT_ENCRYPTED",
-                table=plan.source_key,
-                scope=enc["scope"],
-                algorithm=enc["algorithm"],
-            )
-        else:
-            writer = df.write.mode(write_mode).option(
-                "compression", _map_codec(fmt, plan.codec)
-            )
-            filesize = plan.extra.get("filesize_bytes")
-            if filesize:
-                # FILESIZE (Oracle DP): target bytes per dump part-file.
-                # First pass: estimate-derived records/file from schema
-                # byte widths (parquet compression makes on-disk smaller,
-                # so the estimate errs toward under-full files — the safe
-                # direction for a size cap); the corrective pass below
-                # uses the OBSERVED bytes/row when the estimate overshot.
-                est_rpf = max(1, filesize // _estimate_row_bytes(df.schema))
-                writer = writer.option("maxRecordsPerFile", est_rpf)
-            if plan.partition_by:
-                # hive-partitioned dump layout (EXPORT_PARTITION_BY
-                # extension); enables partition pruning on import and
-                # DEPARTITION splits
-                writer = writer.partitionBy(plan.partition_by)
-            if fmt == "csv":
-                # headerless + manifest schema on import: CSV carries no
-                # types
-                writer = writer.option("header", "false")
-            writer.format(fmt).save(out_dir)
-            rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
-            if (
-                filesize
-                and rows > 0
-                and write_mode == "overwrite"
-                and not plan.partition_by
-                and _max_data_file_bytes(out_dir) > filesize * 1.05
-            ):
-                # corrective rewrite with the observed bytes/row — the
-                # atomic tmp→swap discipline of DumpSet.compact. Runs
-                # BEFORE checksum digests are recorded so the integrity
-                # map covers the final layout. Appends and hive layouts
-                # keep the estimate-only cap (a rewrite would invalidate
-                # snapshot file lists / pruning layout).
-                obs_rpf = max(1, int(filesize * 0.9 * rows / size))
-                reader = spark.read.schema(df.schema)
-                if fmt == "csv":
-                    reader = reader.option("header", "false").option(
-                        "multiLine", "true"
-                    )
-                tmp = out_dir + ".filesize_tmp"
-                shutil.rmtree(tmp, ignore_errors=True)
-                (
-                    reader.format(fmt)
-                    .load(out_dir)
-                    .write.mode("overwrite")
-                    .option("compression", _map_codec(fmt, plan.codec))
-                    .option("maxRecordsPerFile", obs_rpf)
-                    .format(fmt)
-                    .save(tmp)
-                )
-                old = out_dir + ".filesize_old"
-                shutil.rmtree(old, ignore_errors=True)
-                os.rename(out_dir, old)
-                os.rename(tmp, out_dir)
-                shutil.rmtree(old)
-                rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
-                dumpset.log_event(
-                    "TABLE_FILESIZE_ENFORCED",
-                    table=plan.source_key,
-                    target_bytes=filesize,
-                    records_per_file=obs_rpf,
-                    n_files=nfiles,
-                )
-        # Manifest fields stay cumulative (they describe the dump set);
-        # the TABLE_EXPORT_DONE event reports this run's delta so CDC
-        # status/metrics aren't inflated by prior increments.
-        run_rows, run_size = rows - prev_rows, size - prev_size
-        detail: dict[str, Any] = {
-            "spark_schema": schema_json,
-            "codec": plan.codec,
-            "dump_format": fmt,
-        }
-        if enc_detail:
-            detail["encryption"] = enc_detail
-        if plan.extra.get("filesize_bytes"):
-            detail["filesize"] = {
-                "target_bytes": plan.extra["filesize_bytes"],
-                "max_file_bytes": _max_data_file_bytes(out_dir),
-            }
-        if plan.dedup_keep_best:
-            key, score, tie = plan.dedup_keep_best
-            # best-effort on live (non-snapshot) sources — see the count
-            # note above; never negative in the manifest
-            rows_dropped = max(0, int(n_before_dedup - run_rows))
-            detail["dedup_keep_best"] = {
-                "key": key,
-                "score": score,
-                "tiebreak": tie,
-                "rows_dropped": rows_dropped,
-            }
-            dumpset.log_event(
-                "TABLE_EXPORT_DEDUPED",
-                table=plan.source_key,
-                key=key,
-                rows_dropped=rows_dropped,
-            )
-        if plan.extra.get("source_type"):
-            # VIEWS_AS_TABLES provenance: the dump holds materialized
-            # rows; the importer treats it as an ordinary table
-            detail["source_type"] = plan.extra["source_type"]
-        if track_snapshots:
-            prev_snaps = (
-                list(plan.extra.get("snapshots") or [])
-                if write_mode == "append"
-                else []  # overwrite replaces every file: history resets
-            )
-            if write_mode == "append" and not prev_snaps and pre_file_set:
-                # Snapshot history is starting MID-DUMP (the existing
-                # files were written before tracking, e.g. a pre-snapshot
-                # manifest). They must belong to a version or
-                # AS_OF_VERSION at ANY version — latest included — would
-                # silently drop the whole base table (round-9 advisor
-                # finding): seed them as version 1 and let this run's
-                # delta become version 2.
-                prev_snaps = [{"version": 1, "files": sorted(pre_file_set)}]
-            added = sorted(_data_files(out_dir) - pre_file_set)
-            detail["snapshots"] = prev_snaps + [
-                {"version": len(prev_snaps) + 1, "files": added}
-            ]
-        if write_mode == "append":
-            detail["rows_this_run"] = run_rows
-        if inc_col is not None:
-            # new watermark from the dump itself (no extra source scan);
-            # recorded schema keeps text formats typed on the read-back
-            from pyspark.sql import functions as F
-
-            wm_reader = spark.read.schema(df.schema)
-            if fmt == "csv":
-                # same multiLine contract as every other CSV read here:
-                # a split quoted row could mis-parse a fragment into the
-                # watermark column and silently skip rows next run
-                wm_reader = wm_reader.option("header", "false").option(
-                    "multiLine", "true"
-                )
-            wm_row = (
-                wm_reader.format(fmt).load(out_dir)
-                .agg(F.max(inc_col))
-                .collect()
-            )[0]
-            detail["incremental_column"] = inc_col
-            detail["watermark"] = wm_row[0]
-        cks_alg = plan.extra.get("checksum_algorithm")
-        if cks_alg:
-            # CHECKSUM (Oracle DP 21c): per-file digests, executor-side
-            # fan-out — recorded over the WHOLE table dir so incremental
-            # appends refresh the full integrity map
-            digests = dumpset.file_digests(spark, out_dir, cks_alg)
-            detail["checksums"] = {"algorithm": cks_alg, "files": digests}
-            dumpset.log_event(
-                "TABLE_CHECKSUM_RECORDED",
-                table=plan.source_key,
-                algorithm=cks_alg,
-                n_files=len(digests),
-            )
-        dumpset.log_event(
-            "TABLE_EXPORT_DONE",
-            table=plan.source_key,
-            rows=run_rows,
-            bytes=run_size,
-            cumulative_rows=rows,
-        )
-        return TableResult(
-            plan, ok=True, rows=rows, bytes=size, files=nfiles, detail=detail
-        )
-    except Exception as e:
-        dumpset.log_event(
-            "TABLE_EXPORT_ERROR", table=plan.source_key, error=str(e)
-        )
-        return TableResult(plan, ok=False, error=f"{e}\n{traceback.format_exc()}")
+def _table_meta(dumpset: DumpSet, plan: TablePlan) -> dict[str, Any]:
+    """The table's manifest entry ({} without a manifest), read once per
+    import and handed to every stage that needs it."""
+    if not dumpset.exists():
+        return {}
+    return dumpset.read_manifest().tables.get(plan.source_key, {})
 
 
 def _verify_dump_checksums(
-    spark: SparkSession, dumpset: DumpSet, plan: TablePlan, src_dir: str
+    spark: SparkSession, dumpset: DumpSet, plan: TablePlan, src_dir: str, tmeta: dict
 ) -> None:
     """VERIFY_CHECKSUM / VERIFY_ONLY (Oracle DP 21c): recompute every
     data file's digest BEFORE any row is read; a dump without recorded
     checksums fails too — silently skipping the verification the
     caller asked for would defeat it."""
-    from .exceptions import UsageError
-
-    recorded = (
-        dumpset.read_manifest()
-        .tables.get(plan.source_key, {})
-        .get("checksums")
-        if dumpset.exists()
-        else None
-    )
+    recorded = tmeta.get("checksums")
     if not recorded:
         raise UsageError(
             f"VERIFY_CHECKSUM: dump for {plan.source_key} carries "
@@ -627,6 +286,327 @@ def _verify_dump_checksums(
     )
 
 
+def _as_of_files(
+    plan: TablePlan, version: int, src_dir: str, tmeta: dict[str, Any]
+) -> list[str]:
+    """AS_OF_VERSION(n): the files of export runs 1..n from the
+    manifest's snapshot history — a pure file-list narrowing, so every
+    downstream pushdown/prune behaves exactly as on a full read."""
+    snaps = tmeta.get("snapshots")
+    if not snaps:
+        raise UsageError(
+            f"AS_OF_VERSION: dump for {plan.source_key} has no "
+            "snapshot history in the manifest (hive-partitioned "
+            "dumps and pre-snapshot dumps are not versioned)"
+        )
+    latest = max(s["version"] for s in snaps)
+    if version > latest:
+        raise UsageError(
+            f"AS_OF_VERSION({version}) beyond the "
+            f"dump's latest version {latest}"
+        )
+    # History completeness check (round-9 advisor finding): the
+    # union of the snapshot file lists must account for every
+    # data file in the directory — a dump appended to before
+    # tracking, or compacted without a history rewrite, would
+    # otherwise time-travel to a silently partial table.
+    union = {f for s in snaps for f in s["files"]}
+    on_disk = _part_names(src_dir)
+    if union != on_disk:
+        extra = sorted(on_disk - union)[:3]
+        stale = sorted(union - on_disk)[:3]
+        raise UsageError(
+            f"AS_OF_VERSION: snapshot history for {plan.source_key} "
+            "does not match the dump directory "
+            f"(untracked files: {extra}, missing files: {stale}) — "
+            "the history is stale; re-export or compact with "
+            "history rewrite before time-traveling"
+        )
+    files = [
+        os.path.join(src_dir, f)
+        for s in snaps
+        if s["version"] <= version
+        for f in s["files"]
+    ]
+    if not files:
+        raise UsageError(
+            f"AS_OF_VERSION({version}): no data files "
+            f"recorded for {plan.source_key} at that version"
+        )
+    return files
+
+
+def _read_dump(
+    spark: SparkSession,
+    plan: TablePlan,
+    config: PlanConfig,
+    src_dir: str,
+    fmt: str,
+    tmeta: dict[str, Any],
+):
+    """Read stage for IMPORT: the dump scan (narrowed by AS_OF_VERSION,
+    decrypted when the manifest records ENCRYPTION), then QUERY and
+    COLUMNS."""
+    schema = None
+    if fmt in ("json", "csv"):
+        # text formats carry no types — restore the exported Spark
+        # schema from the manifest (export_table records it); without
+        # it JSON falls back to inference and CSV cannot be read at
+        # all (headerless), so CSV requires the manifest.
+        if tmeta.get("spark_schema"):
+            schema = StructType.fromJson(_json.loads(tmeta["spark_schema"]))
+        elif fmt == "csv":
+            raise FileError(
+                f"CSV dump for {plan.source_key} has no recorded schema "
+                "in the manifest; cannot type a headerless CSV read"
+            )
+    files = None
+    if config.as_of_version is not None:
+        files = _as_of_files(plan, config.as_of_version, src_dir, tmeta)
+    enc = tmeta.get("encryption")
+    if enc:
+        # encrypted dump: decrypting file-list reader (crypto.py) —
+        # a plain spark.read here would die on the Parquet crypto
+        # layer, so fail with the actionable message instead
+        if not plan.encryption_password:
+            raise UsageError(
+                f"dump for {plan.source_key} is encrypted "
+                f"(scope {enc['scope']}); IMPORT requires "
+                "ENCRYPTION_PASSWORD"
+            )
+        if files is None:
+            files = [
+                os.path.join(src_dir, n)
+                for n in os.listdir(src_dir)
+                if n.startswith("part-") and n.endswith(".parquet")
+            ]
+        # a QUERY predicate may reference columns outside the
+        # COLUMNS projection (the plain path filters before
+        # selecting), so only push the column prune into the
+        # parquet read when there is no predicate
+        df = read_encrypted_dump(
+            spark,
+            files,
+            tmeta["spark_schema"],
+            plan.encryption_password,
+            enc["salt_hex"],
+            columns=plan.columns if not plan.predicate else None,
+        )
+    else:
+        df = _dump_reader(spark, fmt, schema).load(
+            src_dir if files is None else files
+        )
+    if plan.predicate:
+        df = df.filter(plan.predicate)
+    if plan.columns and (not enc or plan.predicate):
+        df = df.select(*plan.columns)
+    return df
+
+
+# -- row transforms --------------------------------------------------------
+
+
+def _transform_rows(df, plan: TablePlan):
+    """Row-transform stage shared by EXPORT and TRANSFER, in order:
+    SAMPLE → incremental watermark → DEDUP_KEEP_BEST → REMAP_DATA.
+    Returns the transformed frame and the frame as it stood before
+    DEDUP_KEEP_BEST (None without it), whose count EXPORT records."""
+    if plan.sample:
+        # SAMPLE is evaluated engine-side on the scanned DataFrame —
+        # never pushed into connector SQL (the md5/CONV hash is
+        # Spark-dialect; remote engines would fail to bind it or
+        # sample a different row set). NULL sample keys are excluded
+        # by policy (see directives.Sample docstring).
+        from .functions.text import hash64
+
+        ppm, col = plan.sample
+        df = df.filter(
+            F.col(col).isNotNull()
+            & (hash64(F.col(col).cast("string")) % 1_000_000 < ppm)
+        )
+    if plan.incremental_append:
+        # CDC-style increment: only rows past the manifest watermark,
+        # appended to the existing dump (Catalyst pushes the filter
+        # into the parquet/JDBC scan)
+        df = df.filter(F.col(plan.incremental_column) > F.lit(plan.watermark))
+    pre_dedup = None
+    if plan.dedup_keep_best:
+        # DEDUP_KEEP_BEST: one row per key survives — greatest score,
+        # ties to the smallest tiebreak (directives.DedupKeepBest).
+        # Engine-side after the pushed-down scan, SAMPLE and the
+        # incremental watermark slice, before REMAP_DATA (the policy
+        # judges raw values; the remap rewrites the survivors). One
+        # shuffle on the key.
+        key, score, tie = plan.dedup_keep_best
+        pre_dedup = df
+        w = Window.partitionBy(key).orderBy(F.desc(score), F.asc(tie))
+        df = (
+            df.withColumn("__dkb_rk", F.row_number().over(w))
+            .filter(F.col("__dkb_rk") == 1)
+            .drop("__dkb_rk")
+        )
+    if plan.remap_data:
+        # REMAP_DATA rewrites are row-local projections applied after
+        # the pushed-down read and before any layout shuffle — the
+        # dump never contains the raw values
+        from .functions.remap_data import apply_remaps
+
+        df = apply_remaps(df, plan.remap_data)
+    return df, pre_dedup
+
+
+# -- layout ----------------------------------------------------------------
+
+
+def _layout(df, plan: TablePlan):
+    """Layout stage (EXPORT). The read is connector-partitioned (JDBC
+    numPartitions / parquet splits); we only repartition *up* when the
+    source produced fewer partitions than the parallel budget — never a
+    gratuitous shuffle for already-wide data."""
+    if plan.parallel > 1 and df.rdd.getNumPartitions() < plan.parallel:
+        df = df.repartition(plan.parallel)
+    if plan.zorder_by:
+        # multi-dimensional clustering: range shuffle + local sort on
+        # the Morton value of the named columns (see functions.zorder)
+        from .functions.zorder import zorder_dataframe
+
+        return zorder_dataframe(df, plan.zorder_by)
+    if plan.sort_by:
+        # local per-partition sort (no shuffle): clusters the sort key
+        # for parquet RLE/dictionary pages and row-group pruning
+        return df.sortWithinPartitions(*plan.sort_by)
+    return df
+
+
+# -- sink ------------------------------------------------------------------
+
+
+def _write_dump(
+    spark: SparkSession, dumpset: DumpSet, plan: TablePlan, df, out_dir: str
+) -> tuple[int, int, int, dict[str, Any] | None]:
+    """Sink stage (EXPORT): the dump writer with FILESIZE and ENCRYPTION.
+    Returns (rows, bytes, files) of the whole table dir and, for an
+    encrypted dump, its manifest ``encryption`` detail."""
+    fmt = plan.dump_format
+    codec = _map_codec(fmt, plan.codec)
+    enc = plan.encryption
+    if enc:
+        # ENCRYPTION: real Parquet modular encryption (AES-GCM),
+        # executor-distributed — see crypto.py. Row/byte counts come
+        # from the write tasks themselves (an ALL-scope dump has no
+        # readable footers to re-count from).
+        res = write_encrypted_dump(
+            df,
+            out_dir,
+            enc["password"],
+            enc["scope"],
+            enc["algorithm"],
+            codec,
+            encrypt_columns=enc.get("columns"),
+        )
+        detail = {
+            "scope": enc["scope"],
+            "algorithm": enc["algorithm"],
+            "salt_hex": res["salt_hex"],  # public KDF salt
+        }
+        if enc.get("columns"):
+            # which columns are sealed is public metadata (the
+            # footer is plaintext under this scope anyway)
+            detail["columns"] = list(enc["columns"])
+        dumpset.log_event(
+            "TABLE_EXPORT_ENCRYPTED",
+            table=plan.source_key,
+            scope=enc["scope"],
+            algorithm=enc["algorithm"],
+        )
+        return res["rows"], res["bytes"], len(res["files"]), detail
+    append = plan.incremental_append
+    writer = df.write.mode("append" if append else "overwrite").option(
+        "compression", codec
+    )
+    filesize = plan.filesize_bytes
+    if filesize:
+        # FILESIZE (Oracle DP): target bytes per dump part-file.
+        # First pass: estimate-derived records/file from schema
+        # byte widths (parquet compression makes on-disk smaller,
+        # so the estimate errs toward under-full files — the safe
+        # direction for a size cap); the corrective pass below
+        # uses the OBSERVED bytes/row when the estimate overshot.
+        est_rpf = max(1, filesize // _estimate_row_bytes(df.schema))
+        writer = writer.option("maxRecordsPerFile", est_rpf)
+    if plan.partition_by:
+        # hive-partitioned dump layout (EXPORT_PARTITION_BY
+        # extension); enables partition pruning on import and
+        # DEPARTITION splits
+        writer = writer.partitionBy(plan.partition_by)
+    if fmt == "csv":
+        # headerless + manifest schema on import: CSV carries no
+        # types
+        writer = writer.option("header", "false")
+    writer.format(fmt).save(out_dir)
+    rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
+    if (
+        filesize
+        and rows > 0
+        and not append
+        and not plan.partition_by
+        and _max_data_file_bytes(out_dir) > filesize * 1.05
+    ):
+        # corrective rewrite with the observed bytes/row — the
+        # atomic tmp→swap discipline of DumpSet.compact. Runs
+        # BEFORE checksum digests are recorded so the integrity
+        # map covers the final layout. Appends and hive layouts
+        # keep the estimate-only cap (a rewrite would invalidate
+        # snapshot file lists / pruning layout).
+        obs_rpf = max(1, int(filesize * 0.9 * rows / size))
+        tmp, old = out_dir + ".filesize_tmp", out_dir + ".filesize_old"
+        shutil.rmtree(tmp, ignore_errors=True)
+        (
+            _dump_reader(spark, fmt, df.schema)
+            .load(out_dir)
+            .write.mode("overwrite")
+            .option("compression", codec)
+            .option("maxRecordsPerFile", obs_rpf)
+            .format(fmt)
+            .save(tmp)
+        )
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(out_dir, old)
+        os.rename(tmp, out_dir)
+        shutil.rmtree(old)
+        rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
+        dumpset.log_event(
+            "TABLE_FILESIZE_ENFORCED",
+            table=plan.source_key,
+            target_bytes=filesize,
+            records_per_file=obs_rpf,
+            n_files=nfiles,
+        )
+    return rows, size, nfiles, None
+
+
+def _evolve_append(spark: SparkSession, connector: Connector, plan: TablePlan, df):
+    """APPEND evolution: narrow incoming (missing target columns)
+    null-fills and stays a true append; widening incoming (new columns)
+    must rewrite the target once so existing rows gain the new nulls —
+    the same one-time widening a table format's ALTER ADD COLUMN
+    amortizes. Returns the frame to write and its write mode."""
+    existing = connector.read_table(
+        spark, plan.target_schema, plan.target_table
+    )
+    in_cols, ex_cols = set(df.columns), set(existing.columns)
+    if in_cols - ex_cols:
+        return existing.unionByName(
+            df, allowMissingColumns=True
+        ).localCheckpoint(eager=True), "overwrite"
+    if ex_cols - in_cols:
+        for fld in existing.schema.fields:
+            if fld.name not in in_cols:
+                df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
+        df = df.select(*existing.columns)
+    return df, "append"
+
+
 def _write_import_df(
     spark: SparkSession,
     connector: Connector,
@@ -635,276 +615,23 @@ def _write_import_df(
     config: PlanConfig,
     df,
 ):
-    """The import-side write half, shared by import_table (dump ->
-    target) and transfer_table (NETWORK_LINK: source -> target with no
-    intermediate dump): TABLE_EXISTS_ACTION incl. the MERGE family
-    (MERGE_KEY/ORDER/DELETE_COL/PRUNE), schema evolution, and the
-    final connector write. Returns the (possibly merged) frame that
-    was written."""
-    mode = plan.write_mode
-    pruned_written = False
+    """Sink stage shared by import_table (dump -> target) and
+    transfer_table (NETWORK_LINK: source -> target with no intermediate
+    dump): TABLE_EXISTS_ACTION incl. the MERGE family
+    (MERGE_KEY/ORDER/DELETE_COL/PRUNE), schema evolution, and the final
+    connector write. Returns the (possibly merged) frame that was
+    written."""
+    mode, written = plan.write_mode, False
     if mode == "merge":
-        # TABLE_EXISTS_ACTION(MERGE): newest-wins upsert by
-        # MERGE_KEY. One window over existing ∪ incoming (incoming
-        # tagged higher precedence), then a full rewrite — the plan a
-        # native-MERGE table format would also execute, minus its
-        # file-level pruning. The shuffle is on the merge key, so
-        # it scales like any keyed aggregation.
-        from .exceptions import UsageError
-
-        if not plan.merge_key:
-            raise UsageError(
-                "TABLE_EXISTS_ACTION(MERGE) requires MERGE_KEY(<cols>)"
-            )
-        keys = [c.strip() for c in plan.merge_key.split(",") if c.strip()]
-        # MERGE_DELETE_COL(<col>): boolean tombstone on the INCOMING
-        # side — a row with it true deletes its key instead of
-        # upserting. Applied AFTER survivor selection, so a tombstone
-        # only takes effect when it is the winning version (a stale
-        # late delete under MERGE_ORDER loses to newer state, exactly
-        # like a stale late upsert). The column is transport
-        # metadata and never lands in the stored table.
-        del_col = plan.merge_delete_col
-        if del_col:
-            from .exceptions import UsageError
-
-            if del_col not in df.columns:
-                raise UsageError(
-                    f"MERGE_DELETE_COL column {del_col!r} missing from "
-                    "the incoming dump"
-                )
-            if del_col in keys:
-                raise UsageError(
-                    "MERGE_DELETE_COL cannot be a MERGE_KEY column"
-                )
-        if connector.table_exists(plan.target_schema, plan.target_table):
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
-            # MERGE_PRUNE: zone-map file pruning — rewrite only the
-            # files whose footer [min,max] on the merge key contains
-            # an incoming key; every file CONTAINING an incoming key
-            # is inside its own min/max, so pruning can only add
-            # false-positive rewrites, never miss one. Falls back to
-            # the full rewrite when the capability is unavailable
-            # (see directives.MergePrune). NULL incoming keys force
-            # the fallback: parquet zone maps don't locate nulls, so
-            # a stored null-key row in an untouched file would escape
-            # the survivor window.
-            prune_touched = None
-            prune_total = 0
-            if (
-                plan.merge_prune
-                and len(keys) == 1
-                and not config.allow_schema_evolution
-            ):
-                fr = getattr(connector, "table_file_ranges", None)
-                ranges = (
-                    fr(plan.target_schema, plan.target_table, keys[0])
-                    if fr
-                    else None
-                )
-                if ranges:
-                    try:
-                        has_null = (
-                            df.filter(F.col(keys[0]).isNull())
-                            .limit(1)
-                            .count()
-                            > 0
-                        )
-                        if not has_null:
-                            rng_df = spark.createDataFrame(
-                                [(p, mn, mx) for p, mn, mx in ranges],
-                                ["__path", "__mn", "__mx"],
-                            )
-                            inc = (
-                                df.select(F.col(keys[0]).alias("__k"))
-                                .distinct()
-                            )
-                            prune_touched = sorted(
-                                r["__path"]
-                                for r in inc.join(
-                                    F.broadcast(rng_df),
-                                    (F.col("__k") >= F.col("__mn"))
-                                    & (F.col("__k") <= F.col("__mx")),
-                                )
-                                .select("__path")
-                                .distinct()
-                                .collect()  # bounded by the file count
-                            )
-                            prune_total = len(ranges)
-                            if len(prune_touched) == prune_total:
-                                prune_touched = None  # nothing skipped
-                    except Exception:
-                        prune_touched = None  # capability mismatch
-            if prune_touched is None:
-                existing = connector.read_table(
-                    spark, plan.target_schema, plan.target_table
-                )
-            elif prune_touched:
-                existing = spark.read.parquet(*prune_touched)
-            else:
-                # all incoming keys are new: no stored file overlaps,
-                # but the survivor window must still dedup the batch
-                existing = connector.read_table(
-                    spark, plan.target_schema, plan.target_table
-                ).limit(0)
-            # DATA_OPTIONS(ALLOW_SCHEMA_EVOLUTION): by-name drift
-            # between the target and the dump resolves to the union
-            # of columns, null-filling either side; off = the strict
-            # by-name union (AnalysisException on drift) stands.
-            # The merge-key columns themselves may NEVER be
-            # null-filled: a side missing the key would collapse to
-            # one all-null-key partition and row_number()==1 would
-            # silently keep a single survivor — mass data loss where
-            # the strict path fails loudly.
-            if config.allow_schema_evolution:
-                from .exceptions import UsageError
-
-                for side, cols in (
-                    ("target", existing.columns),
-                    ("dump", df.columns),
-                ):
-                    miss = [k for k in keys if k not in cols]
-                    if miss:
-                        raise UsageError(
-                            f"MERGE_KEY column(s) {miss} missing from "
-                            f"the {side} side; schema evolution cannot "
-                            "null-fill a merge key"
-                        )
-            if del_col and del_col not in existing.columns:
-                # target rows are never-deleted; null-fill the
-                # transport column so the union lines up by name
-                existing = existing.withColumn(
-                    del_col, F.lit(None).cast(df.schema[del_col].dataType)
-                )
-            merged = existing.withColumn("__src", F.lit(0)).unionByName(
-                df.withColumn("__src", F.lit(1)),
-                allowMissingColumns=config.allow_schema_evolution,
-            )
-            # survivor order: incoming beats existing; duplicate keys
-            # WITHIN a side resolve by the 64-bit hash of the row's
-            # hashable columns, so repeated runs pick the same
-            # survivor (ties only between rows identical in those
-            # columns) — the job-hash determinism contract extends to
-            # MERGE. Columns whose type tree contains a MapType
-            # ANYWHERE (top-level, struct field, array element) are
-            # excluded: Spark's hash()/xxhash64() rejects maps at any
-            # nesting depth, and a map-typed tiebreak would turn a
-            # working merge into an AnalysisException.
-            from pyspark.sql.types import ArrayType, MapType, StructType
-
-            def _has_map(dt) -> bool:
-                if isinstance(dt, MapType):
-                    return True
-                if isinstance(dt, ArrayType):
-                    return _has_map(dt.elementType)
-                if isinstance(dt, StructType):
-                    return any(_has_map(f.dataType) for f in dt.fields)
-                return False
-
-            hashable = [
-                f.name
-                for f in merged.schema.fields
-                if f.name != "__src" and not _has_map(f.dataType)
-            ]
-            # MERGE_ORDER(<cols>): last-writer-by-version — the highest
-            # (col1, col2, ...) tuple wins across existing ∪ incoming,
-            # so a late-arriving batch carrying an OLDER version can
-            # never clobber newer warehouse state (out-of-order CDC).
-            # Without it, incoming beats existing (arrival order).
-            # nulls_last: a side null-filled by schema evolution never
-            # beats a row that actually carries the version column.
-            order_cols = []
-            if plan.merge_order:
-                from .exceptions import UsageError
-
-                for c in plan.merge_order.split(","):
-                    c = c.strip()
-                    if not c:
-                        continue
-                    if c not in merged.columns:
-                        raise UsageError(
-                            f"MERGE_ORDER column {c!r} missing from both "
-                            "the target and the dump"
-                        )
-                    order_cols.append(F.desc_nulls_last(c))
-            w = Window.partitionBy(*keys).orderBy(
-                *order_cols, F.desc("__src"), F.xxhash64(*hashable)
-            )
-            df = (
-                merged.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn", "__src")
-            )
-            if del_col:
-                # drop keys whose WINNING version is a tombstone;
-                # shed the transport column from the stored table
-                df = df.filter(
-                    ~F.coalesce(
-                        F.col(del_col).cast("boolean"), F.lit(False)
-                    )
-                ).drop(del_col)
-            # materialize BEFORE the overwrite: with a lazy connector
-            # (parquet/JDBC) the plan still reads the target being
-            # replaced — evaluating it after the truncate silently
-            # drops every non-matching existing row (or Spark refuses
-            # to overwrite a path it is reading). localCheckpoint
-            # severs the lineage to the target's files.
-            df = df.localCheckpoint(eager=True)
-            if prune_touched is not None:
-                written = connector.merge_pruned_write(
-                    df,
-                    plan.target_schema,
-                    plan.target_table,
-                    prune_touched,
-                )
-                dumpset.log_event(
-                    "TABLE_MERGE_PRUNED",
-                    table=plan.target_key,
-                    files_total=prune_total,
-                    files_touched=len(prune_touched),
-                    files_written=written,
-                )
-                pruned_written = True
-        elif del_col:
-            # first merge into a fresh table: a tombstone for a key
-            # that never existed is a no-op row, not an error
-            from pyspark.sql import functions as F
-
-            df = df.filter(
-                ~F.coalesce(F.col(del_col).cast("boolean"), F.lit(False))
-            ).drop(del_col)
+        df, written = merge_df(spark, connector, dumpset, plan, config, df)
         mode = "overwrite"
     elif (
         mode == "append"
         and config.allow_schema_evolution
         and connector.table_exists(plan.target_schema, plan.target_table)
     ):
-        # APPEND evolution: narrow incoming (missing target columns)
-        # null-fills and stays a true append; widening incoming (new
-        # columns) must rewrite the target once so existing rows gain
-        # the new nulls — the same one-time widening a table format's
-        # ALTER ADD COLUMN amortizes.
-        from pyspark.sql import functions as F
-
-        existing = connector.read_table(
-            spark, plan.target_schema, plan.target_table
-        )
-        in_cols, ex_cols = set(df.columns), set(existing.columns)
-        if in_cols - ex_cols:
-            df = existing.unionByName(
-                df, allowMissingColumns=True
-            ).localCheckpoint(eager=True)
-            mode = "overwrite"
-        elif ex_cols - in_cols:
-            for fld in existing.schema.fields:
-                if fld.name not in in_cols:
-                    df = df.withColumn(
-                        fld.name, F.lit(None).cast(fld.dataType)
-                    )
-            df = df.select(*existing.columns)
-    if not pruned_written:
+        df, mode = _evolve_append(spark, connector, plan, df)
+    if not written:
         connector.write_table(
             df,
             plan.target_schema,
@@ -916,291 +643,159 @@ def _write_import_df(
     return df
 
 
-def import_table(
+def _departition(
     spark: SparkSession,
     connector: Connector,
     dumpset: DumpSet,
     plan: TablePlan,
-    config: PlanConfig,
-) -> TableResult:
-    """IMPORT one table: dump dir → target catalog with exists-action."""
-    src_dir = dumpset.table_dir(plan.schema, plan.table)
-    dumpset.log_event("TABLE_IMPORT_START", table=plan.target_key)
-    try:
-        if not os.path.isdir(src_dir):
-            # metadata-only entry in the dump set — nothing to load
-            dumpset.log_event("TABLE_IMPORT_SKIP_NO_DATA", table=plan.target_key)
-            dumpset.log_event("TABLE_IMPORT_DONE", table=plan.target_key, rows=0)
-            return TableResult(plan, ok=True, rows=0, skipped=True)
-        if plan.write_mode == "ignore" and connector.table_exists(
-            plan.target_schema, plan.target_table
-        ):
-            dumpset.log_event("TABLE_IMPORT_SKIP_EXISTS", table=plan.target_key)
-            dumpset.log_event("TABLE_IMPORT_DONE", table=plan.target_key, rows=0)
-            return TableResult(plan, ok=True, rows=0, skipped=True)
-        if config.verify_checksum or config.verify_only:
-            _verify_dump_checksums(spark, dumpset, plan, src_dir)
-        if config.verify_only:
-            # VERIFY_ONLY (Oracle DP 21c): integrity audit of the dump,
-            # zero rows loaded — the target catalog is untouched
-            dumpset.log_event(
-                "TABLE_IMPORT_VERIFY_ONLY", table=plan.target_key
-            )
-            dumpset.log_event(
-                "TABLE_IMPORT_DONE", table=plan.target_key, rows=0
-            )
-            return TableResult(plan, ok=True, rows=0, skipped=True)
-        fmt = _sniff_dump_format(src_dir)
-        # PARTITION_OPTIONS=DEPARTITION: one target table per hive
-        # partition directory (reference directives.py:346-349); MERGE/
-        # NONE fall through — Spark unions partition dirs natively.
-        if config.partition_options == "DEPARTITION":
-            if fmt != "parquet":
-                from .exceptions import UsageError
-
-                raise UsageError(
-                    f"PARTITION_OPTIONS(DEPARTITION) requires a parquet "
-                    f"dump; this dump is {fmt} (DUMP_FORMAT)"
-                )
-            part_dirs = sorted(
-                d
-                for d in os.listdir(src_dir)
-                if os.path.isdir(os.path.join(src_dir, d)) and "=" in d
-            )
-            if part_dirs:
-                total = 0
-                for d in part_dirs:
-                    col, _, value = d.partition("=")
-                    # basePath keeps the hive partition column in the
-                    # schema (Oracle DEPARTITION promotes partitions to
-                    # standalone tables with the FULL column set) while
-                    # still pruning the scan to this one leaf.
-                    sub = spark.read.option("basePath", src_dir).parquet(
-                        os.path.join(src_dir, d)
-                    )
-                    target = f"{plan.target_table}_{col}_{value}".lower()
-                    connector.write_table(
-                        sub,
-                        plan.target_schema,
-                        target,
-                        mode=plan.write_mode,
-                        truncate=plan.truncate,
-                        options=plan.writer_options,
-                    )
-                    total += 1
-                dumpset.log_event(
-                    "TABLE_IMPORT_DONE",
-                    table=plan.target_key,
-                    departitioned=total,
-                )
-                return TableResult(
-                    plan, ok=True, detail={"departitioned_tables": total}
-                )
-        reader = spark.read
-        if fmt in ("json", "csv"):
-            # text formats carry no types — restore the exported Spark
-            # schema from the manifest (export_table records it); without
-            # it JSON falls back to inference and CSV cannot be read at
-            # all (headerless), so CSV requires the manifest.
-            schema_json = None
-            if dumpset.exists():
-                tmeta = dumpset.read_manifest().tables.get(plan.source_key, {})
-                schema_json = tmeta.get("spark_schema")
-            if schema_json:
-                from pyspark.sql.types import StructType
-
-                reader = reader.schema(
-                    StructType.fromJson(_json.loads(schema_json))
-                )
-            elif fmt == "csv":
-                from .exceptions import FileError
-
-                raise FileError(
-                    f"CSV dump for {plan.source_key} has no recorded schema "
-                    "in the manifest; cannot type a headerless CSV read"
-                )
-            if fmt == "csv":
-                # multiLine: Spark's CSV writer quotes embedded newlines
-                # on export; without it the reader splits a quoted field
-                # across physical lines into null-padded garbage rows —
-                # silent corruption on any text corpus
-                reader = reader.option("header", "false").option(
-                    "multiLine", "true"
-                )
-        load_target: "str | list[str]" = src_dir
-        if config.as_of_version is not None:
-            # AS_OF_VERSION(n): restrict the scan to the files of export
-            # runs 1..n using the manifest's snapshot history — a pure
-            # file-list narrowing, so every downstream pushdown/prune
-            # behaves exactly as on a full read
-            from .exceptions import UsageError
-
-            tmeta = (
-                dumpset.read_manifest().tables.get(plan.source_key, {})
-                if dumpset.exists()
-                else {}
-            )
-            snaps = tmeta.get("snapshots")
-            if not snaps:
-                raise UsageError(
-                    f"AS_OF_VERSION: dump for {plan.source_key} has no "
-                    "snapshot history in the manifest (hive-partitioned "
-                    "dumps and pre-snapshot dumps are not versioned)"
-                )
-            latest = max(s["version"] for s in snaps)
-            if config.as_of_version > latest:
-                raise UsageError(
-                    f"AS_OF_VERSION({config.as_of_version}) beyond the "
-                    f"dump's latest version {latest}"
-                )
-            # History completeness check (round-9 advisor finding): the
-            # union of the snapshot file lists must account for every
-            # data file in the directory — a dump appended to before
-            # tracking, or compacted without a history rewrite, would
-            # otherwise time-travel to a silently partial table.
-            union = {f for s in snaps for f in s["files"]}
-            on_disk = {
-                n for n in os.listdir(src_dir) if n.startswith("part-")
-            }
-            if union != on_disk:
-                extra = sorted(on_disk - union)[:3]
-                stale = sorted(union - on_disk)[:3]
-                raise UsageError(
-                    f"AS_OF_VERSION: snapshot history for {plan.source_key} "
-                    "does not match the dump directory "
-                    f"(untracked files: {extra}, missing files: {stale}) — "
-                    "the history is stale; re-export or compact with "
-                    "history rewrite before time-traveling"
-                )
-            load_target = [
-                os.path.join(src_dir, f)
-                for s in snaps
-                if s["version"] <= config.as_of_version
-                for f in s["files"]
-            ]
-            if not load_target:
-                raise UsageError(
-                    f"AS_OF_VERSION({config.as_of_version}): no data files "
-                    f"recorded for {plan.source_key} at that version"
-                )
-        enc_meta = (
-            dumpset.read_manifest().tables.get(plan.source_key, {}).get("encryption")
-            if dumpset.exists()
-            else None
+    src_dir: str,
+    fmt: str,
+) -> TableResult | None:
+    """PARTITION_OPTIONS=DEPARTITION: one target table per hive
+    partition directory (reference directives.py:346-349); None for a
+    dump with no partition directories."""
+    if fmt != "parquet":
+        raise UsageError(
+            f"PARTITION_OPTIONS(DEPARTITION) requires a parquet "
+            f"dump; this dump is {fmt} (DUMP_FORMAT)"
         )
-        if enc_meta:
-            # encrypted dump: decrypting file-list reader (crypto.py) —
-            # a plain spark.read here would die on the Parquet crypto
-            # layer, so fail with the actionable message instead
-            from .crypto import read_encrypted_dump
-            from .exceptions import UsageError
-
-            password = plan.extra.get("encryption_password")
-            if not password:
-                raise UsageError(
-                    f"dump for {plan.source_key} is encrypted "
-                    f"(scope {enc_meta['scope']}); IMPORT requires "
-                    "ENCRYPTION_PASSWORD"
-                )
-            tmeta = dumpset.read_manifest().tables.get(plan.source_key, {})
-            if isinstance(load_target, list):
-                enc_files = load_target
-            else:
-                enc_files = [
-                    os.path.join(src_dir, n)
-                    for n in os.listdir(src_dir)
-                    if n.startswith("part-") and n.endswith(".parquet")
-                ]
-            # a QUERY predicate may reference columns outside the
-            # COLUMNS projection (the plain path filters before
-            # selecting), so only push the column prune into the
-            # parquet read when there is no predicate
-            df = read_encrypted_dump(
-                spark,
-                enc_files,
-                tmeta["spark_schema"],
-                password,
-                enc_meta["salt_hex"],
-                columns=plan.columns if not plan.predicate else None,
-            )
-        else:
-            df = reader.format(fmt).load(load_target)
-        if plan.predicate:
-            df = df.filter(plan.predicate)
-        if plan.columns and (enc_meta is None or plan.predicate):
-            df = df.select(*plan.columns)
-        df = _write_import_df(spark, connector, dumpset, plan, config, df)
-        if enc_meta:
-            # sealed footers (ALL/METADATA_ONLY) need the key for the
-            # zero-scan accounting; the plain counter would fall back to
-            # a doomed spark.read on the encrypted files
-            from .crypto import count_encrypted_dump
-
-            rows, size, nfiles = count_encrypted_dump(
-                src_dir,
-                plan.extra["encryption_password"],
-                enc_meta["salt_hex"],
-            )
-        else:
-            rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
-        if config.validate_table_data:
-            # VALIDATE_TBL_DATA (reference DATA_OPTIONS bit,
-            # directives.py:227-238): post-write row-count verify. A
-            # QUERY predicate legitimately imports FEWER rows than the
-            # dump holds — verify against the filtered frame's count in
-            # that case, not the dump total (which would fail every
-            # correct filtered import).
-            back = connector.read_table(
-                spark, plan.target_schema, plan.target_table
-            )
-            written = back.count()
-            expect = rows
-            if plan.predicate is not None:
-                expect = df.count()
-            if (
-                plan.write_mode not in ("append", "merge")
-                and expect is not None
-                and written != expect
-            ):
-                raise RuntimeError(
-                    f"VALIDATE_TBL_DATA: wrote {written} rows, expected {expect}"
-                )
-        # START_JOB parity (restartable dump-set IMPORT): record the
-        # TARGET's post-load fingerprint alongside the dump row count so
-        # Job.restart() can digest-verify and skip this table wholesale —
-        # the same completeness proof transfer_table records at
-        # TABLE_TRANSFER_DONE (on the import side there is no NEW dump
-        # file to checksum; the master-table analog must describe the
-        # target). One extra count+xxhash64 aggregate over the
-        # just-written table; at 100 TB that is the price of resuming a
-        # stopped multi-hour import instead of re-running it.
-        t_rows, t_digest = table_fingerprint(
-            connector.read_table(
-                spark, plan.target_schema, plan.target_table
-            )
+    part_dirs = sorted(
+        d
+        for d in os.listdir(src_dir)
+        if os.path.isdir(os.path.join(src_dir, d)) and "=" in d
+    )
+    if not part_dirs:
+        return None
+    for d in part_dirs:
+        col, _, value = d.partition("=")
+        # basePath keeps the hive partition column in the
+        # schema (Oracle DEPARTITION promotes partitions to
+        # standalone tables with the FULL column set) while
+        # still pruning the scan to this one leaf.
+        sub = spark.read.option("basePath", src_dir).parquet(
+            os.path.join(src_dir, d)
         )
+        connector.write_table(
+            sub,
+            plan.target_schema,
+            f"{plan.target_table}_{col}_{value}".lower(),
+            mode=plan.write_mode,
+            truncate=plan.truncate,
+            options=plan.writer_options,
+        )
+    dumpset.log_event(
+        "TABLE_IMPORT_DONE",
+        table=plan.target_key,
+        departitioned=len(part_dirs),
+    )
+    return TableResult(
+        plan, ok=True, detail={"departitioned_tables": len(part_dirs)}
+    )
+
+
+# -- account ---------------------------------------------------------------
+
+
+def _account_export(
+    spark: SparkSession,
+    dumpset: DumpSet,
+    plan: TablePlan,
+    schema,
+    out_dir: str,
+    pre_files: set,
+    run_rows: int,
+    n_before_dedup: int | None,
+    enc_detail: dict[str, Any] | None,
+) -> dict[str, Any]:
+    """Account stage (EXPORT): the table's manifest detail. Manifest
+    fields stay cumulative (they describe the dump set); the caller's
+    TABLE_EXPORT_DONE event reports this run's delta so CDC
+    status/metrics aren't inflated by prior increments."""
+    detail: dict[str, Any] = {
+        "spark_schema": schema.json(),
+        "codec": plan.codec,
+        "dump_format": plan.dump_format,
+    }
+    if enc_detail:
+        detail["encryption"] = enc_detail
+    if plan.filesize_bytes:
+        detail["filesize"] = {
+            "target_bytes": plan.filesize_bytes,
+            "max_file_bytes": _max_data_file_bytes(out_dir),
+        }
+    if plan.dedup_keep_best:
+        key, score, tie = plan.dedup_keep_best
+        # best-effort on live (non-snapshot) sources — see the count
+        # note in export_table; never negative in the manifest
+        rows_dropped = max(0, int(n_before_dedup - run_rows))
+        detail["dedup_keep_best"] = {
+            "key": key,
+            "score": score,
+            "tiebreak": tie,
+            "rows_dropped": rows_dropped,
+        }
         dumpset.log_event(
-            "TABLE_IMPORT_DONE",
-            table=plan.target_key,
-            rows=rows,
-            target_rows=t_rows,
-            target_digest=t_digest,
+            "TABLE_EXPORT_DEDUPED",
+            table=plan.source_key,
+            key=key,
+            rows_dropped=rows_dropped,
         )
-        return TableResult(
-            plan,
-            ok=True,
-            rows=rows,
-            bytes=size,
-            files=nfiles,
-            detail={"target_rows": t_rows, "target_digest": t_digest},
+    if plan.source_type:
+        # VIEWS_AS_TABLES provenance: the dump holds materialized
+        # rows; the importer treats it as an ordinary table
+        detail["source_type"] = plan.source_type
+    if not plan.partition_by:
+        # snapshot tracking (time travel): remember which data files
+        # each export run added, so IMPORT ... AS_OF_VERSION(n) can read
+        # the dump as of any earlier run by file list alone — the
+        # Delta/Iceberg snapshot idea expressed with nothing but the
+        # manifest. Flat layouts only (a hive-partitioned dump nests its
+        # files per leaf; version it by partition instead). An overwrite
+        # replaces every file, so its history resets.
+        prev = list(plan.snapshots or []) if plan.incremental_append else []
+        if plan.incremental_append and not prev and pre_files:
+            # Snapshot history is starting MID-DUMP (the existing
+            # files were written before tracking, e.g. a pre-snapshot
+            # manifest). They must belong to a version or
+            # AS_OF_VERSION at ANY version — latest included — would
+            # silently drop the whole base table (round-9 advisor
+            # finding): seed them as version 1 and let this run's
+            # delta become version 2.
+            prev = [{"version": 1, "files": sorted(pre_files)}]
+        added = sorted(_part_names(out_dir) - pre_files)
+        detail["snapshots"] = prev + [{"version": len(prev) + 1, "files": added}]
+    if plan.incremental_append:
+        detail["rows_this_run"] = run_rows
+    if plan.incremental_column is not None:
+        # new watermark from the dump itself (no extra source scan);
+        # recorded schema keeps text formats typed on the read-back,
+        # and CSV's multiLine read keeps a split quoted row from
+        # mis-parsing a fragment into the watermark column (which
+        # would silently skip rows next run)
+        wm_row = (
+            _dump_reader(spark, plan.dump_format, schema)
+            .load(out_dir)
+            .agg(F.max(plan.incremental_column))
+            .collect()
+        )[0]
+        detail["incremental_column"] = plan.incremental_column
+        detail["watermark"] = wm_row[0]
+    if plan.checksum_algorithm:
+        # CHECKSUM (Oracle DP 21c): per-file digests, executor-side
+        # fan-out — recorded over the WHOLE table dir so incremental
+        # appends refresh the full integrity map
+        digests = dumpset.file_digests(spark, out_dir, plan.checksum_algorithm)
+        detail["checksums"] = {
+            "algorithm": plan.checksum_algorithm,
+            "files": digests,
+        }
+        dumpset.log_event(
+            "TABLE_CHECKSUM_RECORDED",
+            table=plan.source_key,
+            algorithm=plan.checksum_algorithm,
+            n_files=len(digests),
         )
-    except Exception as e:
-        dumpset.log_event("TABLE_IMPORT_ERROR", table=plan.target_key, error=str(e))
-        if config.skip_constraint_errors:
-            # SKIP_CONST_ERR: continue-on-error, count it
-            # (reference DATA_OPTIONS, directives.py:227-238)
-            return TableResult(plan, ok=False, error=str(e))
-        return TableResult(plan, ok=False, error=f"{e}\n{traceback.format_exc()}")
+    return detail
 
 
 def _hashable_expr(col, dt):
@@ -1209,12 +804,9 @@ def _hashable_expr(col, dt):
     every map — at any nesting depth — becomes its entry array sorted by
     key: unique keys make the sort total, so equal maps always produce
     equal arrays. Structs/arrays recurse; everything else passes through."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
     if isinstance(dt, MapType):
         entries = F.map_entries(col)
-        if _dtype_has_map(dt.valueType):
+        if dtype_has_map(dt.valueType):
             # canonicalize nested maps BEFORE sorting — maps are not
             # orderable, so the sort must see only hashable structs
             entries = F.transform(
@@ -1226,7 +818,7 @@ def _hashable_expr(col, dt):
             )
         return F.array_sort(entries)
     if isinstance(dt, StructType):
-        if not _dtype_has_map(dt):
+        if not dtype_has_map(dt):
             return col
         return F.struct(
             *(
@@ -1235,24 +827,12 @@ def _hashable_expr(col, dt):
             )
         )
     if isinstance(dt, ArrayType):
-        if not _dtype_has_map(dt.elementType):
+        if not dtype_has_map(dt.elementType):
             return col
         return F.transform(
             col, lambda e: _hashable_expr(e, dt.elementType)
         )
     return col
-
-
-def _dtype_has_map(dt) -> bool:
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    if isinstance(dt, MapType):
-        return True
-    if isinstance(dt, StructType):
-        return any(_dtype_has_map(f.dataType) for f in dt.fields)
-    if isinstance(dt, ArrayType):
-        return _dtype_has_map(dt.elementType)
-    return False
 
 
 def table_fingerprint(df) -> tuple[int, str]:
@@ -1276,75 +856,225 @@ def table_fingerprint(df) -> tuple[int, str]:
     return int(row["n"]), str(0 if d is None else int(d))
 
 
-def transfer_table(
+def _fingerprint_done(
     spark: SparkSession,
-    src_connector: Connector,
-    tgt_connector: Connector,
+    connector: Connector,
+    dumpset: DumpSet,
+    plan: TablePlan,
+    operation: str,
+    rows: int | None = None,
+) -> tuple[int, str]:
+    """Account tail shared by IMPORT and TRANSFER (START_JOB parity):
+    record the TARGET's post-load fingerprint in TABLE_<op>_DONE so
+    Job.restart() can digest-verify and skip this table wholesale (there
+    is no NEW dump file to checksum; the master-table analog must
+    describe the target). One extra count+xxhash64 aggregate over the
+    just-written table; at 100 TB that is the price of resuming a
+    stopped multi-hour import instead of re-running it. ``rows`` is the
+    dump's row count on IMPORT; TRANSFER reports the target's."""
+    t_rows, t_digest = table_fingerprint(
+        connector.read_table(spark, plan.target_schema, plan.target_table)
+    )
+    counts = {"rows": t_rows} if rows is None else {
+        "rows": rows, "target_rows": t_rows,
+    }
+    dumpset.log_event(
+        f"TABLE_{operation}_DONE",
+        table=plan.target_key,
+        **counts,
+        target_digest=t_digest,
+    )
+    return t_rows, t_digest
+
+
+def _skip(dumpset: DumpSet, plan: TablePlan, operation: str, why: str) -> TableResult:
+    """A table that moves no rows: TABLE_<op>_<why>, then its DONE."""
+    dumpset.log_event(f"TABLE_{operation}_{why}", table=plan.target_key)
+    dumpset.log_event(f"TABLE_{operation}_DONE", table=plan.target_key, rows=0)
+    return TableResult(plan, ok=True, rows=0, skipped=True)
+
+
+# -- per-table chains ------------------------------------------------------
+
+
+def export_table(
+    spark: SparkSession,
+    connector: Connector,
+    dumpset: DumpSet,
+    plan: TablePlan,
+) -> TableResult:
+    """EXPORT one table: read → row transforms → layout → dump sink →
+    account."""
+    if not plan.data_included:
+        # metadata-only export: record schema, move no rows
+        df = connector.read_table(
+            spark, plan.schema, plan.table, columns=plan.columns
+        )
+        dumpset.log_event(
+            "TABLE_EXPORT_METADATA_ONLY",
+            table=plan.source_key,
+            schema_json=df.schema.json(),
+        )
+        # a worker that never logs _DONE stays EXECUTING in
+        # status_from_events forever (it matches only the
+        # _START/_DONE/_ERROR suffixes)
+        dumpset.log_event(
+            "TABLE_EXPORT_DONE", table=plan.source_key, rows=0, bytes=0
+        )
+        return TableResult(
+            plan, ok=True, rows=0, bytes=0, files=0,
+            detail={"spark_schema": df.schema.json(), "metadata_only": True},
+        )
+    out_dir = dumpset.table_dir(plan.schema, plan.table)
+    df, pre_dedup = _transform_rows(
+        _read_source(spark, connector, dumpset, plan), plan
+    )
+    # The pre-dedup count is a column-pruned count-star so the recorded
+    # drop is attributable. It is a SECOND scan of the same plan: exact
+    # for snapshot-stable sources (parquet, as-of reads); on a live RDBMS
+    # source rows can change between the count and the write, so the
+    # manifest rows_dropped is best-effort there.
+    n_before_dedup = None if pre_dedup is None else pre_dedup.count()
+    df = _layout(df, plan)
+    pre_files = _part_names(out_dir) if not plan.partition_by else set()
+    # Snapshot footer counts before an append so TABLE_EXPORT_DONE
+    # reports THIS run's delta, not the cumulative dump (CDC runs).
+    prev_rows = prev_size = 0
+    if plan.incremental_append and os.path.isdir(out_dir):
+        prev_rows, prev_size, _ = _count_dump_rows(
+            out_dir, plan.dump_format, spark
+        )
+    rows, size, nfiles, enc_detail = _write_dump(
+        spark, dumpset, plan, df, out_dir
+    )
+    detail = _account_export(
+        spark, dumpset, plan, df.schema, out_dir, pre_files,
+        rows - prev_rows, n_before_dedup, enc_detail,
+    )
+    dumpset.log_event(
+        "TABLE_EXPORT_DONE",
+        table=plan.source_key,
+        rows=rows - prev_rows,
+        bytes=size - prev_size,
+        cumulative_rows=rows,
+    )
+    return TableResult(
+        plan, ok=True, rows=rows, bytes=size, files=nfiles, detail=detail
+    )
+
+
+def import_table(
+    spark: SparkSession,
+    connector: Connector,
     dumpset: DumpSet,
     plan: TablePlan,
     config: PlanConfig,
 ) -> TableResult:
-    """NETWORK_LINK: one table read from the SOURCE connector and piped
-    straight into the import write half — no dump file ever touches disk
+    """IMPORT one table: dump read → import sink → account."""
+    src_dir = dumpset.table_dir(plan.schema, plan.table)
+    if not os.path.isdir(src_dir):
+        # metadata-only entry in the dump set — nothing to load
+        return _skip(dumpset, plan, "IMPORT", "SKIP_NO_DATA")
+    if plan.write_mode == "ignore" and connector.table_exists(
+        plan.target_schema, plan.target_table
+    ):
+        return _skip(dumpset, plan, "IMPORT", "SKIP_EXISTS")
+    tmeta = _table_meta(dumpset, plan)
+    if config.verify_checksum or config.verify_only:
+        _verify_dump_checksums(spark, dumpset, plan, src_dir, tmeta)
+    if config.verify_only:
+        # VERIFY_ONLY (Oracle DP 21c): integrity audit of the dump,
+        # zero rows loaded — the target catalog is untouched
+        return _skip(dumpset, plan, "IMPORT", "VERIFY_ONLY")
+    fmt = _sniff_dump_format(src_dir)
+    # MERGE/NONE partition options fall through — Spark unions
+    # partition dirs natively.
+    if config.partition_options == "DEPARTITION":
+        res = _departition(spark, connector, dumpset, plan, src_dir, fmt)
+        if res is not None:
+            return res
+    df = _read_dump(spark, plan, config, src_dir, fmt, tmeta)
+    df = _write_import_df(spark, connector, dumpset, plan, config, df)
+    enc = tmeta.get("encryption")
+    if enc:
+        # sealed footers (ALL/METADATA_ONLY) need the key for the
+        # zero-scan accounting; the plain counter would fall back to
+        # a doomed spark.read on the encrypted files
+        rows, size, nfiles = count_encrypted_dump(
+            src_dir, plan.encryption_password, enc["salt_hex"]
+        )
+    else:
+        rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
+    if config.validate_table_data:
+        # VALIDATE_TBL_DATA (reference DATA_OPTIONS bit,
+        # directives.py:227-238): post-write row-count verify. A
+        # QUERY predicate legitimately imports FEWER rows than the
+        # dump holds — verify against the filtered frame's count in
+        # that case, not the dump total (which would fail every
+        # correct filtered import).
+        written = connector.read_table(
+            spark, plan.target_schema, plan.target_table
+        ).count()
+        expect = df.count() if plan.predicate is not None else rows
+        if (
+            plan.write_mode not in ("append", "merge")
+            and expect is not None
+            and written != expect
+        ):
+            raise RuntimeError(
+                f"VALIDATE_TBL_DATA: wrote {written} rows, expected {expect}"
+            )
+    t_rows, t_digest = _fingerprint_done(
+        spark, connector, dumpset, plan, "IMPORT", rows=rows
+    )
+    return TableResult(
+        plan,
+        ok=True,
+        rows=rows,
+        bytes=size,
+        files=nfiles,
+        detail={"target_rows": t_rows, "target_digest": t_digest},
+    )
+
+
+def transfer_table(
+    spark: SparkSession,
+    connector: Connector,
+    dumpset: DumpSet,
+    plan: TablePlan,
+    config: PlanConfig,
+) -> TableResult:
+    """NETWORK_LINK: one table read from the SOURCE connector
+    (``plan.src_connector``) and piped into the target ``connector``
+    by the import write half — no dump file ever touches disk
     (Oracle's impdp NETWORK_LINK contract). The dump set participates
     only as the event log / manifest. Source-side semantics match an
-    export scan (as-of, pushed predicate/columns, engine-side SAMPLE);
-    target-side semantics match an import (_write_import_df: exists
-    action, MERGE family, schema evolution). At 100 TB this halves the
-    I/O of a migrate (one read + one write instead of read + dump write
-    + dump read + write). Restartability: each completed table records a
+    export scan (as-of, pushed predicate/columns, and the same row
+    transforms: SAMPLE, DEDUP_KEEP_BEST, REMAP_DATA); target-side
+    semantics match an import (_write_import_df: exists action, MERGE
+    family, schema evolution). At 100 TB this halves the I/O of a
+    migrate (one read + one write instead of read + dump write + dump
+    read + write). Restartability: each completed table records a
     target-side fingerprint (table_fingerprint) in the manifest, so a
     stopped multi-hour transfer resumes via Job.restart() — verified
     targets are skipped, dropped/tampered ones re-transferred."""
-    dumpset.log_event("TABLE_TRANSFER_START", table=plan.source_key)
-    try:
-        if plan.write_mode == "ignore" and tgt_connector.table_exists(
-            plan.target_schema, plan.target_table
-        ):
-            dumpset.log_event(
-                "TABLE_TRANSFER_SKIP_EXISTS", table=plan.target_key
-            )
-            dumpset.log_event(
-                "TABLE_TRANSFER_DONE", table=plan.target_key, rows=0
-            )
-            return TableResult(plan, ok=True, rows=0, skipped=True)
-        df = _read_source(spark, src_connector, dumpset, plan)
-        if plan.sample:
-            from .functions.text import hash64
-            from pyspark.sql import functions as F
-
-            ppm, col = plan.sample
-            df = df.filter(
-                F.col(col).isNotNull()
-                & (hash64(F.col(col).cast("string")) % 1_000_000 < ppm)
-            )
-        if plan.remap_data:
-            from .functions.remap_data import apply_remaps
-
-            df = apply_remaps(df, plan.remap_data)
-        df = _write_import_df(spark, tgt_connector, dumpset, plan, config, df)
-        rows, digest = table_fingerprint(
-            tgt_connector.read_table(
-                spark, plan.target_schema, plan.target_table
-            )
-        )
-        dumpset.log_event(
-            "TABLE_TRANSFER_DONE",
-            table=plan.target_key,
-            rows=rows,
-            target_digest=digest,
-        )
-        return TableResult(
-            plan,
-            ok=True,
-            rows=rows,
-            detail={"network_link": True, "target_digest": digest},
-        )
-    except Exception as e:
-        dumpset.log_event(
-            "TABLE_TRANSFER_ERROR", table=plan.target_key, error=str(e)
-        )
-        return TableResult(plan, ok=False, error=f"{e}\n{traceback.format_exc()}")
+    if plan.write_mode == "ignore" and connector.table_exists(
+        plan.target_schema, plan.target_table
+    ):
+        return _skip(dumpset, plan, "TRANSFER", "SKIP_EXISTS")
+    df, _ = _transform_rows(
+        _read_source(spark, plan.src_connector, dumpset, plan), plan
+    )
+    _write_import_df(spark, connector, dumpset, plan, config, df)
+    rows, digest = _fingerprint_done(
+        spark, connector, dumpset, plan, "TRANSFER"
+    )
+    return TableResult(
+        plan,
+        ok=True,
+        rows=rows,
+        detail={"network_link": True, "target_digest": digest},
+    )
 
 
 def run_plans(
@@ -1376,11 +1106,11 @@ def run_plans(
     stop_logged = threading.Lock()
     stop_seen = [False]
 
-    def _boundary(p: TablePlan) -> TableResult | None:
-        """Table-boundary stop check: runs at each plan's start in both
-        the sequential and the thread-pool path."""
+    def _one(p: TablePlan) -> TableResult:
+        """Table-boundary stop check, then the table: runs at each plan's
+        start in both the sequential and the thread-pool path."""
         if stop_event is None or not stop_event.is_set():
-            return None
+            return _run_one(spark, connector, dumpset, p, config, operation)
         with stop_logged:
             if not stop_seen[0]:
                 stop_seen[0] = True
@@ -1390,37 +1120,24 @@ def run_plans(
         )
         return TableResult(p, ok=True, skipped=True, detail={"not_run": True})
 
-    def _one(p: TablePlan) -> TableResult:
-        return _boundary(p) or _run_one(
-            spark, connector, dumpset, p, config, operation
-        )
-
     # Imports execute in topo waves (parents before children — the FK
     # ordering Oracle provides implicitly); exports have a single wave.
     waves: dict[int, list[TablePlan]] = {}
     for p in plans:
-        waves.setdefault(p.extra.get("topo_level", 0), []).append(p)
+        waves.setdefault(p.topo_level, []).append(p)
     for level in sorted(waves):
         wave = waves[level]
         if workers == 1 or len(wave) == 1:
-            for p in wave:
-                results.append(_one(p))
+            results.extend(_one(p) for p in wave)
         else:
             with cf.ThreadPoolExecutor(max_workers=workers) as pool:
-                futs = [pool.submit(_one, p) for p in wave]
-                for f in futs:
-                    results.append(f.result())
-    errors = sum(
-        1 for r in results if not r.ok and not r.detail.get("not_run")
-    )
+                results.extend(pool.map(_one, wave))
     if stop_seen[0]:
         state = JobState.STOPPED
+    elif any(not r.ok and not r.detail.get("not_run") for r in results):
+        state = JobState.COMPLETED_WITH_ERRORS
     else:
-        state = (
-            JobState.COMPLETED
-            if errors == 0
-            else JobState.COMPLETED_WITH_ERRORS
-        )
+        state = JobState.COMPLETED
     return EngineResult(state=state, tables=results)
 
 
@@ -1432,11 +1149,27 @@ def _run_one(
     config: PlanConfig,
     operation: str,
 ) -> TableResult:
-    if operation == "EXPORT":
-        return export_table(spark, connector, dumpset, plan)
-    if operation == "TRANSFER":
-        return transfer_table(
-            spark, plan.extra["src_connector"], connector, dumpset, plan,
-            config,
+    """One table under the TABLE_<op>_START / TABLE_<op>_ERROR wrapper.
+    The per-table functions are looked up in module globals on every
+    call, so a wrapper patched over them sees each table."""
+    dumpset.log_event(
+        f"TABLE_{operation}_START",
+        table=plan.target_key if operation == "IMPORT" else plan.source_key,
+    )
+    try:
+        if operation == "EXPORT":
+            return export_table(spark, connector, dumpset, plan)
+        if operation == "TRANSFER":
+            return transfer_table(spark, connector, dumpset, plan, config)
+        return import_table(spark, connector, dumpset, plan, config)
+    except Exception as e:
+        dumpset.log_event(
+            f"TABLE_{operation}_ERROR",
+            table=plan.source_key if operation == "EXPORT" else plan.target_key,
+            error=str(e),
         )
-    return import_table(spark, connector, dumpset, plan, config)
+        if operation == "IMPORT" and config.skip_constraint_errors:
+            # SKIP_CONST_ERR: continue-on-error, count it
+            # (reference DATA_OPTIONS, directives.py:227-238)
+            return TableResult(plan, ok=False, error=str(e))
+        return TableResult(plan, ok=False, error=f"{e}\n{traceback.format_exc()}")

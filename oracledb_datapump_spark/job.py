@@ -37,10 +37,11 @@ from .directives import (
     compile_directives,
 )
 from .dumpset import DumpSet
-from .engine import EngineResult, run_plans
+from .engine import EngineResult, data_file_paths, run_plans
 from .exceptions import JobNotFound, UsageError
 from .planner import (
     estimate_plan,
+    for_table,
     plan_export,
     plan_import,
     plan_network_transfer,
@@ -195,38 +196,7 @@ class Job:
     def _run_registered(
         self, wait: bool, spark: SparkSession, config: Any
     ) -> JobStatusInfo:
-        engine_op = self.operation.value
-        if self.operation == Operation.EXPORT:
-            plans = plan_export(self.connector, self.operation, self.mode, config)
-        elif config.network_link:
-            # NETWORK_LINK (public Oracle DP parameter, IMPORT side):
-            # plan against the SOURCE catalog, pipe straight to the
-            # target — no dump set is materialized; this dumpfiles root
-            # holds only the event log and manifest.
-            if config.verify_checksum or config.verify_only:
-                raise UsageError(
-                    "VERIFY_CHECKSUM/VERIFY_ONLY audit a dump set; a "
-                    "NETWORK_LINK transfer produces none"
-                )
-            if config.as_of_version is not None:
-                raise UsageError(
-                    "AS_OF_VERSION reads dump snapshot history; a "
-                    "NETWORK_LINK transfer has no dump — use "
-                    "FLASHBACK_SCN/FLASHBACK_TIME against the source"
-                )
-            if config.encryption:
-                raise UsageError(
-                    "ENCRYPTION applies to dump files; a NETWORK_LINK "
-                    "transfer produces none"
-                )
-            src = resolve_connector(config.network_link)
-            plans = plan_network_transfer(src, self.mode, config)
-            for p in plans:
-                p.extra["src_connector"] = src
-            engine_op = "TRANSFER"
-        else:
-            plans = plan_import(self.dumpset, config)
-        self._thread_plan_extras(plans, config)
+        plans, engine_op = self._plan(config)
         if (
             self.operation == Operation.EXPORT
             and not config.reuse_dumpfiles
@@ -241,7 +211,7 @@ class Job:
             import os as _os
 
             for p in plans:
-                if p.extra.get("incremental_column") is not None:
+                if p.incremental_column is not None:
                     continue
                 tdir = self.dumpset.table_dir(p.schema, p.table)
                 if _os.path.isdir(tdir) and any(
@@ -320,12 +290,9 @@ class Job:
         )
 
         if config.estimate_only:
-            est_connector = (
-                plans[0].extra["src_connector"]
-                if engine_op == "TRANSFER"
-                else self.connector
+            self._estimates = estimate_plan(
+                plans[0].src_connector or self.connector, plans, spark
             )
-            self._estimates = estimate_plan(est_connector, plans, spark)
             self.dumpset.log_event("JOB_ESTIMATE", estimates=self._estimates)
             self.dumpset.log_event("JOB_DONE", state=JobState.COMPLETED.value)
             self._set_state(JobState.COMPLETED)
@@ -365,27 +332,7 @@ class Job:
             )
 
             if self.operation == Operation.EXPORT or engine_op == "TRANSFER":
-                # enrich manifest with per-table outcomes; not-run tables
-                # (cooperative STOP before their boundary) stay out — the
-                # manifest describes what the dump set actually holds,
-                # and restart() re-plans the remainder from directives
-                for r in result.tables:
-                    if r.detail.get("not_run"):
-                        continue
-                    meta.tables[r.plan.source_key] = {
-                        "rows": None if not r.ok else r.rows,
-                        "row_count": r.rows,
-                        "bytes": r.bytes,
-                        "files": r.files,
-                        "ok": r.ok,
-                        **r.detail,
-                    }
-                meta.dumpfiles = [
-                    p.replace(self.dumpset.root + "/", "")
-                    for p in self.dumpset.dumpfiles()
-                ]
-                if config.include_metadata:
-                    self.dumpset.write_manifest(meta)
+                self._record_tables(meta, result, config)
 
             self.dumpset.log_event(
                 "JOB_DONE",
@@ -433,55 +380,83 @@ class Job:
         t.start()
         return self.get_status()
 
+    def _plan(self, config: PlanConfig) -> tuple[list, str]:
+        """Plan the job's tables — the one planning routine of run() and
+        restart() — and return them with the engine operation: EXPORT,
+        IMPORT, or TRANSFER for an impdp-side NETWORK_LINK."""
+        if self.operation == Operation.EXPORT:
+            plans = plan_export(self.connector, self.operation, self.mode, config)
+            engine_op = "EXPORT"
+        elif config.network_link:
+            # NETWORK_LINK (public Oracle DP parameter, IMPORT side):
+            # plan against the SOURCE catalog, pipe straight to the
+            # target — no dump set is materialized; this dumpfiles root
+            # holds only the event log and manifest.
+            if config.verify_checksum or config.verify_only:
+                raise UsageError(
+                    "VERIFY_CHECKSUM/VERIFY_ONLY audit a dump set; a "
+                    "NETWORK_LINK transfer produces none"
+                )
+            if config.as_of_version is not None:
+                raise UsageError(
+                    "AS_OF_VERSION reads dump snapshot history; a "
+                    "NETWORK_LINK transfer has no dump — use "
+                    "FLASHBACK_SCN/FLASHBACK_TIME against the source"
+                )
+            if config.encryption:
+                raise UsageError(
+                    "ENCRYPTION applies to dump files; a NETWORK_LINK "
+                    "transfer produces none"
+                )
+            plans = plan_network_transfer(
+                resolve_connector(config.network_link), self.mode, config
+            )
+            engine_op = "TRANSFER"
+        else:
+            plans = plan_import(self.dumpset, config)
+            engine_op = "IMPORT"
+        self._thread_plan_extras(plans, config)
+        return plans, engine_op
+
     def _thread_plan_extras(self, plans: list, config: Any) -> None:
-        """Thread directive-derived per-plan extras (shared by run and
-        restart, which re-plans from the manifest's directive list).
+        """Thread the job-level directive fields into each plan and reject
+        every invalid directive combination, so a bad job fails here,
+        before any I/O, and the engine never re-checks one.
 
         ENCRYPTION: validate the directive family once at plan time
         (wallet modes and DDL column scopes fail loudly here), then
         thread the normalized contract into each plan — the password
-        rides plan.extra in memory only and never reaches the manifest
-        (engine records scope/algorithm/salt, not the secret).
+        rides the plan in memory only and never reaches the manifest
+        (engine records scope/algorithm/salt, not the secret). The
+        encrypted writer writes flat Parquet and cannot append, so it
+        refuses other DUMP_FORMATs, EXPORT_PARTITION_BY and
+        INCREMENTAL_COLUMN.
         CHECKSUM (Oracle DP 21c): thread the algorithm into each export
         plan; the engine records per-file digests post-write.
         INCREMENTAL_COLUMN: thread each table's recorded watermark from
         the prior manifest so the engine exports only new rows, appended.
         """
+        export = self.operation == Operation.EXPORT
+        enc = {}
         if config.encryption:
             from .crypto import validate_encryption
 
             enc = validate_encryption(config.encryption)
-            if enc and self.operation == Operation.EXPORT:
-                for p in plans:
-                    p.extra["encryption"] = enc
-            elif enc:
-                for p in plans:
-                    p.extra["encryption_password"] = enc["password"]
-        if config.checksum and self.operation == Operation.EXPORT:
-            for p in plans:
-                p.extra["checksum_algorithm"] = config.checksum_algorithm
-        if config.filesize and self.operation == Operation.EXPORT:
-            if config.encryption:
-                # the encrypted writer owns its file layout (one sealed
-                # file per mapInPandas partition); a records-per-file cap
-                # on top would silently not be honored
-                raise UsageError(
-                    "FILESIZE cannot be combined with ENCRYPTION: the "
-                    "encrypted writer controls its own file layout"
-                )
-            for p in plans:
-                p.extra["filesize_bytes"] = config.filesize
-        if (
-            config.table_dedup_keep_best
-            and config.incremental_columns
-            and self.operation == Operation.EXPORT
-        ):
+        if config.filesize and export and config.encryption:
+            # the encrypted writer owns its file layout (one sealed
+            # file per mapInPandas partition); a records-per-file cap
+            # on top would silently not be honored
+            raise UsageError(
+                "FILESIZE cannot be combined with ENCRYPTION: the "
+                "encrypted writer controls its own file layout"
+            )
+        if config.table_dedup_keep_best and config.incremental_columns and export:
             # DEDUP_KEEP_BEST promises exactly one row per key in the
             # exported dump; an incremental append runs the keep-best
             # window only over the post-watermark slice, so a key already
             # dumped in a prior increment could gain a second row. Refuse
             # the composition loudly (same posture as the
-            # ENCRYPTION×INCREMENTAL guard in engine.export_table).
+            # ENCRYPTION×INCREMENTAL_COLUMN rule below).
             raise UsageError(
                 "DEDUP_KEEP_BEST cannot be combined with "
                 "INCREMENTAL_COLUMN: the keep-best window sees only the "
@@ -489,23 +464,68 @@ class Job:
                 "duplicate keys already in the dump and break the "
                 "one-row-per-key contract"
             )
-        if config.incremental_columns and self.operation == Operation.EXPORT:
-            prior = self.dumpset.read_manifest().tables if self.dumpset.exists() else {}
-            for p in plans:
-                col = config.incremental_columns.get(
-                    p.table, config.incremental_columns.get("*")
+        prior = {}
+        if config.incremental_columns and export and self.dumpset.exists():
+            prior = self.dumpset.read_manifest().tables
+        for p in plans:
+            if not export:
+                p.encryption_password = enc.get("password")
+                continue
+            p.encryption = enc or None
+            if config.checksum:
+                p.checksum_algorithm = config.checksum_algorithm
+            p.filesize_bytes = config.filesize
+            col = for_table(config.incremental_columns, p.table)
+            if col:
+                p.incremental_column = col
+                p.watermark = prior.get(p.source_key, {}).get("watermark")
+                # carry the snapshot history forward so the append
+                # run's manifest keeps every prior version readable
+                # via AS_OF_VERSION
+                p.snapshots = prior.get(p.source_key, {}).get("snapshots")
+            if not (enc and p.data_included):
+                continue
+            if p.dump_format != "parquet":
+                raise UsageError(
+                    "ENCRYPTION requires a parquet dump (Parquet modular "
+                    f"encryption); this dump is {p.dump_format} (DUMP_FORMAT)"
                 )
-                if col:
-                    p.extra["incremental_column"] = col
-                    p.extra["watermark"] = prior.get(p.source_key, {}).get(
-                        "watermark"
-                    )
-                    # carry the snapshot history forward so the append
-                    # run's manifest keeps every prior version readable
-                    # via AS_OF_VERSION
-                    p.extra["snapshots"] = prior.get(p.source_key, {}).get(
-                        "snapshots"
-                    )
+            if p.partition_by:
+                raise UsageError(
+                    "ENCRYPTION cannot be combined with "
+                    "EXPORT_PARTITION_BY (hive layouts nest files per "
+                    "leaf; the encrypted writer is flat-layout only)"
+                )
+            if col:
+                raise UsageError(
+                    "ENCRYPTION cannot be combined with "
+                    "INCREMENTAL_COLUMN (the watermark read-back would "
+                    "need the password at every later export)"
+                )
+
+    def _record_tables(self, meta: JobMetaData, result: EngineResult, config) -> None:
+        """Enrich the manifest with per-table outcomes and write it.
+        Not-run tables (cooperative STOP before their boundary) stay out
+        — the manifest describes what the dump set actually holds, and
+        restart() re-plans the remainder from directives; a resumed run
+        merges into the existing entries, never rebuilds them."""
+        for r in result.tables:
+            if r.detail.get("not_run"):
+                continue
+            meta.tables[r.plan.source_key] = {
+                "rows": None if not r.ok else r.rows,
+                "row_count": r.rows,
+                "bytes": r.bytes,
+                "files": r.files,
+                "ok": r.ok,
+                **r.detail,
+            }
+        meta.dumpfiles = [
+            p.replace(self.dumpset.root + "/", "")
+            for p in self.dumpset.dumpfiles()
+        ]
+        if config.include_metadata:
+            self.dumpset.write_manifest(meta)
 
     def _capture_constraints(self, schemas: list[str]) -> dict[str, list[str]]:
         """FK adjacency per schema (connector introspection) → manifest, so
@@ -827,7 +847,6 @@ class Job:
                 "TABLE_EXISTS_ACTION('SKIP') for resume-equivalent "
                 "semantics"
             )
-        src = None
         if is_import:
             if self.connection is None:
                 raise UsageError(
@@ -845,7 +864,6 @@ class Job:
                     "restart a NETWORK_LINK transfer"
                 )
             self.connector = resolve_connector(self.connection)
-            src = resolve_connector(config.network_link)
         elif config.network_link:
             # expdp-side NETWORK_LINK rides the manifest's directive
             # list, so the resumed export re-resolves its source from
@@ -856,20 +874,7 @@ class Job:
         else:
             self.connector = resolve_connector(self.connection)
         self.config = config
-        if is_transfer:
-            plans = plan_network_transfer(src, self.mode, config)
-            for p in plans:
-                p.extra["src_connector"] = src
-            engine_op = "TRANSFER"
-        elif is_import:
-            plans = plan_import(self.dumpset, config)
-            engine_op = "IMPORT"
-        else:
-            plans = plan_export(
-                self.connector, self.operation, self.mode, config
-            )
-            engine_op = self.operation.value
-        self._thread_plan_extras(plans, config)
+        plans, engine_op = self._plan(config)
         # Completed-table record: manifest entries for EXPORT/TRANSFER;
         # for a dump-set IMPORT the TABLE_IMPORT_DONE events since the
         # last JOB_OPEN (target fingerprints) play that role — earlier
@@ -947,23 +952,7 @@ class Job:
                 # EXPORT/TRANSFER enrich the manifest; a resumed IMPORT
                 # leaves the export's manifest untouched (it describes
                 # the dump) — its completion record is the event log.
-                for r in result.tables:
-                    if r.detail.get("not_run"):
-                        continue
-                    meta.tables[r.plan.source_key] = {
-                        "rows": None if not r.ok else r.rows,
-                        "row_count": r.rows,
-                        "bytes": r.bytes,
-                        "files": r.files,
-                        "ok": r.ok,
-                        **r.detail,
-                    }
-                meta.dumpfiles = [
-                    p.replace(self.dumpset.root + "/", "")
-                    for p in self.dumpset.dumpfiles()
-                ]
-                if config.include_metadata:
-                    self.dumpset.write_manifest(meta)
+                self._record_tables(meta, result, config)
             self.dumpset.log_event(
                 "JOB_DONE",
                 state=result.state.value,
@@ -991,17 +980,8 @@ class Job:
         are recomputed (executor fan-out, same as VERIFY_CHECKSUM) and
         compared — the digest map is the proof of completeness, so a
         tampered file forces a re-export rather than a silent skip."""
-        import os
-
         tdir = self.dumpset.table_dir(plan.schema, plan.table)
-        n_files = 0
-        for dirpath, dirnames, filenames in os.walk(tdir):
-            dirnames[:] = [
-                d for d in dirnames if not d.startswith(("_", "."))
-            ]
-            n_files += sum(
-                1 for f in filenames if not f.startswith(("_", "."))
-            )
+        n_files = sum(1 for _ in data_file_paths(tdir))
         if n_files == 0:
             self.dumpset.log_event(
                 "TABLE_RESUME_RECHECK_FAILED",

@@ -1087,7 +1087,7 @@ def datapump_roundtrip_merge_pruned(
     confined to the lowest key octile (status rewritten to 'M') through
     IMPORT(MERGE + MERGE_PRUNE) — the Delta/Iceberg file-skipping MERGE
     re-expressed on plain parquet via footer zone maps
-    (engine.py merge path; catalog.py table_file_ranges /
+    (merge.py; catalog.py table_file_ranges /
     merge_pruned_write). Sentinels pin the physical claim —
     ``was_pruned`` (the TABLE_MERGE_PRUNED event fired with
     files_touched < files_total) and ``untouched_kept`` (every
@@ -1880,7 +1880,7 @@ def datapump_roundtrip_merge_pruned_ordered(
 ) -> DataFrame:
     """MERGE_PRUNE × MERGE_ORDER × MERGE_DELETE_COL — the full CDC fast
     path composed under one hash (the repo's flagship scale claim: the
-    Delta/Iceberg-style merge on plain parquet, engine.py merge path).
+    Delta/Iceberg-style merge on plain parquet, merge.py).
     A range-clustered warehouse copy of ``orders`` (8 key-sorted files,
     seeded at version 1) takes a CDC batch confined to the lowest key
     octile that mixes THREE arrival shapes per key class (key % 3):

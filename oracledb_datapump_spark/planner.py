@@ -5,6 +5,11 @@ applies METADATA_FILTERs server-side so only selected objects move
 (/root/reference/src/oracledb_datapump/directives.py:122-134); we prune the
 table list driver-side *before any Spark job is launched* (SURVEY.md §4),
 which is the same optimization in plain Python.
+
+Planning resolves every directive that applies to a table once, into a
+typed ``TablePlan``; ``Job._thread_plan_extras`` adds the job-level
+fields and rejects every invalid directive combination, so a bad job
+fails before any I/O and the engine's stages never re-check one.
 """
 
 from __future__ import annotations
@@ -21,7 +26,9 @@ from .exceptions import UsageError
 
 @dataclass
 class TablePlan:
-    """One table's worth of work."""
+    """One table's worth of work: the directives that apply to this table,
+    resolved once at plan time. The engine's stages read these fields and
+    never re-read the PlanConfig's per-table maps."""
 
     schema: str
     table: str
@@ -32,24 +39,40 @@ class TablePlan:
     columns: list[str] | None = None
     as_of: str | None = None
     partition_by: str | None = None
-    sort_by: str | None = None
-    zorder_by: str | None = None
-    merge_key: str | None = None
-    merge_order: str | None = None
+    # TABLE:PARTITION scope (Oracle TABLES syntax), hive leaves to read
+    partition_scope: list[str] | None = None
+    # column-list directives, split at plan time
+    sort_by: list[str] | None = None
+    zorder_by: list[str] | None = None
+    merge_key: list[str] | None = None
+    merge_order: list[str] | None = None
     merge_delete_col: str | None = None
     remap_data: list[tuple[str, str]] | None = None
     sample: tuple[int, str] | None = None  # (ppm, column), engine-side
-    # (key, score, tiebreak) keep-best export dedup, engine-side
+    # (key, score, tiebreak) keep-best dedup, engine-side
     dedup_keep_best: tuple[str, str, str] | None = None
     merge_prune: bool = False  # MERGE file-level zone-map pruning
     # import-only
     write_mode: str = "error"
     truncate: bool = False
     writer_options: dict[str, str] = field(default_factory=dict)
+    topo_level: int = 0  # FK wave; parents land before children
+    # in memory only, never in the manifest
+    encryption_password: str | None = None
+    # NETWORK_LINK transfer: the connector rows are read from
+    src_connector: Connector | None = None
     # export-only
     codec: str = "snappy"
     data_included: bool = True  # False when TABLE/TABLE_DATA excluded
-    extra: dict[str, Any] = field(default_factory=dict)
+    dump_format: str = "parquet"
+    source_type: str | None = None  # "VIEW" for VIEWS_AS_TABLES
+    # validated ENCRYPTION contract (crypto.validate_encryption)
+    encryption: dict[str, Any] | None = None
+    checksum_algorithm: str | None = None
+    filesize_bytes: int | None = None
+    incremental_column: str | None = None
+    watermark: Any = None  # prior run's high-water mark, None on the first
+    snapshots: list[dict[str, Any]] | None = None  # prior snapshot history
 
     @property
     def source_key(self) -> str:
@@ -59,13 +82,49 @@ class TablePlan:
     def target_key(self) -> str:
         return f"{self.target_schema}.{self.target_table}"
 
+    @property
+    def incremental_append(self) -> bool:
+        """An INCREMENTAL_COLUMN run past a recorded watermark: only newer
+        rows are read, appended to the existing dump."""
+        return self.incremental_column is not None and self.watermark is not None
 
-def _match_predicate(config: PlanConfig, table: str) -> str | None:
-    return config.table_predicates.get(table, config.table_predicates.get("*"))
+
+def for_table(by_table: dict[str, Any], table: str, default: Any = None) -> Any:
+    """A per-table directive value: the table's own entry, else the "*"
+    wildcard entry, else ``default``."""
+    return by_table.get(table, by_table.get("*", default))
 
 
-def _match_columns(config: PlanConfig, table: str) -> list[str] | None:
-    return config.table_columns.get(table, config.table_columns.get("*"))
+def _cols(spec: str | None) -> list[str] | None:
+    """The column names of a comma-separated directive value."""
+    if spec is None:
+        return None
+    return [c.strip() for c in spec.split(",") if c.strip()]
+
+
+def _table_plan(config: PlanConfig, schema: str, table: str, **kw) -> TablePlan:
+    """A plan carrying every per-table directive value for ``table``."""
+    return TablePlan(
+        schema=schema,
+        table=table,
+        target_schema=schema,
+        target_table=table,
+        parallel=config.parallel,
+        predicate=for_table(config.table_predicates, table),
+        columns=for_table(config.table_columns, table),
+        partition_by=for_table(config.table_partition_by, table),
+        partition_scope=config.table_partition_scope.get(table),
+        sort_by=_cols(for_table(config.table_sort_by, table)),
+        zorder_by=_cols(for_table(config.table_zorder_by, table)),
+        merge_key=_cols(for_table(config.table_merge_key, table)),
+        merge_order=_cols(for_table(config.table_merge_order, table)),
+        merge_delete_col=for_table(config.table_merge_delete_col, table),
+        merge_prune=for_table(config.table_merge_prune, table, False),
+        remap_data=for_table(config.table_remap_data, table),
+        sample=for_table(config.table_sample, table),
+        dedup_keep_best=for_table(config.table_dedup_keep_best, table),
+        **kw,
+    )
 
 
 def plan_export(
@@ -107,56 +166,19 @@ def plan_export(
             if mode == JobMode.TABLE and table not in config.include_tables:
                 continue
             plans.append(
-                TablePlan(
-                    schema=schema,
-                    table=table,
-                    target_schema=schema,
-                    target_table=table,
-                    parallel=config.parallel,
-                    predicate=_match_predicate(config, table),
-                    columns=_match_columns(config, table),
+                _table_plan(
+                    config, schema, table,
                     as_of=config.as_of_marker(),
                     codec=config.parquet_codec(),
                     data_included=data_included,
-                    partition_by=config.table_partition_by.get(
-                        table, config.table_partition_by.get("*")
-                    ),
-                    sort_by=config.table_sort_by.get(
-                        table, config.table_sort_by.get("*")
-                    ),
-                    zorder_by=config.table_zorder_by.get(
-                        table, config.table_zorder_by.get("*")
-                    ),
-                    merge_key=config.table_merge_key.get(
-                        table, config.table_merge_key.get("*")
-                    ),
-                    remap_data=config.table_remap_data.get(
-                        table, config.table_remap_data.get("*")
-                    ),
-                    sample=config.table_sample.get(
-                        table, config.table_sample.get("*")
-                    ),
-                    dedup_keep_best=config.table_dedup_keep_best.get(
-                        table, config.table_dedup_keep_best.get("*")
-                    ),
-                    extra={
-                        "dump_format": config.dump_format.lower(),
-                        **(
-                            {
-                                "partition_scope": config.table_partition_scope[
-                                    table
-                                ]
-                            }
-                            if table in config.table_partition_scope
-                            else {}
-                        ),
-                    },
+                    dump_format=config.dump_format.lower(),
                 )
             )
     # VIEWS_AS_TABLES: materialize named source views as exported tables
     # (public Oracle Data Pump parameter; extension here — the reference
     # never implements it). A view that matches no selected schema fails
-    # at plan time, mirroring Oracle's ORA-31655 posture.
+    # at plan time, mirroring Oracle's ORA-31655 posture. A view takes
+    # only its QUERY/COLUMNS directives.
     for view in config.views_as_tables:
         found = False
         for schema in schemas:
@@ -170,13 +192,11 @@ def plan_export(
                         target_schema=schema,
                         target_table=view,
                         parallel=config.parallel,
-                        predicate=_match_predicate(config, view),
-                        columns=_match_columns(config, view),
+                        predicate=for_table(config.table_predicates, view),
+                        columns=for_table(config.table_columns, view),
                         codec=config.parquet_codec(),
-                        extra={
-                            "dump_format": config.dump_format.lower(),
-                            "source_type": "VIEW",
-                        },
+                        dump_format=config.dump_format.lower(),
+                        source_type="VIEW",
                     )
                 )
         if not found:
@@ -194,24 +214,15 @@ def plan_network_transfer(
 ) -> list[TablePlan]:
     """NETWORK_LINK planning: enumerate the SOURCE catalog like an export
     (so mode/filters/as-of/SAMPLE apply to the source), then graft the
-    import-side contract onto each plan (schema remap, exists-action,
-    MERGE family) — the plan a dump-set roundtrip would execute, minus
-    the dump."""
+    import-side contract onto each plan (schema remap, exists-action) —
+    the plan a dump-set roundtrip would execute, minus the dump."""
     plans = plan_export(connector, Operation.IMPORT, mode, config)
     wmode, truncate = config.write_mode()
     for p in plans:
         p.target_schema = config.remap_schema.get(p.schema, p.schema)
         p.write_mode = wmode
         p.truncate = truncate
-        p.merge_order = config.table_merge_order.get(
-            p.table, config.table_merge_order.get("*")
-        )
-        p.merge_delete_col = config.table_merge_delete_col.get(
-            p.table, config.table_merge_delete_col.get("*")
-        )
-        p.merge_prune = config.table_merge_prune.get(
-            p.table, config.table_merge_prune.get("*", False)
-        )
+        p.src_connector = connector
     return plans
 
 
@@ -234,38 +245,19 @@ def plan_import(
     levels = _topo_levels(constraints)
     plans: list[TablePlan] = []
     for schema, table in dumpset.list_tables():
-        target_schema = config.remap_schema.get(schema, schema)
         if config.include_schemas and schema not in config.include_schemas:
             continue
         if config.include_tables and table not in config.include_tables:
             continue
-        plans.append(
-            TablePlan(
-                schema=schema,
-                table=table,
-                target_schema=target_schema,
-                target_table=table,
-                parallel=config.parallel,
-                predicate=_match_predicate(config, table),
-                columns=_match_columns(config, table),
-                write_mode=mode,
-                truncate=truncate,
-                merge_key=config.table_merge_key.get(
-                    table, config.table_merge_key.get("*")
-                ),
-                merge_order=config.table_merge_order.get(
-                    table, config.table_merge_order.get("*")
-                ),
-                merge_delete_col=config.table_merge_delete_col.get(
-                    table, config.table_merge_delete_col.get("*")
-                ),
-                merge_prune=config.table_merge_prune.get(
-                    table, config.table_merge_prune.get("*", False)
-                ),
-                extra={"topo_level": levels.get(f"{schema}.{table}", 0)},
-            )
+        p = _table_plan(
+            config, schema, table,
+            write_mode=mode,
+            truncate=truncate,
+            topo_level=levels.get(f"{schema}.{table}", 0),
         )
-    plans.sort(key=lambda p: (p.extra["topo_level"], p.source_key))
+        p.target_schema = config.remap_schema.get(schema, schema)
+        plans.append(p)
+    plans.sort(key=lambda p: (p.topo_level, p.source_key))
     return plans
 
 

@@ -48,6 +48,29 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", late: str = "30 m
     )
 
 
+def _hold_dir(src_dir: str) -> str:
+    """The sibling holding dir of ``stage_events_arrivals``: NOT inside
+    the watched ``src_dir``, so callers remove it next to ``src_dir``."""
+    return src_dir.rstrip("/") + ".__stage__"
+
+
+def _single_part(leaf: str) -> str | None:
+    """The one ``part-*.parquet`` file of a staging dir (None if it has
+    none). More than one part would mean a fragmented write, and landing
+    only one of them would silently drop rows, so that raises."""
+    parts = [
+        n
+        for n in sorted(os.listdir(leaf))
+        if n.startswith("part-") and n.endswith(".parquet")
+    ]
+    if len(parts) > 1:
+        raise RuntimeError(
+            f"staging dir {leaf} holds {len(parts)} part files; an "
+            "arrival must land as exactly one file"
+        )
+    return os.path.join(leaf, parts[0]) if parts else None
+
+
 def stage_events_arrivals(
     spark: SparkSession, sf_dir: str, src_dir: str, reverse: bool = False
 ):
@@ -58,7 +81,9 @@ def stage_events_arrivals(
     file). Returns a list of zero-arg callables; each call lands the
     next arrival file (``events-N.parquet``) in ``src_dir``. Degenerate
     timelines (all-equal ts → an empty half) collapse to a single
-    arrival of the whole fixture.
+    arrival of the whole fixture. Callers remove ``_hold_dir(src_dir)``
+    when they are done, also when a cycle raises before every arrival
+    has landed.
 
     The split point only affects WHICH cycle processes a row, never the
     converged result, so any consumer's final aggregate is
@@ -78,48 +103,29 @@ def stage_events_arrivals(
     # coalesce(1) scans, each single-task. The land-then-cycle contract
     # is unchanged: a file appears in src_dir only when its cycle is
     # about to run. A half empty on a degenerate timeline writes no
-    # leaf, which replaces the two count() probes.
-    hold = src_dir.rstrip("/") + ".__stage__"
-    (
-        ev.withColumn("__slice", (F.col("ts_us") >= F.lit(mid)).cast("int"))
-        .drop("ts_us")  # land the fixture's own schema
-        .repartition("__slice")
-        .write.mode("overwrite")
-        .partitionBy("__slice")
-        .parquet(hold)
-    )
-    staged: dict[int, str] = {}
-    layout_ok = True
-    for i in (0, 1):
-        leaf = os.path.join(hold, f"__slice={i}")
-        if not os.path.isdir(leaf):
-            continue
-        parts = [
-            n
-            for n in sorted(os.listdir(leaf))
-            if n.startswith("part-") and n.endswith(".parquet")
-        ]
-        if len(parts) > 1:
-            # repartition("__slice") puts each half in one task, so one
-            # part per leaf; anything else → the proven per-slice path
-            layout_ok = False
-            break
-        if parts:
-            staged[i] = os.path.join(leaf, parts[0])
-    if not layout_ok:
+    # leaf, which replaces the two count() probes. repartition("__slice")
+    # puts each half in one task, and maxRecordsPerFile=0 overrides any
+    # session-wide cap, so each leaf holds exactly one part.
+    hold = _hold_dir(src_dir)
+    try:
+        (
+            ev.withColumn("__slice", (F.col("ts_us") >= F.lit(mid)).cast("int"))
+            .drop("ts_us")  # land the fixture's own schema
+            .repartition("__slice")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", 0)
+            .partitionBy("__slice")
+            .parquet(hold)
+        )
+        staged: dict[int, str] = {}
+        for i in (0, 1):
+            leaf = os.path.join(hold, f"__slice={i}")
+            part = _single_part(leaf) if os.path.isdir(leaf) else None
+            if part:
+                staged[i] = part
+    except BaseException:
         shutil.rmtree(hold, ignore_errors=True)
-        early = ev.filter(F.col("ts_us") < F.lit(mid)).drop("ts_us")
-        late = ev.filter(F.col("ts_us") >= F.lit(mid)).drop("ts_us")
-        if reverse:
-            early, late = late, early
-        return [
-            lambda: _land_single_parquet(
-                early, os.path.join(src_dir, "events-0.parquet")
-            ),
-            lambda: _land_single_parquet(
-                late, os.path.join(src_dir, "events-1.parquet")
-            ),
-        ]
+        raise
     if len(staged) < 2:
         # degenerate timeline (an empty half): single arrival of the
         # whole fixture — the one staged file IS the whole fixture
@@ -164,36 +170,30 @@ def land_slices_single_pass(
     import time as _time
 
     stage = os.path.join(src_dir, "__stage_all__")
-    (
-        df.withColumn("__slice", slice_col.cast("int"))
-        .repartition("__slice")
-        .write.mode("overwrite")
-        .partitionBy("__slice")
-        .parquet(stage)
-    )
-    now = _time.time()
-    for i in range(n_slices):
-        leaf = os.path.join(stage, f"__slice={i}")
-        part = None
-        if os.path.isdir(leaf):
-            part = next(
-                (
-                    n
-                    for n in sorted(os.listdir(leaf))
-                    if n.startswith("part-") and n.endswith(".parquet")
-                ),
-                None,
-            )
-        dest = os.path.join(src_dir, f"{prefix}-{i}.parquet")
-        if part is None:
-            _land_single_parquet(
-                df.filter(slice_col.cast("int") == i).drop("__slice"), dest
-            )
-        else:
-            os.replace(os.path.join(leaf, part), dest)
-        # deterministic drain order regardless of write timing ties
-        os.utime(dest, (now + i, now + i))
-    shutil.rmtree(stage, ignore_errors=True)
+    try:
+        (
+            df.withColumn("__slice", slice_col.cast("int"))
+            .repartition("__slice")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", 0)  # one part per leaf, always
+            .partitionBy("__slice")
+            .parquet(stage)
+        )
+        now = _time.time()
+        for i in range(n_slices):
+            leaf = os.path.join(stage, f"__slice={i}")
+            part = _single_part(leaf) if os.path.isdir(leaf) else None
+            dest = os.path.join(src_dir, f"{prefix}-{i}.parquet")
+            if part is None:
+                _land_single_parquet(
+                    df.filter(slice_col.cast("int") == i).drop("__slice"), dest
+                )
+            else:
+                os.replace(part, dest)
+            # deterministic drain order regardless of write timing ties
+            os.utime(dest, (now + i, now + i))
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def _land_single_parquet(df: DataFrame, dest_file: str) -> None:
@@ -201,29 +201,27 @@ def _land_single_parquet(df: DataFrame, dest_file: str) -> None:
     contract of the watched source dir). Spark writes a single-part
     directory next to the destination; the driver's only role is the
     atomic rename of the finished part file — no row ever crosses the
-    driver."""
+    driver. maxRecordsPerFile=0 overrides a session-wide
+    spark.sql.files.maxRecordsPerFile, which would otherwise split the
+    one partition into several parts."""
     import shutil
 
     stage = dest_file + ".__stage__"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = next(
-        (
-            n for n in sorted(os.listdir(stage))
-            if n.startswith("part-") and n.endswith(".parquet")
-        ),
-        None,
-    )
-    if part is None:
-        # zero-partition input (e.g. an empty arrival slice on a degenerate
-        # timeline) writes only _SUCCESS; land an explicit empty file with
-        # the same schema so the watched-dir contract still holds
-        df.limit(0).repartition(1).write.mode("overwrite").parquet(stage)
-        part = next(
-            n for n in sorted(os.listdir(stage))
-            if n.startswith("part-") and n.endswith(".parquet")
-        )
-    os.replace(os.path.join(stage, part), dest_file)
-    shutil.rmtree(stage, ignore_errors=True)
+    try:
+        df.coalesce(1).write.mode("overwrite").option(
+            "maxRecordsPerFile", 0
+        ).parquet(stage)
+        part = _single_part(stage)
+        if part is None:
+            # zero-partition input (e.g. an empty arrival slice on a
+            # degenerate timeline) writes only _SUCCESS; land an explicit
+            # empty file with the same schema so the watched-dir contract
+            # still holds
+            df.limit(0).repartition(1).write.mode("overwrite").parquet(stage)
+            part = _single_part(stage)
+        os.replace(part, dest_file)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def _last_committed_batch(checkpoint_dir: str) -> int:
@@ -334,6 +332,7 @@ def incremental_export_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -394,7 +393,7 @@ def run_merge_apply_cycle(
     foreachBatch → reduce to latest-per-key → EXPORT the batch as a dump
     set → IMPORT with TABLE_EXISTS_ACTION(MERGE) + MERGE_KEY(user_id).
     The streaming sink and the batch importer share one merge
-    implementation (engine.py's newest-wins window), so there is no
+    implementation (merge.py's newest-wins window), so there is no
     second upsert codepath to drift.
 
     Exactly-once story: the file source's checkpoint makes each batch
@@ -512,7 +511,7 @@ def streaming_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     export-side incremental_export_cycles) under the cross-engine hash.
 
     The time split guarantees every cycle-2 row is newer than any
-    cycle-1 row for the same user, so engine.py's incoming-beats-
+    cycle-1 row for the same user, so merge.py's incoming-beats-
     existing precedence IS newest-wins across cycles; within a batch
     the explicit (ts_us, event_id) reduction pins the survivor. The
     arrival split is Spark-side (stage_events_arrivals)."""
@@ -536,6 +535,7 @@ def streaming_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
 
@@ -596,6 +596,7 @@ def streaming_merge_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
 
@@ -650,6 +651,7 @@ def streaming_merge_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
 
@@ -726,6 +728,7 @@ def streaming_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
 
@@ -798,6 +801,7 @@ def streaming_merge_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
 
@@ -914,6 +918,7 @@ def streaming_merge_late_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(_hold_dir(src), ignore_errors=True)
         shutil.rmtree(wh, ignore_errors=True)
         shutil.rmtree(cp, ignore_errors=True)
         shutil.rmtree(stage, ignore_errors=True)

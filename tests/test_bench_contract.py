@@ -33,3 +33,49 @@ def test_no_stale_exclusions_or_overlap():
 def test_exclusions_carry_reasons():
     empty = [q for q, why in bench.EXCLUDED.items() if not str(why).strip()]
     assert not empty, f"EXCLUDED entries with no reason: {empty}"
+
+
+def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
+    """perfbench's --trace 1 patches engine and job functions in module
+    globals from outside. A refactor that calls them through a local
+    alias would make the per-layer metrics read 0 silently, so a tiny
+    EXPORT+IMPORT under instrument() must record every engine span."""
+    from oracledb_datapump_spark import catalog, dumpset, engine, job, request, session
+    from oracledb_datapump_spark.directives import DirectiveBase as D
+    from perfbench.spans import Tracer, instrument
+
+    owners = (
+        session, job, engine, request, dumpset.DumpSet,
+        catalog.ParquetConnector, catalog.DuckDbConnector,
+    )
+    saved = [(o, dict(vars(o))) for o in owners]
+    tracer = Tracer("wrap-points")
+    instrument(tracer)
+    try:
+        tracer.active = True
+        dump, wh = str(tmp_path / "dump"), str(tmp_path / "wh")
+        st = job.Job(
+            "EXPORT", "TABLE", dumpfiles=dump,
+            directives=[D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("nation")],
+        ).run(connection=catalog.ParquetConnector(sf_dir), spark=spark)
+        assert st.job_state == "COMPLETED", st.error
+        st = job.Job(
+            "IMPORT", "TABLE", dumpfiles=dump,
+            directives=[D.TABLE_EXISTS_ACTION("REPLACE")],
+        ).run(connection=catalog.ParquetConnector(wh), spark=spark)
+        assert st.job_state == "COMPLETED", st.error
+        tracer.active = False
+        for name in (
+            "engine.run_plans",
+            "engine.export_table",
+            "engine.import_table",
+            "engine.table_fingerprint",
+        ):
+            assert tracer.calls(name) >= 1, name
+    finally:
+        for owner, attrs in saved:
+            for attr, value in attrs.items():
+                if vars(owner).get(attr) is not value:
+                    setattr(owner, attr, value)
+    for owner, attrs in saved:
+        assert all(vars(owner).get(a) is v for a, v in attrs.items())

@@ -18,7 +18,7 @@ from oracledb_datapump_spark.base import JobMode, Operation
 from oracledb_datapump_spark.catalog import ParquetConnector
 from oracledb_datapump_spark.directives import DirectiveBase as D
 from oracledb_datapump_spark.dumpset import DumpSet
-from oracledb_datapump_spark.exceptions import Unsupported, UsageError
+from oracledb_datapump_spark.exceptions import JobError, Unsupported, UsageError
 from oracledb_datapump_spark.job import Job
 
 PW = "tr0ub4dor&3"
@@ -191,13 +191,40 @@ def test_unsupported_knobs_fail_loudly(spark, dirs):
         )
     with pytest.raises((UsageError, Exception), match="ENCRYPTION_PASSWORD"):
         _raise_or_error(_export(spark, stage, dump, [D.ENCRYPTION("ALL")]))
-    st = _export(
-        spark, stage, dump,
-        [D.ENCRYPTION("DATA_ONLY"), D.ENCRYPTION_PASSWORD(PW),
-         D.DUMP_FORMAT("CSV")],
-    )
-    assert st.job_state != "COMPLETED"
-    assert "parquet" in str(st.error)
+    # Job.run wraps every planning error in JobError, chained from the
+    # UsageError planning raised
+    with pytest.raises(JobError, match="parquet") as ei:
+        _export(
+            spark, stage, dump,
+            [D.ENCRYPTION("DATA_ONLY"), D.ENCRYPTION_PASSWORD(PW),
+             D.DUMP_FORMAT("CSV")],
+        )
+    assert isinstance(ei.value.__cause__, UsageError)
+
+
+@pytest.mark.parametrize(
+    "extra, match",
+    [
+        (D.DUMP_FORMAT("CSV"), "parquet"),
+        (D.EXPORT_PARTITION_BY("n_regionkey"), "EXPORT_PARTITION_BY"),
+        (D.INCREMENTAL_COLUMN("n_nationkey"), "INCREMENTAL_COLUMN"),
+    ],
+)
+def test_combination_rules_fail_at_plan_time(spark, dirs, extra, match):
+    """ENCRYPTION x DUMP_FORMAT / EXPORT_PARTITION_BY /
+    INCREMENTAL_COLUMN are planning rules: the job fails before any
+    I/O — no table is started and no table directory is written."""
+    stage, wh, dump = dirs
+    _seed(spark, stage)
+    with pytest.raises(JobError, match=match) as ei:
+        _export(
+            spark, stage, dump,
+            [D.ENCRYPTION("ALL"), D.ENCRYPTION_PASSWORD(PW), extra],
+        )
+    assert isinstance(ei.value.__cause__, UsageError)
+    events = [e["event"] for e in DumpSet(dump).read_events()]
+    assert "TABLE_EXPORT_START" not in events
+    assert not os.path.exists(os.path.join(dump, "main", "nation"))
 
 
 def test_encrypted_columns_only_roundtrip(spark, dirs):

@@ -360,3 +360,37 @@ def test_merge_import_with_map_column(spark, tmp_path):
     out = target.read_table(spark, "tgt", "kvmap").collect()
     assert sorted(r.k for r in out) == [0, 1, 2, 3, 4]
     assert all(r.attrs == {"a": r.k} for r in out)
+
+
+def test_status_survives_torn_event_log_tail(tmp_path):
+    """A job killed mid-append leaves a half-written last event line:
+    STATUS still parses the log and reports the last complete state,
+    while a corrupt line in the middle of the log still raises."""
+    import json
+
+    from oracledb_datapump_spark.status import status_from_events
+
+    ds = DumpSet(str(tmp_path / "torn"))
+    for ev, fields in (
+        ("JOB_OPEN", {"job_name": "J", "operation": "EXPORT"}),
+        ("JOB_START", {}),
+        ("TABLE_EXPORT_START", {"table": "s.a"}),
+        ("TABLE_EXPORT_DONE", {"table": "s.a", "rows": 3, "bytes": 10}),
+    ):
+        ds.log_event(ev, **fields)
+    with open(ds.events_path, "a") as f:
+        f.write('{"ts": "2026-01-01T00:00:00", "event": "TABLE_EXP')
+    info = status_from_events(ds)
+    assert info.job_state == JobState.EXECUTING.value
+    workers = {w.name: w for w in info.job_status.worker_status_list}
+    assert workers["s.a"].state == "COMPLETED"
+    assert workers["s.a"].completed_rows == 3
+
+    with open(ds.events_path) as f:
+        lines = f.readlines()
+    lines.insert(1, "{not json\n")
+    with open(ds.events_path, "w") as f:
+        f.writelines(lines)
+    with pytest.raises(json.JSONDecodeError):
+        status_from_events(ds)
+

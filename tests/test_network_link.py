@@ -113,6 +113,35 @@ def test_transfer_skip_exists(spark, sf_dir, tmp_path):
     assert "TABLE_TRANSFER_SKIP_EXISTS" in evs
 
 
+def test_transfer_dedup_keep_best(spark, tmp_path):
+    """DEDUP_KEEP_BEST applies on a NETWORK_LINK transfer exactly as on
+    EXPORT: one row per key, the greatest score wins, a score tie goes
+    to the smallest tiebreak."""
+    src, events, wh = (str(tmp_path / d) for d in ("src", "ev", "wh"))
+    spark.createDataFrame(
+        [
+            # key 1: score tie, the smallest tiebreak must win
+            (1, 10, 5), (1, 10, 2),
+            # key 2: the greatest score wins over a smaller tiebreak
+            (2, 3, 0), (2, 7, 9),
+        ],
+        "k long, score long, tie long",
+    ).write.parquet(os.path.join(src, "t.parquet"))
+    st = _link_import(
+        spark, src, events, wh,
+        [
+            D.INCLUDE_TABLE("t"),
+            D.DEDUP_KEEP_BEST("k:score:tie"),
+            D.TABLE_EXISTS_ACTION("REPLACE"),
+        ],
+    )
+    assert st.job_state == "COMPLETED", st.error
+    out = sorted(
+        map(tuple, ParquetConnector(wh).read_table(spark, "main", "t").collect())
+    )
+    assert out == [(1, 10, 2), (2, 7, 9)]
+
+
 @pytest.mark.parametrize(
     "bad, msg",
     [

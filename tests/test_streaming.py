@@ -272,3 +272,24 @@ def test_attribution_horizon_tie_boundary(spark, tmp_path):
         for r in spark.read.parquet(info["sink_path"]).collect()
     )
     assert got == [(4, 1, hz), (4, 2, 0)], got
+
+
+def test_arrivals_land_every_row_under_session_file_cap(spark, tmp_path):
+    """A session-wide spark.sql.files.maxRecordsPerFile splits a staging
+    write into several part files; landing only the first one dropped
+    rows. Every arrival helper must land all rows in one file."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(1,), (2,), (3,)], "k long")
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    try:
+        one = os.path.join(src, "one.parquet")
+        I._land_single_parquet(df, one)
+        assert spark.read.parquet(one).count() == 3
+        I.land_slices_single_pass(df, F.lit(0), 1, src, prefix="s")
+        assert spark.read.parquet(os.path.join(src, "s-0.parquet")).count() == 3
+        assert sorted(os.listdir(src)) == ["one.parquet", "s-0.parquet"]
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
