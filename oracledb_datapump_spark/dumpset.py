@@ -434,8 +434,17 @@ class DumpSet:
         self.ensure_dir()
         rec = {"ts": utc_now().isoformat(), "event": event_type, **fields}
         line = json.dumps(rec, default=str)
-        with self._lock, open(self.events_path, "a") as f:
-            f.write(line + "\n")
+        with self._lock, open(self.events_path, "a+b") as f:
+            end = f.seek(0, os.SEEK_END)
+            if end:
+                f.seek(end - 1)
+                if f.read(1) != b"\n":
+                    # a writer killed mid-append left a torn last line:
+                    # cut it, or this append would glue onto it and turn
+                    # it into a corrupt middle line read_events rejects
+                    f.seek(0)
+                    f.truncate(f.read().rfind(b"\n") + 1)
+            f.write(line.encode() + b"\n")
         with self._lock, open(self.logfile_path, "a") as f:
             f.write(f"{rec['ts']} {event_type} " + json.dumps(fields, default=str) + "\n")
 

@@ -880,7 +880,7 @@ def _fingerprint_done(
     }
     dumpset.log_event(
         f"TABLE_{operation}_DONE",
-        table=plan.target_key,
+        table=plan.event_key(operation),
         **counts,
         target_digest=t_digest,
     )
@@ -889,8 +889,9 @@ def _fingerprint_done(
 
 def _skip(dumpset: DumpSet, plan: TablePlan, operation: str, why: str) -> TableResult:
     """A table that moves no rows: TABLE_<op>_<why>, then its DONE."""
-    dumpset.log_event(f"TABLE_{operation}_{why}", table=plan.target_key)
-    dumpset.log_event(f"TABLE_{operation}_DONE", table=plan.target_key, rows=0)
+    key = plan.event_key(operation)
+    dumpset.log_event(f"TABLE_{operation}_{why}", table=key)
+    dumpset.log_event(f"TABLE_{operation}_DONE", table=key, rows=0)
     return TableResult(plan, ok=True, rows=0, skipped=True)
 
 
@@ -1116,7 +1117,7 @@ def run_plans(
                 stop_seen[0] = True
                 dumpset.log_event("JOB_STOPPING", next_table=p.source_key)
         dumpset.log_event(
-            f"TABLE_{operation}_NOT_RUN", table=p.source_key
+            f"TABLE_{operation}_NOT_RUN", table=p.event_key(operation)
         )
         return TableResult(p, ok=True, skipped=True, detail={"not_run": True})
 
@@ -1153,8 +1154,7 @@ def _run_one(
     The per-table functions are looked up in module globals on every
     call, so a wrapper patched over them sees each table."""
     dumpset.log_event(
-        f"TABLE_{operation}_START",
-        table=plan.target_key if operation == "IMPORT" else plan.source_key,
+        f"TABLE_{operation}_START", table=plan.event_key(operation)
     )
     try:
         if operation == "EXPORT":
@@ -1165,7 +1165,7 @@ def _run_one(
     except Exception as e:
         dumpset.log_event(
             f"TABLE_{operation}_ERROR",
-            table=plan.source_key if operation == "EXPORT" else plan.target_key,
+            table=plan.event_key(operation),
             error=str(e),
         )
         if operation == "IMPORT" and config.skip_constraint_errors:

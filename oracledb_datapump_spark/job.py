@@ -5,18 +5,22 @@ Same surface — ``Job(operation, mode, dumpfiles, directives, connection,
 tag).run(wait=...)``, ``Job.attach``, ``get_status``, ``poll_for_completion``,
 ``get_logfile`` — with the Oracle server replaced by the Spark engine.
 
-Lifecycle (reference job.py:195-308 → ours):
-  1. resolve connection            (job.py:200-201)  → resolve_connector
+Lifecycle (reference job.py:195-308 → ours). run() walks every step;
+restart() rebuilds the directive list from the dump set, resolves the
+connection (1), re-plans (7) and re-enters at 9 — one execution path:
+  1. resolve connection            (job.py:200-201)  → _resolve_connector
   2. validate operation/mode       (job.py:206-210)
   3. stamp job_date → job_name     (job.py:213-218, 88-125)
   4. create log                    (job.py:222-224)  → dump-set event log
-  5. open                          (job.py:226-233)  → JOB_OPEN event
+  5. open                          (job.py:226-233)  → register, JOB_OPEN
   6. collect metadata              (job.py:235-250)  → schemas/versions
-  7. plan dump set                 (job.py:252-259)  → plan_export/plan_import
+  7. plan dump set                 (job.py:252-259)  → _plan
   8. auto FLASHBACK_SCN on EXPORT  (job.py:261-269)  → snapshot_marker()
-  9. command pipeline              (job.py:277-286)  → compile + run_plans
- 10. wait / status                 (job.py:288-304)
- 11. detach                        (job.py:306)      → deregister
+  9. command pipeline              (job.py:277-286)  → _execute: run_plans
+ 10. wait / status                 (job.py:288-304)  → _execute(wait=...)
+ 11. detach                        (job.py:306)      → _execute's finally:
+     deregister, then set _done_event (an error first logs JOB_ERROR
+     and JOB_DONE(ERROR))
 """
 
 from __future__ import annotations
@@ -95,6 +99,8 @@ class Job:
         self._estimates: list[dict[str, Any]] | None = None
         self._lock = threading.Lock()
         self._stop_event = threading.Event()
+        self._done_event: threading.Event | None = None  # set by _execute
+        self._worker: threading.Thread | None = None  # async runs only
         self.attached_sessions = 0  # owner run sets 1; attach() adds
         self.dumpset: DumpSet | None = None
         self.connector: Connector | None = None
@@ -142,16 +148,7 @@ class Job:
         self.job_date = utc_now()
         config = compile_directives(self.directives, mode=self.mode.value)
         self.config = config
-        if self.operation == Operation.EXPORT and config.network_link:
-            # expdp-side NETWORK_LINK (public Oracle parameter on BOTH
-            # utilities): the named link IS the export's source, so no
-            # local connection is required — the dump lands locally
-            # exactly as if the source were the job connection.
-            self.connector = resolve_connector(config.network_link)
-        else:
-            if self.connection is None:
-                raise UsageError("connection required")
-            self.connector = resolve_connector(self.connection)
+        self._resolve_connector(config)
         spark = spark or get_spark()
         if self.job_name is None:
             self.job_name = self._derive_name(config)
@@ -184,12 +181,11 @@ class Job:
         try:
             return self._run_registered(wait, spark, config)
         except BaseException:
-            # A failure anywhere after registration (planning, manifest
-            # write, synchronous execution) must not leak the registry
-            # entry: attach() would find a permanently DEFINING job and
-            # cleanup_orphans would skip its dump dir forever.
-            # deregister_job is an idempotent pop, so paths that already
-            # deregistered before raising are unaffected.
+            # A failure after registration and before _execute (planning,
+            # the manifest write) must not leak the registry entry:
+            # attach() would find a permanently DEFINING job and
+            # cleanup_orphans would skip its dump dir forever. _execute
+            # deregisters on its own; deregister_job is an idempotent pop.
             deregister_job(self.job_name)
             raise
 
@@ -219,7 +215,6 @@ class Job:
                     for _dp, _dn, fn in _os.walk(tdir)
                     for n in fn
                 ):
-                    deregister_job(self.job_name)
                     raise UsageError(
                         f"dump for {p.source_key} already exists at "
                         f"{tdir} (ORA-27038 analog); set "
@@ -228,7 +223,6 @@ class Job:
         if not plans:
             # Oracle raises ORA-39165 for a schema that matches nothing; a
             # vacuous job completing silently would hide typos.
-            deregister_job(self.job_name)
             raise UsageError(
                 f"No tables matched the job specification "
                 f"(mode={self.mode.value}, schemas={config.include_schemas}, "
@@ -304,80 +298,100 @@ class Job:
             self.dumpset.write_manifest(meta)
 
         self.dumpset.log_event("JOB_START")
+        return self._execute(spark, plans, config, engine_op, meta, wait)
+
+    def _resolve_connector(self, config: PlanConfig) -> None:
+        """The job's connector: an EXPORT with NETWORK_LINK reads from the
+        link (expdp-side NETWORK_LINK, so no local connection is needed);
+        every other job needs ``connection`` — an export's source, or the
+        target of an IMPORT, dump-set or NETWORK_LINK transfer alike."""
+        if self.operation == Operation.EXPORT and config.network_link:
+            self.connector = resolve_connector(config.network_link)
+            return
+        if self.connection is None:
+            role = (
+                "export SOURCE" if self.operation == Operation.EXPORT
+                else "transfer TARGET" if config.network_link
+                else "import TARGET"
+            )
+            raise UsageError(f"connection required (the {role})")
+        self.connector = resolve_connector(self.connection)
+
+    def _execute(
+        self,
+        spark: SparkSession,
+        plans: list,
+        config: PlanConfig,
+        engine_op: str,
+        meta: JobMetaData | None,
+        wait: bool,
+    ) -> JobStatusInfo:
+        """Execute a registered job's plans — the one execution path of
+        run() and restart(): run_plans → manifest merge (EXPORT and
+        TRANSFER) → JOB_DONE → state → DELETE_FILES → deregister.
+
+        Any exception ends the job in ERROR: JOB_ERROR + JOB_DONE(ERROR),
+        so STATUS never shows a crashed job as EXECUTING. A synchronous
+        call then re-raises; an async one (reference job.py:297-304: the
+        caller observes via attach/get_status/poll_for_completion) keeps
+        the error in the status. _done_event is set last, after the final
+        event write: kill() waits on it before deleting the dump set, or
+        an in-flight write would recreate the directory as a half-dump."""
         self._set_state(JobState.EXECUTING)
-        # Completion handle for kill(): the async path joins _worker, but
-        # a synchronous run(wait=True) has no thread object to join — a
-        # kill() from another thread must still wait for the executing
-        # thread to reach a boundary before deleting the dump set, or the
-        # in-flight table's event/manifest writes resurrect the deleted
-        # directory as a half-dump.
-        self._done_event = threading.Event()
+        self._done_event = done = threading.Event()
 
-        def _execute() -> None:
+        def body() -> None:
             try:
-                _execute_core()
-            finally:
-                self._done_event.set()
-
-        def _execute_core() -> None:
-            result = run_plans(
-                spark, self.connector, self.dumpset, plans, config,
-                engine_op, stop_event=self._stop_event,
-            )
-            self._result = result
-            self._set_state(
-                JobState.STOPPING
-                if result.state == JobState.STOPPED
-                else JobState.COMPLETING
-            )
-
-            if self.operation == Operation.EXPORT or engine_op == "TRANSFER":
-                self._record_tables(meta, result, config)
-
-            self.dumpset.log_event(
-                "JOB_DONE",
-                state=result.state.value,
-                dumpfiles=self.dumpset.dumpfiles()
-                if self.operation == Operation.EXPORT
-                else [],
-                errors=result.error_count,
-            )
-            self._set_state(result.state)
-
-            # POST stage (reference job.py:288-295: Extra directives only
-            # when wait=True — DELETE_FILES after synchronous import)
-            if (
-                wait
-                and self.operation == Operation.IMPORT
-                and config.delete_files_after
-                and result.state == JobState.COMPLETED
-            ):
-                self.dumpset.delete()
-
-            deregister_job(self.job_name)
-
-        if wait:
-            _execute()
-            return self.get_status()
-
-        # async mode (reference job.py:297-304): the job keeps running —
-        # driver-side worker thread replaces Oracle's server-side workers;
-        # the caller observes via attach/get_status/poll_for_completion,
-        # and the registry entry stays live until _execute finishes.
-        def _execute_guarded() -> None:
-            try:
-                _execute()
-            except Exception as e:  # surfaced via status, like the server
+                result = run_plans(
+                    spark, self.connector, self.dumpset, plans, config,
+                    engine_op, stop_event=self._stop_event,
+                )
+                self._result = result
+                self._set_state(
+                    JobState.STOPPING
+                    if result.state == JobState.STOPPED
+                    else JobState.COMPLETING
+                )
+                if engine_op != "IMPORT":
+                    # a dump-set IMPORT leaves the export's manifest alone
+                    # (it describes the dump); its record is the event log
+                    self._record_tables(meta, result, config)
+                self.dumpset.log_event(
+                    "JOB_DONE",
+                    state=result.state.value,
+                    dumpfiles=self.dumpset.dumpfiles()
+                    if engine_op == "EXPORT"
+                    else [],
+                    errors=result.error_count,
+                )
+                self._set_state(result.state)
+                # POST stage (reference job.py:288-295: Extra directives
+                # only when wait=True — DELETE_FILES after a synchronous
+                # import; a restart carries over the stopped run's)
+                if (
+                    wait
+                    and self.operation == Operation.IMPORT
+                    and config.delete_files_after
+                    and result.state == JobState.COMPLETED
+                ):
+                    self.dumpset.delete()
+            except Exception as e:
                 self.dumpset.log_event("JOB_ERROR", error=str(e))
                 self.dumpset.log_event("JOB_DONE", state=JobState.ERROR.value)
                 self._set_state(JobState.ERROR)
+                if wait:
+                    raise
+            finally:
                 deregister_job(self.job_name)
+                done.set()
 
-        t = threading.Thread(
-            target=_execute_guarded, name=f"datapump-{self.job_name}", daemon=True
-        )
-        self._worker = t
-        t.start()
+        if wait:
+            body()
+        else:
+            self._worker = threading.Thread(
+                target=body, name=f"datapump-{self.job_name}", daemon=True
+            )
+            self._worker.start()
         return self.get_status()
 
     def _plan(self, config: PlanConfig) -> tuple[list, str]:
@@ -590,7 +604,7 @@ class Job:
         # LOG. When the log shows a terminal state the snapshot hasn't
         # reached, adopt it — otherwise poll_for_completion (which reads
         # self._state) spins forever on a job another process finished.
-        if self.connector is None and getattr(self, "_worker", None) is None:
+        if self.connector is None and self._worker is None:
             from .base import TERMINAL_STATES
 
             try:
@@ -681,27 +695,16 @@ class Job:
         ):
             self._stop_event.set()
             self._set_state(JobState.STOP_PENDING)
-            worker = getattr(self, "_worker", None)
-            if worker is not None and worker.is_alive():
-                worker.join(timeout=timeout)
-                if worker.is_alive():
-                    raise UsageError(
-                        f"kill(): worker did not reach a table boundary "
-                        f"within {timeout}s; the job is still stopping"
-                    )
-            elif worker is None:
-                # synchronous run(wait=True) stopped from another thread:
-                # no thread object to join, but _done_event marks the
-                # executing thread reaching its boundary — deleting the
-                # dump set before that lets in-flight event/manifest
-                # writes recreate the directory as a half-resurrected dump
-                done = getattr(self, "_done_event", None)
-                if done is not None and not done.wait(timeout=timeout):
-                    raise UsageError(
-                        f"kill(): executing thread did not reach a table "
-                        f"boundary within {timeout}s; the job is still "
-                        "stopping"
-                    )
+            # wait for the executing thread (async worker or the caller
+            # of a synchronous run) to land: deleting the dump set before
+            # that lets in-flight event/manifest writes recreate the
+            # directory as a half-resurrected dump
+            done = self._done_event
+            if done is not None and not done.wait(timeout=timeout):
+                raise UsageError(
+                    f"kill(): the job did not reach a table boundary "
+                    f"within {timeout}s; the job is still stopping"
+                )
         self.dumpset.delete()
         deregister_job(self.job_name)
         self._set_state(JobState.NOT_RUNNING)
@@ -830,14 +833,9 @@ class Job:
             )
         config = compile_directives(self.directives, mode=self.mode.value)
         is_import = import_plan_ev is not None
-        is_transfer = (
-            self.operation == Operation.IMPORT
-            and bool(config.network_link)
-            and not is_import
-        )
         if (
-            self.operation != Operation.EXPORT
-            and not is_transfer
+            self.operation == Operation.IMPORT
+            and not config.network_link
             and not is_import
         ):
             raise UsageError(
@@ -847,32 +845,10 @@ class Job:
                 "TABLE_EXISTS_ACTION('SKIP') for resume-equivalent "
                 "semantics"
             )
-        if is_import:
-            if self.connection is None:
-                raise UsageError(
-                    "connection (the import TARGET) required to restart "
-                    "a dump-set IMPORT"
-                )
-            self.connector = resolve_connector(self.connection)
-        elif is_transfer:
-            # impdp-side NETWORK_LINK: the link names the SOURCE; the
-            # connection is the transfer TARGET, exactly as the original
-            # run — both re-resolve from the manifest's directive list
-            if self.connection is None:
-                raise UsageError(
-                    "connection (the transfer TARGET) required to "
-                    "restart a NETWORK_LINK transfer"
-                )
-            self.connector = resolve_connector(self.connection)
-        elif config.network_link:
-            # expdp-side NETWORK_LINK rides the manifest's directive
-            # list, so the resumed export re-resolves its source from
-            # the link — no connection needed, same as the original run
-            self.connector = resolve_connector(config.network_link)
-        elif self.connection is None:
-            raise UsageError("connection required to restart")
-        else:
-            self.connector = resolve_connector(self.connection)
+        # the connector re-resolves from the recorded directive list,
+        # exactly as the original run: an expdp-side NETWORK_LINK reads
+        # the link, every other job needs the connection again
+        self._resolve_connector(config)
         self.config = config
         plans, engine_op = self._plan(config)
         # Completed-table record: manifest entries for EXPORT/TRANSFER;
@@ -891,6 +867,10 @@ class Job:
                         "row_count": ev.get("target_rows"),
                         "target_digest": ev.get("target_digest"),
                     }
+        # IMPORT/TRANSFER completeness is verified against the TARGET,
+        # EXPORT against the dump
+        on_target = engine_op != "EXPORT"
+        intact = self._transfer_intact if on_target else self._resume_intact
         remaining, skipped = [], []
         for p in plans:
             entry = (
@@ -898,137 +878,71 @@ class Job:
                 if is_import
                 else meta.tables.get(p.source_key)
             )
-            if (
-                entry
-                and entry.get("ok")
-                and (
-                    self._transfer_intact(spark, p, entry)
-                    if is_transfer or is_import
-                    else self._resume_intact(spark, p, entry)
+            if entry and entry.get("ok"):
+                reason = intact(spark, p, entry)
+                if reason is None:
+                    skipped.append(p)
+                    continue
+                self.dumpset.log_event(
+                    "TABLE_RESUME_RECHECK_FAILED",
+                    table=p.event_key(engine_op),
+                    reason=reason,
                 )
-            ):
-                skipped.append(p)
-            else:
-                if (is_transfer or is_import) and entry and entry.get("ok"):
-                    # recheck failed on a recorded-complete table: the
-                    # target holds a tampered/partial remnant, so the
-                    # re-run must replace it, never append onto it
+                if on_target:
+                    # the target holds a tampered/partial remnant, so
+                    # the re-run must replace it, never append onto it
                     p.write_mode, p.truncate = "overwrite", False
-                remaining.append(p)
-        # event identity: IMPORT/TRANSFER completion rows
-        # (TABLE_IMPORT_DONE / TABLE_TRANSFER_DONE) describe the TARGET,
-        # so their resume events must carry the same (remapped) key —
-        # Oracle's master table names the remapped object on import.
-        # EXPORT resumes keep the source key (the dump IS the source).
-        _k = (
-            (lambda p: p.target_key)
-            if (is_transfer or is_import)
-            else (lambda p: p.source_key)
-        )
+            remaining.append(p)
         self.dumpset.log_event(
             "JOB_RESTART",
             job_name=self.job_name,
-            skipped=[_k(p) for p in skipped],
-            remaining=[_k(p) for p in remaining],
+            skipped=[p.event_key(engine_op) for p in skipped],
+            remaining=[p.event_key(engine_op) for p in remaining],
         )
         for p in skipped:
-            self.dumpset.log_event("TABLE_RESUME_SKIP", table=_k(p))
+            self.dumpset.log_event(
+                "TABLE_RESUME_SKIP", table=p.event_key(engine_op)
+            )
         self._stop_event = threading.Event()  # restart is itself stoppable
-        self._done_event = threading.Event()  # kill() boundary handle
-        self._set_state(JobState.EXECUTING)
         self.attached_sessions = 1  # the resuming run re-owns the job
         register_job(self.job_name, self)
-        try:
-            result = (
-                run_plans(
-                    spark, self.connector, self.dumpset, remaining, config,
-                    engine_op, stop_event=self._stop_event,
-                )
-                if remaining
-                else EngineResult(state=JobState.COMPLETED)
-            )
-            self._result = result
-            if not is_import:
-                # EXPORT/TRANSFER enrich the manifest; a resumed IMPORT
-                # leaves the export's manifest untouched (it describes
-                # the dump) — its completion record is the event log.
-                self._record_tables(meta, result, config)
-            self.dumpset.log_event(
-                "JOB_DONE",
-                state=result.state.value,
-                dumpfiles=[] if is_import else self.dumpset.dumpfiles(),
-                errors=result.error_count,
-            )
-            self._set_state(result.state)
-            if (
-                is_import
-                and config.delete_files_after
-                and result.state == JobState.COMPLETED
-            ):
-                # POST stage carried over from the stopped run: the
-                # original DELETE_FILES never fired (the job stopped),
-                # so the resumed completion honors it.
-                self.dumpset.delete()
-            return self.get_status()
-        finally:
-            self._done_event.set()
-            deregister_job(self.job_name)
+        return self._execute(spark, remaining, config, engine_op, meta, True)
 
-    def _resume_intact(self, spark: SparkSession, plan, entry: dict) -> bool:
-        """Is a manifest-complete table's dump physically intact? Files
-        must exist; when the original run recorded CHECKSUM digests they
-        are recomputed (executor fan-out, same as VERIFY_CHECKSUM) and
-        compared — the digest map is the proof of completeness, so a
-        tampered file forces a re-export rather than a silent skip."""
+    def _resume_intact(self, spark: SparkSession, plan, entry: dict) -> str | None:
+        """Why a manifest-complete table's dump is not physically intact,
+        or None when it is. Files must exist; when the original run
+        recorded CHECKSUM digests they are recomputed (executor fan-out,
+        same as VERIFY_CHECKSUM) and compared — the digest map is the
+        proof of completeness, so a tampered file forces a re-export
+        rather than a silent skip."""
         tdir = self.dumpset.table_dir(plan.schema, plan.table)
         n_files = sum(1 for _ in data_file_paths(tdir))
         if n_files == 0:
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.source_key,
-                reason="no data files on disk",
-            )
-            return False
+            return "no data files on disk"
         cks = entry.get("checksums")
         if cks:
             fresh = self.dumpset.file_digests(
                 spark, tdir, cks.get("algorithm", "SHA256")
             )
             if fresh != cks.get("files"):
-                self.dumpset.log_event(
-                    "TABLE_RESUME_RECHECK_FAILED",
-                    table=plan.source_key,
-                    reason="checksum mismatch",
-                )
-                return False
+                return "checksum mismatch"
         elif entry.get("files") and n_files != entry["files"]:
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.source_key,
-                reason=f"file count {n_files} != recorded {entry['files']}",
-            )
-            return False
-        return True
+            return f"file count {n_files} != recorded {entry['files']}"
+        return None
 
-    def _transfer_intact(self, spark: SparkSession, plan, entry: dict) -> bool:
-        """Transfer-resume analog of _resume_intact: a NETWORK_LINK job
-        has no dump to digest, so completeness is verified against the
-        TARGET — the table must exist and its recomputed fingerprint
-        (row count + xxhash64-XOR content digest, engine.table_fingerprint)
-        must equal the values recorded at TABLE_TRANSFER_DONE. One
-        distributed scan per completed table, the same cost class as the
-        export path's digest recheck."""
+    def _transfer_intact(self, spark: SparkSession, plan, entry: dict) -> str | None:
+        """Target-side analog of _resume_intact for IMPORT and NETWORK_LINK
+        jobs, which have no new dump to digest: the target table must
+        exist and its recomputed fingerprint (row count + xxhash64-XOR
+        content digest, engine.table_fingerprint) must equal the values
+        recorded at TABLE_<op>_DONE. One distributed scan per completed
+        table, the same cost class as the export path's digest recheck."""
         from .engine import table_fingerprint
 
         if not self.connector.table_exists(
             plan.target_schema, plan.target_table
         ):
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.target_key,
-                reason="target table missing",
-            )
-            return False
+            return "target table missing"
         try:
             rows, digest = table_fingerprint(
                 self.connector.read_table(
@@ -1038,39 +952,29 @@ class Job:
         except Exception as e:
             # an unreadable target (all data files gone, corrupt footer)
             # is the strongest possible "not intact" — re-transfer it
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.target_key,
-                reason=f"target unreadable: {e}",
-            )
-            return False
+            return f"target unreadable: {e}"
         if rows != entry.get("row_count"):
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.target_key,
-                reason=f"target rows {rows} != recorded {entry.get('row_count')}",
-            )
-            return False
+            return f"target rows {rows} != recorded {entry.get('row_count')}"
         want = entry.get("target_digest")
         if want is not None and digest != want:
-            self.dumpset.log_event(
-                "TABLE_RESUME_RECHECK_FAILED",
-                table=plan.target_key,
-                reason="target content digest mismatch",
-            )
-            return False
-        return True
+            return "target content digest mismatch"
+        return None
 
     # -- attach (reference job.py:330-349, commands.py:69-89) --------------
+    def detach(self) -> None:
+        """DBMS_DATAPUMP.DETACH analog: release one attach() handle, so
+        attached_sessions stops counting it. The job keeps running."""
+        with self._lock:
+            self.attached_sessions -= 1
+
     @classmethod
     def attach(cls, job_name: str, dumpdir: str | None = None) -> "Job":
         existing = live_job(job_name)
         if isinstance(existing, Job):
             # DBA_DATAPUMP_JOBS attached_sessions analog: each live
             # attach handle counts alongside the owning run
-            existing.attached_sessions = (
-                getattr(existing, "attached_sessions", 1) + 1
-            )
+            with existing._lock:
+                existing.attached_sessions += 1
             return existing
         if dumpdir is None:
             raise JobNotFound(
@@ -1080,30 +984,16 @@ class Job:
         ds = DumpSet(dumpdir)
         if not ds.exists() and not list(ds.read_events()):
             raise JobNotFound(f"No job artifacts at {dumpdir}")
-        job = cls.__new__(cls)
-        job.operation = Operation.EXPORT
-        job.mode = JobMode.SCHEMA
-        job.dumpfiles = [dumpdir]
-        job.directives = []
-        job.connection = None
-        job.tag = None
-        job.job_name = job_name
-        job.job_owner = "spark"
-        job.job_date = None
-        job._state = JobState.NOT_RUNNING
-        job.attached_sessions = 1  # this attach handle
-        job._result = None
-        job._estimates = None
-        job._lock = threading.Lock()
-        job._stop_event = threading.Event()
+        job = cls(
+            Operation.EXPORT, JobMode.SCHEMA, dumpfiles=dumpdir,
+            job_name=job_name,
+        )
         job.dumpset = ds
-        job.connector = None
-        job.config = None
-        info = status_from_events(ds)
+        job.attached_sessions = 1  # this attach handle
         try:
-            job._state = JobState(info.job_state)
+            job._state = JobState(status_from_events(ds).job_state)
         except ValueError:
-            pass
+            job._state = JobState.NOT_RUNNING
         if ds.exists():
             m = ds.read_manifest()
             job.operation = Operation(m.operation)

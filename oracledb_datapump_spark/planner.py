@@ -82,6 +82,12 @@ class TablePlan:
     def target_key(self) -> str:
         return f"{self.target_schema}.{self.target_table}"
 
+    def event_key(self, operation: str) -> str:
+        """The table name every TABLE_<op>_* event carries: the source for
+        an EXPORT (the dump IS the source), the target for IMPORT and
+        TRANSFER (Oracle's master table names the remapped object)."""
+        return self.source_key if operation == "EXPORT" else self.target_key
+
     @property
     def incremental_append(self) -> bool:
         """An INCREMENTAL_COLUMN run past a recorded watermark: only newer

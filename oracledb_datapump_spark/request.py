@@ -2,7 +2,7 @@
 
 Parity reference: /root/reference/src/oracledb_datapump/request.py (279
 LoC): a ``Request`` envelope with request ∈ {SUBMIT, STATUS, POLL}, a typed
-payload, a handler registry keyed by request type (:112-124), and a
+payload, handlers keyed by request type (:112-124), and a
 ``Response`` echoing job name/state (:246-273). Implemented with plain
 dataclasses + explicit validation (no pydantic dependency); the JSON wire
 shapes match the reference's.
@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, Callable, ClassVar
+from typing import Any, Callable
 
 from .base import JobMode, Operation
 from .directives import DirectiveBase
@@ -84,178 +84,128 @@ class Response:
         return json.dumps(self.to_dict(), default=str)
 
 
-class RequestHandler:
-    """Registry-dispatched handlers (reference request.py:112-124)."""
-
-    registry: ClassVar[dict[str, type["RequestHandler"]]] = {}
-    REQUEST_TYPE: ClassVar[str] = ""
-
-    def __init_subclass__(cls, request_type: str | None = None, **kw):
-        super().__init_subclass__(**kw)
-        if request_type:
-            cls.REQUEST_TYPE = request_type
-            RequestHandler.registry[request_type] = cls
-
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        raise NotImplementedError
-
-    @staticmethod
-    def parse_directives(items: list[dict[str, Any]]) -> list[DirectiveBase]:
-        """Directive dicts → instances via the registry
-        (reference request.py:160-169)."""
-        return [DirectiveBase.from_dict(d) for d in items or []]
-
-
-class SubmitHandler(RequestHandler, request_type="SUBMIT"):
+def _submit(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """Reference JobRequestHandler (request.py:150-183)."""
+    op = payload.get("operation")
+    mode = payload.get("mode")
+    if not op or not mode:
+        raise UsageError("SUBMIT payload requires operation and mode")
+    job = Job(
+        operation=Operation(str(op).upper()),
+        mode=JobMode(str(mode).upper()),
+        dumpfiles=payload.get("dumpfiles"),
+        # directive dicts → instances via the directive registry
+        # (reference request.py:160-169)
+        directives=[
+            DirectiveBase.from_dict(d) for d in payload.get("directives") or []
+        ],
+        tag=payload.get("tag"),
+        job_name=payload.get("job_name"),
+    )
+    info = job.run(
+        wait=bool(payload.get("wait", False)), connection=connection, spark=spark
+    )
+    return Response(
+        request="SUBMIT",
+        job_name=job.job_name,
+        job_owner=job.job_owner,
+        state=info.job_state,
+        detail=info,
+    )
 
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        op = payload.get("operation")
-        mode = payload.get("mode")
-        if not op or not mode:
-            raise UsageError("SUBMIT payload requires operation and mode")
-        job = Job(
-            operation=Operation(str(op).upper()),
-            mode=JobMode(str(mode).upper()),
-            dumpfiles=payload.get("dumpfiles"),
-            directives=self.parse_directives(payload.get("directives", [])),
-            tag=payload.get("tag"),
-            job_name=payload.get("job_name"),
-        )
-        info = job.run(
-            wait=bool(payload.get("wait", False)), connection=connection, spark=spark
-        )
-        return Response(
-            request="SUBMIT",
-            job_name=job.job_name,
-            job_owner=job.job_owner,
-            state=info.job_state,
-            detail=info,
-        )
+
+def _on_job(
+    rtype: str,
+    payload: dict[str, Any],
+    act: Callable[[Job], JobStatusInfo | None],
+) -> Response:
+    """Attach to the payload's job (the live job named ``job_name``, else
+    the ``dumpdir`` dump set), apply ``act`` and answer with the status
+    it returns, or with the job's state when it returns none. The handle
+    is detached when the request returns: a protocol call is not a
+    DBA_DATAPUMP_JOBS session, so attached_sessions is left as found."""
+    job_name = payload.get("job_name")
+    if not job_name:
+        raise UsageError(f"{rtype} payload requires job_name")
+    dumpdir = payload.get("dumpdir") or (payload.get("dumpfiles") or [None])[0]
+    job = Job.attach(job_name, dumpdir=dumpdir)
+    try:
+        info = act(job)
+    finally:
+        job.detach()
+    return Response(
+        request=rtype,
+        job_name=job_name,
+        job_owner=job.job_owner,
+        state=info.job_state if info else job.state.value,
+        detail=info,
+    )
 
 
-class StatusHandler(RequestHandler, request_type="STATUS"):
+def _status(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """Reference JobStatusHandler (request.py:186-222)."""
-
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        job_name = payload.get("job_name")
-        dumpdir = payload.get("dumpdir") or (payload.get("dumpfiles") or [None])[0]
-        if not job_name:
-            raise UsageError("STATUS payload requires job_name")
-        job = Job.attach(job_name, dumpdir=dumpdir)
-        rt = payload.get("request_type")
-        request = (
-            StatusRequestType[rt.upper()] if rt else StatusRequestType.ALL
-        )
-        info = job.get_status(request)
-        return Response(
-            request="STATUS",
-            job_name=job_name,
-            job_owner=job.job_owner,
-            state=info.job_state,
-            detail=info,
-        )
+    rt = payload.get("request_type")
+    request = StatusRequestType[rt.upper()] if rt else StatusRequestType.ALL
+    return _on_job("STATUS", payload, lambda job: job.get_status(request))
 
 
-class PollHandler(RequestHandler, request_type="POLL"):
+def _poll(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """Reference PollRequestHandler (request.py:225-243)."""
-
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        job_name = payload.get("job_name")
-        dumpdir = payload.get("dumpdir") or (payload.get("dumpfiles") or [None])[0]
-        if not job_name:
-            raise UsageError("POLL payload requires job_name")
-        job = Job.attach(job_name, dumpdir=dumpdir)
-        info = job.poll_for_completion(rate=float(payload.get("rate", 30)))
-        return Response(
-            request="POLL",
-            job_name=job_name,
-            job_owner=job.job_owner,
-            state=info.job_state,
-            detail=info,
-        )
+    rate = float(payload.get("rate", 30))
+    return _on_job("POLL", payload, lambda job: job.poll_for_completion(rate=rate))
 
 
-class StopHandler(RequestHandler, request_type="STOP"):
+def _stop(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """STOP_JOB over the JSON protocol (public DBMS_DATAPUMP.STOP_JOB —
     the reference's request surface stops at SUBMIT/STATUS/POLL).
-    Cooperative table-boundary stop; the response reports the state at
-    request time (STOP_PENDING/STOPPING) — poll for STOPPED."""
-
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        job_name = payload.get("job_name")
-        if not job_name:
-            raise UsageError("STOP payload requires job_name")
-        job = Job.attach(job_name)  # live jobs only: a done job can't stop
-        info = job.stop()
-        return Response(
-            request="STOP",
-            job_name=job_name,
-            job_owner=job.job_owner,
-            state=info.job_state,
-            detail=info,
-        )
+    Cooperative table-boundary stop of a live job (a done job can't
+    stop); the response reports the state at request time
+    (STOP_PENDING/STOPPING) — poll for STOPPED."""
+    # job_name only: without a dumpdir, attach() finds live jobs alone
+    return _on_job("STOP", {"job_name": payload.get("job_name")}, Job.stop)
 
 
-class RestartHandler(RequestHandler, request_type="RESTART"):
+def _restart(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """START_JOB over the JSON protocol (public DBMS_DATAPUMP START_JOB:
     resume a STOPPED job from its master table — here, the dump-set
-    manifest). Synchronous: responds when the resumed job lands."""
-
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        job_name = payload.get("job_name")
-        dumpdir = payload.get("dumpdir") or (payload.get("dumpfiles") or [None])[0]
-        if not job_name:
-            raise UsageError("RESTART payload requires job_name")
-        job = Job.attach(job_name, dumpdir=dumpdir)
-        # encrypted jobs: the manifest holds only the redacted '***'
-        # sentinel, so the caller re-supplies the password here — the
-        # protocol analog of START_JOB re-prompting for it
-        info = job.restart(
-            connection=connection,
-            spark=spark,
-            password=payload.get("encryption_password"),
-        )
-        return Response(
-            request="RESTART",
-            job_name=job_name,
-            job_owner=job.job_owner,
-            state=info.job_state,
-            detail=info,
-        )
+    manifest). Synchronous: responds when the resumed job lands.
+    Encrypted jobs: the manifest holds only the redacted '***' sentinel,
+    so the caller re-supplies the password — the protocol analog of
+    START_JOB re-prompting for it."""
+    return _on_job("RESTART", payload, lambda job: job.restart(
+        connection=connection,
+        spark=spark,
+        password=payload.get("encryption_password"),
+    ))
 
 
-class ListJobsHandler(RequestHandler, request_type="LIST_JOBS"):
+def _list_jobs(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """DBA_DATAPUMP_JOBS over the JSON protocol: enumerate the live-job
     registry plus (optionally) every dump set under ``dump_root``, with
     operation/mode from the manifest and state replayed from the event
     log (reference status.py:366-385 reads the Oracle view; here the
     dump-set directory IS the master-table store)."""
+    from .status import list_jobs
 
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        from .status import list_jobs
-
-        rows = list_jobs(dump_root=payload.get("dump_root"))
-        return Response(request="LIST_JOBS", jobs=rows)
+    return Response(request="LIST_JOBS", jobs=list_jobs(payload.get("dump_root")))
 
 
-class KillHandler(RequestHandler, request_type="KILL"):
+def _kill(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """KILL_JOB over the JSON protocol: stop + delete the whole dump
     set (master table dropped — not attachable, not restartable)."""
+    return _on_job("KILL", payload, Job.kill)
 
-    def handle(self, payload: dict[str, Any], connection: Any, spark=None) -> Response:
-        job_name = payload.get("job_name")
-        dumpdir = payload.get("dumpdir") or (payload.get("dumpfiles") or [None])[0]
-        if not job_name:
-            raise UsageError("KILL payload requires job_name")
-        job = Job.attach(job_name, dumpdir=dumpdir)
-        job.kill()
-        return Response(
-            request="KILL",
-            job_name=job_name,
-            job_owner=job.job_owner,
-            state=job.state.value,
-        )
+
+# Handlers keyed by request type (reference request.py:112-124).
+HANDLERS: dict[str, Callable[..., Response]] = {
+    "SUBMIT": _submit,
+    "STATUS": _status,
+    "POLL": _poll,
+    "STOP": _stop,
+    "RESTART": _restart,
+    "LIST_JOBS": _list_jobs,
+    "KILL": _kill,
+}
 
 
 def handle_request(request: str | dict[str, Any], spark=None) -> Response:
@@ -270,11 +220,11 @@ def handle_request(request: str | dict[str, Any], spark=None) -> Response:
     if not isinstance(request, dict):
         raise UsageError("Request must be a JSON object")
     rtype = str(request.get("request", "")).upper()
-    handler_cls = RequestHandler.registry.get(rtype)
-    if handler_cls is None:
+    handler = HANDLERS.get(rtype)
+    if handler is None:
         raise UsageError(
             f"Unknown request type {rtype!r}; expected one of "
-            f"{sorted(RequestHandler.registry)}"
+            f"{sorted(HANDLERS)}"
         )
     payload = request.get("payload") or {}
     conn_obj = request.get("connection")
@@ -282,7 +232,7 @@ def handle_request(request: str | dict[str, Any], spark=None) -> Response:
         ConnectModel.from_obj(conn_obj).to_connection() if conn_obj else None
     )
     try:
-        return handler_cls().handle(payload, connection, spark=spark)
+        return handler(payload, connection, spark=spark)
     except (UsageError, JobNotFound):
         raise  # caller-addressable errors propagate (HTTP 400/404)
     except Exception as e:

@@ -36,10 +36,12 @@ def test_exclusions_carry_reasons():
 
 
 def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
-    """perfbench's --trace 1 patches engine and job functions in module
-    globals from outside. A refactor that calls them through a local
-    alias would make the per-layer metrics read 0 silently, so a tiny
-    EXPORT+IMPORT under instrument() must record every engine span."""
+    """perfbench's --trace 1 patches engine, job and request functions in
+    module globals from outside. A refactor that calls them through a
+    local alias would make the per-layer metrics read 0 silently, so a
+    tiny EXPORT+IMPORT under instrument() — the EXPORT async and polled
+    over the protocol, the path perfbench drives — must record every
+    span perfbench reads."""
     from oracledb_datapump_spark import catalog, dumpset, engine, job, request, session
     from oracledb_datapump_spark.directives import DirectiveBase as D
     from perfbench.spans import Tracer, instrument
@@ -54,10 +56,19 @@ def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
     try:
         tracer.active = True
         dump, wh = str(tmp_path / "dump"), str(tmp_path / "wh")
-        st = job.Job(
+        exp = job.Job(
             "EXPORT", "TABLE", dumpfiles=dump,
             directives=[D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("nation")],
-        ).run(connection=catalog.ParquetConnector(sf_dir), spark=spark)
+        )
+        exp.run(
+            wait=False, connection=catalog.ParquetConnector(sf_dir),
+            spark=spark,
+        )
+        request.handle_request({
+            "request": "STATUS",
+            "payload": {"job_name": exp.job_name, "dumpdir": dump},
+        })
+        st = exp.poll_for_completion(rate=0.05)
         assert st.job_state == "COMPLETED", st.error
         st = job.Job(
             "IMPORT", "TABLE", dumpfiles=dump,
@@ -70,6 +81,10 @@ def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
             "engine.export_table",
             "engine.import_table",
             "engine.table_fingerprint",
+            "planner.plan_export",
+            "planner.plan_import",
+            "status.status_from_events",
+            "request.submit",
         ):
             assert tracer.calls(name) >= 1, name
     finally:

@@ -394,3 +394,20 @@ def test_status_survives_torn_event_log_tail(tmp_path):
     with pytest.raises(json.JSONDecodeError):
         status_from_events(ds)
 
+
+def test_log_event_cuts_torn_tail_before_append(tmp_path):
+    """An append after a torn last line must not glue onto the fragment:
+    the torn bytes are cut, so every complete event and the new one read
+    back and no corrupt middle line is left behind."""
+    ds = DumpSet(str(tmp_path / "torn"))
+    ds.log_event("JOB_OPEN", job_name="J", operation="EXPORT")
+    ds.log_event("JOB_START")
+    with open(ds.events_path, "a") as f:
+        f.write('{"ts": "2026-01-01T00:00:00", "event": "TABLE_EXP')
+    ds.log_event("JOB_ERROR", error="writer restarted")
+    assert [e["event"] for e in ds.read_events()] == [
+        "JOB_OPEN", "JOB_START", "JOB_ERROR",
+    ]
+    with open(ds.events_path) as f:
+        assert f.read().endswith('"error": "writer restarted"}\n')
+

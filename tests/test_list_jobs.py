@@ -158,3 +158,79 @@ def test_attach_while_running_row_counts_sessions(spark, tmp_path):
     assert row["source"] == "events"
     assert row["attached_sessions"] == 0
     assert row["degree"] == 2
+
+
+def test_protocol_requests_do_not_count_sessions(spark, tmp_path):
+    """A STATUS request attaches only for its own duration: three of
+    them against a running job leave attached_sessions at the owning
+    run's 1, while a direct Job.attach handle still counts."""
+    import threading
+
+    from oracledb_datapump_spark.request import handle_request
+
+    stage = tmp_path / "stage"
+    spark.read.parquet("/root/testdata/sf0.001/region.parquet").write.parquet(
+        str(stage / "region.parquet")
+    )
+    gate = threading.Event()
+    release = threading.Event()
+
+    class SlowRead(ParquetConnector):
+        def read_table(self, spark, schema, table, **kwargs):
+            gate.set()
+            release.wait(timeout=30)
+            return super().read_table(spark, schema, table, **kwargs)
+
+    dump = str(tmp_path / "dump")
+    job = Job(
+        "EXPORT",
+        "TABLE",
+        dumpfiles=dump,
+        directives=[D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("region")],
+    )
+    try:
+        job.run(wait=False, connection=SlowRead(str(stage)), spark=spark)
+        assert gate.wait(timeout=30)
+        req = {
+            "request": "STATUS",
+            "payload": {"job_name": job.job_name, "dumpdir": dump},
+        }
+        for _ in range(3):
+            assert handle_request(req).state == "EXECUTING"
+        assert job.attached_sessions == 1
+        row = {r["job_name"]: r for r in list_jobs()}[job.job_name]
+        assert row["attached_sessions"] == 1
+    finally:
+        release.set()
+        job.poll_for_completion(rate=0.2)
+    assert job.state.value == "COMPLETED"
+
+
+def test_concurrent_requests_leave_sessions_as_found(tmp_path):
+    """attach() and the request's detach() both update one counter: 16
+    threads polling one live job at a shortened switch interval must not
+    lose an update."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from oracledb_datapump_spark.dumpset import DumpSet
+    from oracledb_datapump_spark.request import handle_request
+
+    dump = str(tmp_path / "dump")
+    job = Job("EXPORT", "TABLE", dumpfiles=dump, job_name="STRESS")
+    job.dumpset = DumpSet(dump)
+    job.dumpset.log_event("JOB_OPEN", job_name="STRESS", operation="EXPORT")
+    job.attached_sessions = 1
+    register_job("STRESS", job)
+    req = {"request": "STATUS", "payload": {"job_name": "STRESS"}}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [pool.submit(handle_request, req) for _ in range(400)]
+            states = {f.result(timeout=60).state for f in futures}
+    finally:
+        sys.setswitchinterval(interval)
+        deregister_job("STRESS")
+    assert states == {"DEFINING"}
+    assert job.attached_sessions == 1

@@ -52,6 +52,27 @@ def test_transfer_no_dump_files(spark, sf_dir, tmp_path):
     assert m.dumpfiles == [] and m.tables["main.nation"]["ok"]
 
 
+def test_transfer_events_carry_target_key(spark, sf_dir, tmp_path):
+    """Under REMAP_SCHEMA every TABLE_TRANSFER_* event names the target,
+    so STATUS shows one COMPLETED worker per target table and no
+    source-key worker left EXECUTING by a START logged under another
+    name."""
+    events, wh = str(tmp_path / "ev"), str(tmp_path / "wh")
+    st = _link_import(
+        spark, sf_dir, events, wh,
+        [
+            D.INCLUDE_TABLE("nation"),
+            D.INCLUDE_TABLE("region"),
+            D.REMAP_SCHEMA("main", "hr"),
+            D.TABLE_EXISTS_ACTION("REPLACE"),
+        ],
+    )
+    assert st.job_state == "COMPLETED", st.error
+    workers = st.job_status.worker_status_list
+    assert sorted(w.name for w in workers) == ["hr.nation", "hr.region"]
+    assert all(w.state == "COMPLETED" for w in workers)
+
+
 def test_transfer_predicate_and_columns(spark, sf_dir, tmp_path):
     events, wh = str(tmp_path / "ev"), str(tmp_path / "wh")
     st = _link_import(

@@ -204,6 +204,52 @@ def test_restart_skip_is_digest_verified_when_checksummed(
         assert meta.tables[f"main.{t}"]["checksums"]["files"], t
 
 
+def _crash_engine(monkeypatch):
+    from oracledb_datapump_spark import job as job_mod
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected engine crash")
+
+    monkeypatch.setattr(job_mod, "run_plans", crash)
+
+
+def _assert_closed_out(job: Job, dump: str) -> None:
+    """A crashed job ends in ERROR everywhere: the event log STATUS
+    replays, the handle's state, and the live-job registry."""
+    from oracledb_datapump_spark.status import live_job, status_from_events
+
+    assert status_from_events(DumpSet(dump)).job_state == JobState.ERROR.value
+    errors = [e["error"] for e in _events(dump) if e["event"] == "JOB_ERROR"]
+    assert errors == ["injected engine crash"]
+    assert job.state == JobState.ERROR
+    assert live_job(job.job_name) is None
+
+
+def test_sync_run_crash_closes_out_in_error(spark, sf_dir, tmp_path, monkeypatch):
+    from oracledb_datapump_spark.exceptions import JobError
+
+    stage = _stage(spark, sf_dir, tmp_path)
+    dump = str(tmp_path / "dump")
+    job = Job(
+        "EXPORT", "TABLE", dumpfiles=dump, directives=_export_directives()
+    )
+    _crash_engine(monkeypatch)
+    with pytest.raises(JobError, match="injected engine crash"):
+        job.run(wait=True, connection=ParquetConnector(stage), spark=spark)
+    _assert_closed_out(job, dump)
+
+
+def test_restart_crash_closes_out_in_error(spark, sf_dir, tmp_path, monkeypatch):
+    stage = _stage(spark, sf_dir, tmp_path)
+    dump = str(tmp_path / "dump")
+    job = _stopped_export(spark, stage, dump)
+    att = Job.attach(job.job_name, dumpdir=dump)
+    _crash_engine(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected engine crash"):
+        att.restart(connection=ParquetConnector(stage), spark=spark)
+    _assert_closed_out(att, dump)
+
+
 def test_stop_refuses_not_running(spark, sf_dir, tmp_path):
     job = Job("EXPORT", "TABLE", dumpfiles=str(tmp_path / "d"),
               directives=[D.INCLUDE_SCHEMA("main")])
