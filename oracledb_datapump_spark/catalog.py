@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import re
+from decimal import Decimal
 from typing import Any, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,7 +60,16 @@ class Connector(Protocol):
         mode: str = "error",
         truncate: bool = False,
         options: dict[str, str] | None = None,
-    ) -> None: ...
+    ) -> bool | None:
+        """Write ``df`` to ``schema.table`` under ``mode``. Return True
+        only when the target now holds exactly ``df``'s rows in a table
+        this call created or replaced, and ``read_table`` returns the
+        types written: the engine then takes the target fingerprint
+        from the write itself. Anything else (an append, a truncate, an
+        ``ignore`` write that found the table, a target whose types
+        change on the way in) returns False or None, and the engine
+        reads the target back."""
+        ...
 
     def drop_table(self, schema: str, table: str) -> None: ...
 
@@ -239,10 +249,10 @@ class ParquetConnector:
         mode: str = "error",
         truncate: bool = False,
         options: dict[str, str] | None = None,
-    ) -> None:
+    ) -> bool | None:
         path = self._path(schema, table)
         if mode == "ignore" and os.path.exists(path):
-            return
+            return None
         writer = df.write.mode("overwrite" if mode in ("overwrite",) else mode)
         if self.fmt == "csv":
             # source-style CSV tables stay self-describing (header row),
@@ -251,6 +261,8 @@ class ParquetConnector:
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
         writer.format(self.fmt).save(path)
+        # only parquet is known to read back exactly the types written
+        return self.fmt == "parquet" and mode != "append" and not truncate
 
     def drop_table(self, schema: str, table: str) -> None:
         import shutil
@@ -582,6 +594,8 @@ class SqliteConnector:
             for (c, d), v in zip(cols, r):
                 if v is not None and c in ts_cols:
                     v = v.strftime(self._TS_FMT)
+                elif isinstance(v, Decimal):  # sqlite3 binds no Decimal
+                    v = float(v)
                 vals.append(v)
             rows.append(tuple(vals))
         ddl_cols = ", ".join(f"{quote_ident(c)} {d}" for c, d in cols)
@@ -796,9 +810,14 @@ class DuckDbConnector:
         # pandas-inference config — read types must not depend on the
         # session
         df = spark.createDataFrame(arrow)
-        if parallel > 1:
-            df = df.repartition(parallel)
-        return df
+        # one partition per spark.sql.files.maxPartitionBytes (the file
+        # scan's split size) of rows, at most ``parallel``.
+        # createDataFrame alone spreads even 10 rows over every core, and
+        # a repartition to ``parallel`` would cost a shuffle: a small
+        # table is coalesced into one partition, so one dump file
+        conf = spark._jsparkSession.sessionState().conf()
+        n = max(1, min(parallel, -(-arrow.nbytes // conf.filesMaxPartitionBytes())))
+        return df.repartition(n) if n > 1 else df.coalesce(1)
 
     def write_table(
         self,
@@ -809,16 +828,19 @@ class DuckDbConnector:
         mode: str = "error",
         truncate: bool = False,
         options: dict[str, str] | None = None,
-    ) -> None:
+    ) -> bool | None:
         import pyarrow as pa
 
         fq = f"{quote_ident(schema)}.{quote_ident(table)}"
         exists = self.table_exists(schema, table)
         if mode == "ignore" and exists:
-            return
+            return None
         if mode == "error" and exists:
             raise FileError(f"Table exists: {schema}.{table}")
-        if exists and (mode == "append" or (mode == "overwrite" and truncate)):
+        into_existing = exists and (
+            mode == "append" or (mode == "overwrite" and truncate)
+        )
+        if into_existing:
             # strict schema contract: BY NAME binding below fixes column
             # ORDER, but DuckDB would also null-fill MISSING columns —
             # silently legitimizing drift the engine only permits under
@@ -855,24 +877,20 @@ class DuckDbConnector:
                 # incoming column order differs from the target's DDL
                 # (COLUMNS projection, reordered dump), positional insert
                 # silently swaps same-typed columns — data corruption
-                if mode == "overwrite":
-                    if truncate and exists:
+                if into_existing:
+                    if mode == "overwrite":
                         # TABLE_EXISTS_ACTION=TRUNCATE: keep DDL, delete rows
                         cur.execute(f"DELETE FROM {fq}")
-                        cur.execute(f"INSERT INTO {fq} BY NAME SELECT * FROM _dp_incoming")
-                    else:
-                        # TABLE_EXISTS_ACTION=REPLACE: drop & recreate
-                        cur.execute(f"CREATE OR REPLACE TABLE {fq} AS SELECT * FROM _dp_incoming")
-                elif mode == "append":
-                    if exists:
-                        cur.execute(f"INSERT INTO {fq} BY NAME SELECT * FROM _dp_incoming")
-                    else:
-                        cur.execute(f"CREATE TABLE {fq} AS SELECT * FROM _dp_incoming")
-                else:  # error / first write
+                    cur.execute(f"INSERT INTO {fq} BY NAME SELECT * FROM _dp_incoming")
+                elif mode == "overwrite":
+                    # TABLE_EXISTS_ACTION=REPLACE: drop & recreate
+                    cur.execute(f"CREATE OR REPLACE TABLE {fq} AS SELECT * FROM _dp_incoming")
+                else:  # error / ignore / append to a new table
                     cur.execute(f"CREATE TABLE {fq} AS SELECT * FROM _dp_incoming")
             finally:
                 if registered:
                     cur.unregister("_dp_incoming")
+        return not into_existing
 
     def drop_table(self, schema: str, table: str) -> None:
         with self._write_lock:

@@ -646,7 +646,9 @@ class _EnumParameter(Parameter, metaclass=_EnumValued):
 
 class Parallel(Parameter, name="PARALLEL"):
     """Degree of parallelism (reference directives.py:400-409). Maps to
-    JDBC numPartitions + repartition before write + driver table-pool size."""
+    JDBC numPartitions, the driver table-pool size, and the cap on a
+    DuckDB read's partitions: one per ``spark.sql.files.maxPartitionBytes``
+    of rows, at most PARALLEL (a small table is written as one file)."""
 
     def _coerce(self, value):
         n = int(value)

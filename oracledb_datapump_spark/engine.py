@@ -15,13 +15,17 @@ Each table runs as a short chain of plain stage functions over its
   scan, with the table's manifest entry read once);
 - row transforms: ``_transform_rows`` — SAMPLE → incremental watermark →
   DEDUP_KEEP_BEST → REMAP_DATA, one copy for EXPORT and TRANSFER;
-- layout: ``_layout`` — repartition, ZORDER or SORT (EXPORT);
+- layout: ``_layout`` — ZORDER or SORT (EXPORT);
 - sink: ``_write_dump`` (FILESIZE, ENCRYPTION) or ``_write_import_df``
   (TABLE_EXISTS_ACTION, schema evolution, and the MERGE family of
   ``merge.py``);
 - account: ``_account_export`` (footer counts, snapshots, watermark,
   checksums) or ``_fingerprint_done`` (the target fingerprint plus the
-  ``TABLE_*_DONE`` event).
+  ``TABLE_*_DONE`` event). A target the sink created or replaced from
+  the frame is fingerprinted on the write itself (an ``Observation``);
+  every other target is read back.
+
+A plain table move is thereby one Spark job: the write.
 
 ``export_table``, ``import_table`` and ``transfer_table`` chain them.
 Planning (``Job._thread_plan_extras``) owns every rule about which
@@ -45,7 +49,7 @@ import traceback
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -105,6 +109,13 @@ def _dump_reader(spark: SparkSession, fmt: str, schema=None):
     if fmt == "csv":
         reader = reader.option("header", "false").option("multiLine", "true")
     return reader.format(fmt)
+
+
+def _hive_leaves(d: str) -> list[str]:
+    """Names of the hive partition dirs (``col=value``) of a dump dir."""
+    return sorted(
+        n for n in os.listdir(d) if "=" in n and os.path.isdir(os.path.join(d, n))
+    )
 
 
 def _part_names(d: str) -> set:
@@ -348,11 +359,12 @@ def _read_dump(
     decrypted when the manifest records ENCRYPTION), then QUERY and
     COLUMNS."""
     schema = None
-    if fmt in ("json", "csv"):
+    if fmt in ("json", "csv") or (fmt == "parquet" and not _hive_leaves(src_dir)):
         # text formats carry no types — restore the exported Spark
         # schema from the manifest (export_table records it); without
         # it JSON falls back to inference and CSV cannot be read at
-        # all (headerless), so CSV requires the manifest.
+        # all (headerless), so CSV requires the manifest. A flat parquet
+        # dump takes it too: inferring it costs a Spark job per table.
         if tmeta.get("spark_schema"):
             schema = StructType.fromJson(_json.loads(tmeta["spark_schema"]))
         elif fmt == "csv":
@@ -459,12 +471,11 @@ def _transform_rows(df, plan: TablePlan):
 
 
 def _layout(df, plan: TablePlan):
-    """Layout stage (EXPORT). The read is connector-partitioned (JDBC
-    numPartitions / parquet splits); we only repartition *up* when the
-    source produced fewer partitions than the parallel budget — never a
-    gratuitous shuffle for already-wide data."""
-    if plan.parallel > 1 and df.rdd.getNumPartitions() < plan.parallel:
-        df = df.repartition(plan.parallel)
+    """Layout stage (EXPORT): ZORDER or SORT. The partitioning — one dump
+    file per partition — is the read's, and already by size: a file scan
+    splits by ``spark.sql.files.maxPartitionBytes``, the DuckDB read by
+    the same bytes capped at PARALLEL, a JDBC read by numPartitions. So
+    no shuffle, and no Spark job to count partitions, is spent here."""
     if plan.zorder_by:
         # multi-dimensional clustering: range shuffle + local sort on
         # the Morton value of the named columns (see functions.zorder)
@@ -620,7 +631,9 @@ def _write_import_df(
     dump): TABLE_EXISTS_ACTION incl. the MERGE family
     (MERGE_KEY/ORDER/DELETE_COL/PRUNE), schema evolution, and the final
     connector write. Returns the (possibly merged) frame that was
-    written."""
+    written, and — when the connector created or replaced the target
+    from exactly that frame — the ``Observation`` holding the target's
+    fingerprint (else None: the account stage reads the target back)."""
     mode, written = plan.write_mode, False
     if mode == "merge":
         df, written = merge_df(spark, connector, dumpset, plan, config, df)
@@ -631,16 +644,25 @@ def _write_import_df(
         and connector.table_exists(plan.target_schema, plan.target_table)
     ):
         df, mode = _evolve_append(spark, connector, plan, df)
-    if not written:
-        connector.write_table(
-            df,
-            plan.target_schema,
-            plan.target_table,
-            mode=mode,
-            truncate=plan.truncate,
-            options=plan.writer_options,
-        )
-    return df
+    if written:
+        return df, None
+    # REPLACE / SKIP / first write: fingerprint the rows as they are
+    # written (appends, truncates, merges and evolved appends change a
+    # table the frame is only part of)
+    obs = None
+    if mode == plan.write_mode != "append" and not plan.truncate:
+        obs = Observation()
+    created = connector.write_table(
+        df if obs is None else df.observe(obs, *_fingerprint_exprs(df)),
+        plan.target_schema,
+        plan.target_table,
+        mode=mode,
+        truncate=plan.truncate,
+        options=plan.writer_options,
+    )
+    # Observation.get blocks until an action runs: trust it only for a
+    # write the connector reports it ran into a table it created
+    return df, (obs if created else None)
 
 
 def _departition(
@@ -659,11 +681,7 @@ def _departition(
             f"PARTITION_OPTIONS(DEPARTITION) requires a parquet "
             f"dump; this dump is {fmt} (DUMP_FORMAT)"
         )
-    part_dirs = sorted(
-        d
-        for d in os.listdir(src_dir)
-        if os.path.isdir(os.path.join(src_dir, d)) and "=" in d
-    )
+    part_dirs = _hive_leaves(src_dir)
     if not part_dirs:
         return None
     for d in part_dirs:
@@ -835,25 +853,35 @@ def _hashable_expr(col, dt):
     return col
 
 
-def table_fingerprint(df) -> tuple[int, str]:
-    """Order-independent target-table content fingerprint for transfer/
-    import resume: row COUNT + XOR of per-row xxhash64 over all columns
-    (sorted by name so projection order can't change the value; map
-    columns canonicalized via _hashable_expr). One distributed scan, two
-    scalars to the driver — the transfer analog of the dump's CHECKSUM
-    digest map (there is no dump file to digest)."""
-    from pyspark.sql import functions as F
-
+def _fingerprint_exprs(df) -> list:
+    """The fingerprint's two aggregates over ``df``: ``n`` (row count)
+    and ``d`` (XOR of per-row xxhash64 over all columns, sorted by name
+    so projection order can't change the value; map columns
+    canonicalized via _hashable_expr)."""
     dtypes = dict(zip(df.schema.names, (f.dataType for f in df.schema.fields)))
     cols = [
         _hashable_expr(F.col(c), dtypes[c]) for c in sorted(df.columns)
     ]
-    row = df.select(
+    return [
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64(*cols)).alias("d"),
-    ).first()
+    ]
+
+
+def _fingerprint_value(row) -> tuple[int, str]:
+    """(rows, digest) from a row of ``_fingerprint_exprs``; the digest of
+    an empty table (a null XOR) is "0"."""
     d = row["d"]
     return int(row["n"]), str(0 if d is None else int(d))
+
+
+def table_fingerprint(df) -> tuple[int, str]:
+    """Order-independent target-table content fingerprint for transfer/
+    import resume: row COUNT + XOR of per-row xxhash64 over all columns.
+    One distributed scan, two scalars to the driver — the transfer
+    analog of the dump's CHECKSUM digest map (there is no dump file to
+    digest)."""
+    return _fingerprint_value(df.select(*_fingerprint_exprs(df)).first())
 
 
 def _fingerprint_done(
@@ -863,18 +891,24 @@ def _fingerprint_done(
     plan: TablePlan,
     operation: str,
     rows: int | None = None,
+    observed: Observation | None = None,
 ) -> tuple[int, str]:
     """Account tail shared by IMPORT and TRANSFER (START_JOB parity):
     record the TARGET's post-load fingerprint in TABLE_<op>_DONE so
     Job.restart() can digest-verify and skip this table wholesale (there
     is no NEW dump file to checksum; the master-table analog must
-    describe the target). One extra count+xxhash64 aggregate over the
-    just-written table; at 100 TB that is the price of resuming a
-    stopped multi-hour import instead of re-running it. ``rows`` is the
-    dump's row count on IMPORT; TRANSFER reports the target's."""
-    t_rows, t_digest = table_fingerprint(
-        connector.read_table(spark, plan.target_schema, plan.target_table)
-    )
+    describe the target). ``observed`` is the fingerprint the sink took
+    on the write of a created or replaced target; without it, one
+    count+xxhash64 aggregate reads the just-written table back — at
+    100 TB the price of resuming a stopped multi-hour import instead of
+    re-running it. ``rows`` is the dump's row count on IMPORT; TRANSFER
+    reports the target's."""
+    if observed is not None:
+        t_rows, t_digest = _fingerprint_value(observed.get)
+    else:
+        t_rows, t_digest = table_fingerprint(
+            connector.read_table(spark, plan.target_schema, plan.target_table)
+        )
     counts = {"rows": t_rows} if rows is None else {
         "rows": rows, "target_rows": t_rows,
     }
@@ -995,7 +1029,7 @@ def import_table(
         if res is not None:
             return res
     df = _read_dump(spark, plan, config, src_dir, fmt, tmeta)
-    df = _write_import_df(spark, connector, dumpset, plan, config, df)
+    df, observed = _write_import_df(spark, connector, dumpset, plan, config, df)
     enc = tmeta.get("encryption")
     if enc:
         # sealed footers (ALL/METADATA_ONLY) need the key for the
@@ -1026,7 +1060,7 @@ def import_table(
                 f"VALIDATE_TBL_DATA: wrote {written} rows, expected {expect}"
             )
     t_rows, t_digest = _fingerprint_done(
-        spark, connector, dumpset, plan, "IMPORT", rows=rows
+        spark, connector, dumpset, plan, "IMPORT", rows=rows, observed=observed
     )
     return TableResult(
         plan,
@@ -1066,9 +1100,9 @@ def transfer_table(
     df, _ = _transform_rows(
         _read_source(spark, plan.src_connector, dumpset, plan), plan
     )
-    _write_import_df(spark, connector, dumpset, plan, config, df)
+    _, observed = _write_import_df(spark, connector, dumpset, plan, config, df)
     rows, digest = _fingerprint_done(
-        spark, connector, dumpset, plan, "TRANSFER"
+        spark, connector, dumpset, plan, "TRANSFER", observed=observed
     )
     return TableResult(
         plan,

@@ -859,11 +859,13 @@ ROUNDTRIP_REMAP_DATA_SQL = _roundtrip_remap_data_sql()
 
 def datapump_roundtrip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dump-set compaction (S6 maintenance) under the driver hash:
-    export ``supplier`` with PARALLEL(4) (a fragmented multi-part
-    layout), run ``DumpSet.compact`` toward one large file, import the
-    compacted dump and read it back. Two sentinel columns ride every
-    row — ``was_fragmented`` (the pre-compaction layout really had ≥2
-    part files) and ``n_files_after`` (the compacted layout) — so the
+    export ``supplier`` from a copy staged as four part files (an export
+    keeps its file source's partitioning, so the dump is a fragmented
+    multi-part layout), run ``DumpSet.compact`` toward one large file,
+    import the compacted dump and read it back. Two sentinel columns
+    ride every row — ``was_fragmented`` (the pre-compaction layout
+    really had ≥2 part files) and ``n_files_after`` (the compacted
+    layout) — so the
     oracle pins BOTH that compaction consolidated the layout AND that
     it moved no rows and altered no values (compaction is coalesce +
     atomic swap, never a shuffle; see dumpset.py:206-224). pytest
@@ -873,19 +875,18 @@ def datapump_roundtrip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..dumpset import DumpSet
 
-    src = ParquetConnector(sf_dir)
+    stage = tempfile.mkdtemp(prefix="dp_rt_cp_stage_")
     dump = tempfile.mkdtemp(prefix="dp_rt_cp_")
     try:
+        spark.read.parquet(f"{sf_dir}/supplier.parquet").repartition(4).write.parquet(
+            _os.path.join(stage, "supplier.parquet")
+        )
         st = Job(
             Operation.EXPORT,
             JobMode.TABLE,
             dumpfiles=dump,
-            directives=[
-                D.INCLUDE_SCHEMA("main"),
-                D.INCLUDE_TABLE("supplier"),
-                D.PARALLEL(4),
-            ],
-        ).run(wait=True, connection=src, spark=spark)
+            directives=[D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("supplier")],
+        ).run(wait=True, connection=ParquetConnector(stage), spark=spark)
         if st.job_state != "COMPLETED":
             raise RuntimeError(f"export failed: {st.job_state}: {st.error}")
         ds = DumpSet(dump)
@@ -920,6 +921,7 @@ def datapump_roundtrip_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("s_suppkey")
         )
     finally:
+        shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(dump, ignore_errors=True)
 
 

@@ -41,7 +41,9 @@ def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
     local alias would make the per-layer metrics read 0 silently, so a
     tiny EXPORT+IMPORT under instrument() — the EXPORT async and polled
     over the protocol, the path perfbench drives — must record every
-    span perfbench reads."""
+    span perfbench reads. The IMPORT runs twice: REPLACE, whose target
+    fingerprint is taken on the write, then APPEND, which reads the
+    target back through ``engine.table_fingerprint``."""
     from oracledb_datapump_spark import catalog, dumpset, engine, job, request, session
     from oracledb_datapump_spark.directives import DirectiveBase as D
     from perfbench.spans import Tracer, instrument
@@ -73,6 +75,14 @@ def test_perfbench_wrap_points_record_spans(spark, sf_dir, tmp_path):
         st = job.Job(
             "IMPORT", "TABLE", dumpfiles=dump,
             directives=[D.TABLE_EXISTS_ACTION("REPLACE")],
+        ).run(connection=catalog.ParquetConnector(wh), spark=spark)
+        assert st.job_state == "COMPLETED", st.error
+        # a replaced target is fingerprinted on the write, never read back
+        assert tracer.calls("engine.table_fingerprint") == 0
+        # an APPEND still reads its target back through the wrapped name
+        st = job.Job(
+            "IMPORT", "TABLE", dumpfiles=dump,
+            directives=[D.TABLE_EXISTS_ACTION("APPEND")],
         ).run(connection=catalog.ParquetConnector(wh), spark=spark)
         assert st.job_state == "COMPLETED", st.error
         tracer.active = False

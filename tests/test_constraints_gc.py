@@ -104,16 +104,22 @@ def test_dumpset_compact(spark, tmp_path):
     src = DuckDbConnector(":memory:")
     src.load_parquet_dir("hr", "/root/testdata/sf0.001")
     dump = f"{tmp_path}/dump"
-    st = Job(
-        "EXPORT",
-        "TABLE",
-        dumpfiles=dump,
-        directives=[
-            D.INCLUDE_SCHEMA("hr"),
-            D.INCLUDE_TABLE("lineitem"),
-            D.PARALLEL(8),
-        ],
-    ).run(connection=src, spark=spark)
+    # a table below spark.sql.files.maxPartitionBytes exports as one file;
+    # a low cap spreads it over the PARALLEL budget
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        st = Job(
+            "EXPORT",
+            "TABLE",
+            dumpfiles=dump,
+            directives=[
+                D.INCLUDE_SCHEMA("hr"),
+                D.INCLUDE_TABLE("lineitem"),
+                D.PARALLEL(8),
+            ],
+        ).run(connection=src, spark=spark)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert st.job_state == "COMPLETED"
     ds = DumpSet(dump)
     before = ds.get_dumpfile_info("hr", "lineitem")
@@ -145,11 +151,17 @@ def test_compact_crash_recovery(spark, tmp_path):
     src = DuckDbConnector(":memory:")
     src.load_parquet_dir("hr", "/root/testdata/sf0.001")
     dump = f"{tmp_path}/dump"
-    st = Job(
-        "EXPORT", "TABLE", dumpfiles=dump,
-        directives=[D.INCLUDE_SCHEMA("hr"), D.INCLUDE_TABLE("orders"),
-                    D.PARALLEL(8)],
-    ).run(connection=src, spark=spark)
+    # a table below spark.sql.files.maxPartitionBytes exports as one file;
+    # a low cap spreads it over the PARALLEL budget
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        st = Job(
+            "EXPORT", "TABLE", dumpfiles=dump,
+            directives=[D.INCLUDE_SCHEMA("hr"), D.INCLUDE_TABLE("orders"),
+                        D.PARALLEL(8)],
+        ).run(connection=src, spark=spark)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert st.job_state == "COMPLETED"
     ds = DumpSet(dump)
     d = ds.table_dir("hr", "orders")

@@ -176,17 +176,23 @@ def test_export_zorder_by_clusters_rows(spark, tmp_path):
     src = DuckDbConnector(":memory:")
     src.load_parquet_dir("hr", "/root/testdata/sf0.001")
     dump = f"{tmp_path}/dump"
-    st = Job(
-        "EXPORT",
-        "TABLE",
-        dumpfiles=dump,
-        directives=[
-            D.INCLUDE_SCHEMA("hr"),
-            D.INCLUDE_TABLE("lineitem"),
-            D.PARALLEL(4),
-            D.EXPORT_ZORDER_BY("l_orderkey,l_partkey"),
-        ],
-    ).run(connection=src, spark=spark)
+    # a table below spark.sql.files.maxPartitionBytes exports as one file;
+    # a low cap spreads it over the PARALLEL budget
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        st = Job(
+            "EXPORT",
+            "TABLE",
+            dumpfiles=dump,
+            directives=[
+                D.INCLUDE_SCHEMA("hr"),
+                D.INCLUDE_TABLE("lineitem"),
+                D.PARALLEL(4),
+                D.EXPORT_ZORDER_BY("l_orderkey,l_partkey"),
+            ],
+        ).run(connection=src, spark=spark)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert st.job_state == "COMPLETED"
     files = sorted(glob.glob(f"{dump}/**/*.parquet", recursive=True))
     assert len(files) >= 2

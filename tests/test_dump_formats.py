@@ -93,17 +93,23 @@ def test_compact_rejects_non_parquet_dump(spark, duck, tmp_path):
     from oracledb_datapump_spark.exceptions import Unsupported
 
     dump = str(tmp_path / "orc_compact")
-    Job(
-        operation=Operation.EXPORT,
-        mode=JobMode.TABLE,
-        dumpfiles=dump,
-        directives=[
-            D.INCLUDE_SCHEMA("test1"),
-            D.INCLUDE_TABLE("orders"),
-            D.DUMP_FORMAT("ORC"),
-            D.PARALLEL(4),  # several small files so compact would trigger
-        ],
-    ).run(wait=True, connection=duck, spark=spark)
+    # a table below spark.sql.files.maxPartitionBytes exports as one file;
+    # a low cap spreads it over the PARALLEL budget
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        Job(
+            operation=Operation.EXPORT,
+            mode=JobMode.TABLE,
+            dumpfiles=dump,
+            directives=[
+                D.INCLUDE_SCHEMA("test1"),
+                D.INCLUDE_TABLE("orders"),
+                D.DUMP_FORMAT("ORC"),
+                D.PARALLEL(4),  # several small files so compact would trigger
+            ],
+        ).run(wait=True, connection=duck, spark=spark)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     with pytest.raises(Unsupported, match="parquet dumps only"):
         DumpSet(dump).compact(spark, target_file_bytes=10**9, min_files=2)
 

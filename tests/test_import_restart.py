@@ -28,7 +28,7 @@ import os
 import pytest
 
 from oracledb_datapump_spark.base import JobState
-from oracledb_datapump_spark.catalog import ParquetConnector
+from oracledb_datapump_spark.catalog import DuckDbConnector, ParquetConnector
 from oracledb_datapump_spark.directives import DirectiveBase as D
 from oracledb_datapump_spark.dumpset import DumpSet
 from oracledb_datapump_spark.exceptions import UsageError
@@ -44,6 +44,22 @@ class StopOnFirstWrite(ParquetConnector):
 
     def __init__(self, root: str):
         super().__init__(root)
+        self.job: Job | None = None
+        self.writes = 0
+
+    def write_table(self, df, schema, table, **kwargs):
+        self.writes += 1
+        if self.writes == 1 and self.job is not None:
+            self.job.stop()
+        return super().write_table(df, schema, table, **kwargs)
+
+
+class DuckStopOnFirstWrite(DuckDbConnector):
+    """StopOnFirstWrite for a DuckDB target, whose recorded fingerprints
+    are taken on the write rather than read back."""
+
+    def __init__(self, path: str):
+        super().__init__(path)
         self.job: Job | None = None
         self.writes = 0
 
@@ -73,10 +89,10 @@ def _export(spark, stage, dump, extra=()):
     assert st.job_state == JobState.COMPLETED.value, st.job_state
 
 
-def _stopped_import(spark, dump, wh, extra=()):
+def _stopped_import(spark, dump, wh, extra=(), tgt=None):
     """Returns (job, index of this run's first event)."""
     n0 = len(list(DumpSet(dump).read_events()))
-    tgt = StopOnFirstWrite(wh)
+    tgt = StopOnFirstWrite(wh) if tgt is None else tgt
     job = Job(
         "IMPORT", "TABLE", dumpfiles=dump,
         directives=[D.TABLE_EXISTS_ACTION("REPLACE")] + list(extra),
@@ -165,6 +181,66 @@ def test_restart_reimports_tampered_target(spark, sf_dir, tmp_path):
     for tab in TABLES:
         assert (
             out.read_table(spark, "main", tab).count()
+            == spark.read.parquet(f"{sf_dir}/{tab}.parquet").count()
+        )
+
+
+def test_restart_skips_verified_duckdb_target(spark, sf_dir, tmp_path):
+    stage = _stage(spark, sf_dir, tmp_path)
+    dump = str(tmp_path / "dump")
+    _export(spark, stage, dump)
+    tgt = DuckStopOnFirstWrite(str(tmp_path / "wh.duckdb"))
+    job, n0 = _stopped_import(spark, dump, None, tgt=tgt)
+    done1 = [
+        e["table"]
+        for e in _evs(dump, n0)
+        if e["event"] == "TABLE_IMPORT_DONE"
+    ]
+    st = Job.attach(job.job_name, dumpdir=dump).restart(
+        connection=tgt, spark=spark
+    )
+    assert st.job_state == JobState.COMPLETED.value
+    evs = _evs(dump, n0)
+    assert [
+        e["table"] for e in evs if e["event"] == "TABLE_RESUME_SKIP"
+    ] == done1
+    all_done = [e["table"] for e in evs if e["event"] == "TABLE_IMPORT_DONE"]
+    assert sorted(all_done) == sorted(f"main.{t}" for t in TABLES)
+    for t in TABLES:
+        assert (
+            tgt.read_table(spark, "main", t).count()
+            == spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+        )
+
+
+def test_restart_reimports_tampered_duckdb_target(spark, sf_dir, tmp_path):
+    stage = _stage(spark, sf_dir, tmp_path)
+    dump = str(tmp_path / "dump")
+    _export(spark, stage, dump)
+    tgt = DuckStopOnFirstWrite(str(tmp_path / "wh.duckdb"))
+    job, n0 = _stopped_import(spark, dump, None, tgt=tgt)
+    first = [
+        e["table"]
+        for e in _evs(dump, n0)
+        if e["event"] == "TABLE_IMPORT_DONE"
+    ][0]
+    s, t = first.split(".")
+    remnant = tgt.read_table(spark, s, t).limit(1).localCheckpoint(eager=True)
+    tgt.write_table(remnant, s, t, mode="overwrite")
+    st = Job.attach(job.job_name, dumpdir=dump).restart(
+        connection=tgt, spark=spark
+    )
+    assert st.job_state == JobState.COMPLETED.value
+    evs = _evs(dump, n0)
+    assert [
+        e["table"]
+        for e in evs
+        if e["event"] == "TABLE_RESUME_RECHECK_FAILED"
+    ] == [first]
+    assert not any(e["event"] == "TABLE_RESUME_SKIP" for e in evs)
+    for tab in TABLES:
+        assert (
+            tgt.read_table(spark, "main", tab).count()
             == spark.read.parquet(f"{sf_dir}/{tab}.parquet").count()
         )
 
