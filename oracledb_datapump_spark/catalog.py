@@ -68,7 +68,13 @@ class Connector(Protocol):
         from the write itself. Anything else (an append, a truncate, an
         ``ignore`` write that found the table, a target whose types
         change on the way in) returns False or None, and the engine
-        reads the target back."""
+        reads the target back.
+
+        A connector that holds rows on the driver offers
+        ``read_arrow(schema, table, *, predicate, columns)`` returning a
+        ``pyarrow.Table``, and its ``write_table`` also accepts a
+        ``pyarrow.Table`` as ``df``; the engine then moves a small table
+        without a Spark job."""
         ...
 
     def drop_table(self, schema: str, table: str) -> None: ...
@@ -105,6 +111,24 @@ def quote_ident(name: str) -> str:
     if _IDENT_RE.match(name):
         return name
     return '"' + name.replace('"', '""') + '"'
+
+
+def arrow_frame(spark: SparkSession, arrow, parallel: int = 1) -> DataFrame:
+    """A driver-held Arrow table as a Spark frame, partitioned by size.
+
+    The frame comes from ``createDataFrame(arrow)`` (PySpark 4): the Spark
+    schema derives from the Arrow types, so INTEGER stays int32 instead of
+    drifting with the session's pandas-inference config — read types
+    must not depend on the session. It gets one partition per
+    ``spark.sql.files.maxPartitionBytes`` (the file scan's split size) of
+    Arrow bytes, at most ``parallel``. ``createDataFrame`` alone spreads
+    even 10 rows over every core, and a repartition to ``parallel`` would
+    cost a shuffle: a small table is coalesced into one partition, so one
+    dump file."""
+    df = spark.createDataFrame(arrow)
+    conf = spark._jsparkSession.sessionState().conf()
+    n = max(1, min(parallel, -(-arrow.nbytes // conf.filesMaxPartitionBytes())))
+    return df.repartition(n) if n > 1 else df.coalesce(1)
 
 
 class ParquetConnector:
@@ -771,7 +795,12 @@ class DuckDbConnector:
         return [r[0] for r in rows]
 
     def table_exists(self, schema: str, table: str) -> bool:
-        return table in self.list_tables(schema)
+        # a point lookup over base tables, like list_tables
+        return self._cursor().execute(
+            "SELECT 1 FROM duckdb_tables() "
+            "WHERE schema_name = ? AND table_name = ? AND NOT temporary",
+            [schema, table],
+        ).fetchone() is not None
 
     def list_views(self, schema: str) -> list[str]:
         rows = self._cursor().execute(
@@ -788,6 +817,22 @@ class DuckDbConnector:
             )
 
     # -- I/O --------------------------------------------------------------
+    def read_arrow(
+        self,
+        schema: str,
+        table: str,
+        *,
+        predicate: str | None = None,
+        columns: list[str] | None = None,
+    ):
+        """The table, filtered and pruned in SQL, as one Arrow table on the
+        driver."""
+        cols = ", ".join(quote_ident(c) for c in columns) if columns else "*"
+        sql = f"SELECT {cols} FROM {quote_ident(schema)}.{quote_ident(table)}"
+        if predicate:
+            sql += f" WHERE {predicate}"
+        return self._cursor().execute(sql).fetch_arrow_table()
+
     def read_table(
         self,
         spark: SparkSession,
@@ -799,25 +844,8 @@ class DuckDbConnector:
         predicate: str | None = None,
         columns: list[str] | None = None,
     ) -> DataFrame:
-        cols = ", ".join(quote_ident(c) for c in columns) if columns else "*"
-        sql = f"SELECT {cols} FROM {quote_ident(schema)}.{quote_ident(table)}"
-        if predicate:
-            sql += f" WHERE {predicate}"
-        arrow = self._cursor().execute(sql).fetch_arrow_table()
-        # hand Spark the arrow table directly (PySpark 4): the Spark
-        # schema derives from the arrow types, so INTEGER stays int32
-        # instead of drifting to BIGINT/INTEGER with the session's
-        # pandas-inference config — read types must not depend on the
-        # session
-        df = spark.createDataFrame(arrow)
-        # one partition per spark.sql.files.maxPartitionBytes (the file
-        # scan's split size) of rows, at most ``parallel``.
-        # createDataFrame alone spreads even 10 rows over every core, and
-        # a repartition to ``parallel`` would cost a shuffle: a small
-        # table is coalesced into one partition, so one dump file
-        conf = spark._jsparkSession.sessionState().conf()
-        n = max(1, min(parallel, -(-arrow.nbytes // conf.filesMaxPartitionBytes())))
-        return df.repartition(n) if n > 1 else df.coalesce(1)
+        arrow = self.read_arrow(schema, table, predicate=predicate, columns=columns)
+        return arrow_frame(spark, arrow, parallel)
 
     def write_table(
         self,
@@ -851,7 +879,7 @@ class DuckDbConnector:
                 r[0]
                 for r in self.execute(f"DESCRIBE {fq}").fetchall()
             }
-            incoming = set(df.columns)
+            incoming = set(df.schema.names)
             if incoming != target_cols:
                 raise FileError(
                     f"Schema drift writing {schema}.{table}: incoming "
@@ -860,9 +888,8 @@ class DuckDbConnector:
                     "DATA_OPTIONS(ALLOW_SCHEMA_EVOLUTION) to reconcile)"
                 )
         self.ensure_schema(schema)
-        batches = df.toArrow()  # Arrow table on the driver (test-scale only)
-        if not isinstance(batches, pa.Table):  # pragma: no cover
-            batches = pa.Table.from_batches(list(batches))
+        # Arrow table on the driver (test-scale only)
+        batches = df if isinstance(df, pa.Table) else df.toArrow()
         # One cursor for the whole register → DML sequence (cursor-local
         # view), serialized: DuckDB rejects concurrent catalog writes.
         # The lock is held via `with` so a failing _cursor()/register can

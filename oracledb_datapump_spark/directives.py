@@ -648,7 +648,9 @@ class Parallel(Parameter, name="PARALLEL"):
     """Degree of parallelism (reference directives.py:400-409). Maps to
     JDBC numPartitions, the driver table-pool size, and the cap on a
     DuckDB read's partitions: one per ``spark.sql.files.maxPartitionBytes``
-    of rows, at most PARALLEL (a small table is written as one file)."""
+    of rows, at most PARALLEL (a small table is written as one file). A
+    DuckDB table within one Arrow batch and one file split moves on the
+    driver with no Spark job, so it takes a pool thread and no executor."""
 
     def _coerce(self, value):
         n = int(value)
@@ -899,6 +901,11 @@ class EstimateOnly(Parameter, name="ESTIMATE_ONLY"):
 
 
 class DataAccessMethod(_EnumParameter, name="DATA_ACCESS_METHOD"):
+    """Recorded, not acted on: the engine picks the path per table from
+    its size (the Arrow lane for a small driver-resident table, Spark for
+    the rest), the way Oracle picks direct path for small simple
+    tables."""
+
     VALUES = ("AUTOMATIC", "DIRECT_PATH", "EXTERNAL_TABLE")
 
     def apply(self, config: PlanConfig) -> None:

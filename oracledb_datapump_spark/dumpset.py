@@ -351,60 +351,52 @@ class DumpSet:
             os.rename(d, old)
             os.rename(tmp, d)
             shutil.rmtree(old)
-            after = len(
-                [
-                    p
-                    for p in glob.glob(os.path.join(d, "*"))
-                    if os.path.isfile(p)
-                    and not os.path.basename(p).startswith(("_", "."))
-                ]
-            )
+            new = [
+                p
+                for p in glob.glob(os.path.join(d, "*"))
+                if os.path.isfile(p)
+                and not os.path.basename(p).startswith(("_", "."))
+            ]
+            after = len(new)
             report[f"{schema}.{table}"] = {
                 "files_before": len(parts),
                 "files_after": after,
                 "bytes": nbytes,
             }
-            # Snapshot-history rewrite (round-9 advisor finding): the
-            # rewrite above replaced every part-file under new names, so
-            # any AS_OF_VERSION file lists in the manifest now reference
-            # deleted files — time travel would fail path-not-exist (or
-            # silently drop files under ignoreMissingFiles). Collapse the
-            # table's history to a single snapshot at the PRIOR latest
-            # version number listing the new files: AS_OF_VERSION(latest)
-            # keeps returning the full table, earlier versions fail loud
-            # ("no data files recorded"), and the logged event records
-            # the intentional history loss.
+            tmeta = None
             if self.exists():
                 meta = self.read_manifest()
                 tmeta = meta.tables.get(f"{schema}.{table}")
-                snaps = (tmeta or {}).get("snapshots")
+            if tmeta:
+                # the manifest describes the new layout: its file count
+                # and bytes are what IMPORT and restart() check the
+                # table dir against
+                tmeta["files"] = after
+                tmeta["bytes"] = sum(os.path.getsize(p) for p in new)
+                # Snapshot-history rewrite: the rewrite above replaced
+                # every part-file under new names, so any AS_OF_VERSION
+                # file lists in the manifest now reference deleted files
+                # — time travel would fail path-not-exist (or silently
+                # drop files under ignoreMissingFiles). Collapse the
+                # table's history to a single snapshot at the PRIOR
+                # latest version number listing the new files:
+                # AS_OF_VERSION(latest) keeps returning the full table,
+                # earlier versions fail loud ("no data files recorded"),
+                # and the logged event records the intentional history
+                # loss.
+                snaps = tmeta.get("snapshots")
                 if snaps:
                     latest = max(s["version"] for s in snaps)
-                    new_files = sorted(
-                        os.path.basename(p)
-                        for p in glob.glob(os.path.join(d, "part-*"))
-                        if os.path.isfile(p)
-                    )
-                    tmeta["snapshots"] = [
-                        {"version": latest, "files": new_files}
-                    ]
-                    self.write_manifest(meta)
-                    self.log_event(
-                        "SNAPSHOT_HISTORY_COLLAPSED",
-                        table=f"{schema}.{table}",
-                        kept_version=latest,
-                        dropped_versions=latest - 1,
-                    )
-            # Checksum refresh (same failure class as the snapshot-
-            # history rewrite above): the compaction replaced every part
-            # file, so recorded CHECKSUM digests now describe deleted
-            # files and VERIFY_CHECKSUM would refuse a perfectly healthy
-            # dump. Recompute over the new layout with the recorded
-            # algorithm and log the refresh.
-            if self.exists():
-                meta = self.read_manifest()
-                tmeta = meta.tables.get(f"{schema}.{table}")
-                cks = (tmeta or {}).get("checksums")
+                    tmeta["snapshots"] = [{
+                        "version": latest,
+                        "files": sorted(os.path.basename(p) for p in new),
+                    }]
+                # Checksum refresh (same failure class): recorded
+                # CHECKSUM digests now describe deleted files and
+                # VERIFY_CHECKSUM would refuse a perfectly healthy dump.
+                # Recompute over the new layout with the recorded
+                # algorithm.
+                cks = tmeta.get("checksums")
                 if cks:
                     tmeta["checksums"] = {
                         "algorithm": cks["algorithm"],
@@ -412,7 +404,15 @@ class DumpSet:
                             spark, d, cks["algorithm"]
                         ),
                     }
-                    self.write_manifest(meta)
+                self.write_manifest(meta)
+                if snaps:
+                    self.log_event(
+                        "SNAPSHOT_HISTORY_COLLAPSED",
+                        table=f"{schema}.{table}",
+                        kept_version=latest,
+                        dropped_versions=latest - 1,
+                    )
+                if cks:
                     self.log_event(
                         "TABLE_CHECKSUM_REFRESHED",
                         table=f"{schema}.{table}",

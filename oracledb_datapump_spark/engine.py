@@ -25,7 +25,19 @@ Each table runs as a short chain of plain stage functions over its
   the frame is fingerprinted on the write itself (an ``Observation``);
   every other target is read back.
 
-A plain table move is thereby one Spark job: the write.
+A plain table move is thereby one Spark job: the write. A small table
+of a connector that holds rows on the driver (``read_arrow``) moves with
+no Spark job at all — the Arrow lane. It fits one Arrow batch
+(``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) and one file
+split (``spark.sql.files.maxPartitionBytes``), and no directive on it
+needs Spark. EXPORT fetches it as Arrow and pyarrow writes its one dump
+file (``_source_arrow`` → ``_write_dump_arrow``); IMPORT reads such a
+dump with pyarrow, hands the target Arrow, and takes the target
+fingerprint from a LocalRelation the optimizer evaluates itself
+(``_read_dump_arrow`` → ``_local_fingerprint``). Before either path
+writes a row, IMPORT checks the dump's footer row sum and file count
+against the manifest, so a lost, truncated or extra part file fails the
+table.
 
 ``export_table``, ``import_table`` and ``transfer_table`` chain them.
 Planning (``Job._thread_plan_extras``) owns every rule about which
@@ -41,7 +53,9 @@ tests/test_import.py:179).
 from __future__ import annotations
 
 import concurrent.futures as cf
+import functools
 import json as _json
+import operator
 import os
 import shutil
 import threading
@@ -51,10 +65,12 @@ from typing import Any
 
 from pyspark.sql import Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas import types as arrow_types
 from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 from .base import JobState
-from .catalog import Connector
+from .catalog import Connector, arrow_frame
 from .crypto import count_encrypted_dump, read_encrypted_dump, write_encrypted_dump
 from .directives import PlanConfig
 from .dumpset import DumpSet
@@ -209,6 +225,49 @@ def _max_data_file_bytes(path: str) -> int:
     return max((os.path.getsize(p) for p in data_file_paths(path)), default=0)
 
 
+# -- the Arrow lane --------------------------------------------------------
+# A table whose connector holds rows on the driver (``read_arrow``) moves
+# with no Spark job when it is small: pyarrow writes or reads its one dump
+# file, and the import fingerprints the target from a LocalRelation.
+
+# parquet codec -> (pyarrow compression, Spark's file-name infix). Spark's
+# lz4 is Hadoop-framed, which pyarrow neither writes nor reads, so a LOW
+# dump moves through Spark both ways
+_LANE_CODECS = {
+    "uncompressed": ("none", ""), "snappy": ("snappy", ".snappy"),
+    "zstd": ("zstd", ".zstd"), "gzip": ("gzip", ".gz"),
+}
+# TablePlan fields of the EXPORT directives that need Spark between the
+# source and the dump: ENCRYPTION, a partitioned or partition-scoped
+# layout, ZORDER/SORT, FILESIZE, the row transforms, an incremental run
+_NEEDS_SPARK = (
+    "encryption", "partition_by", "partition_scope", "zorder_by", "sort_by",
+    "filesize_bytes", "sample", "remap_data", "dedup_keep_best",
+    "incremental_column",
+)
+
+
+def _small(spark: SparkSession, rows: int, nbytes: int) -> bool:
+    """The lane's size rule, one for both directions: the table fits one
+    Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; a
+    LocalRelation that size is cheaper to hash on the driver than in a
+    job) and one file split (``spark.sql.files.maxPartitionBytes``, the
+    DuckDB read's one-partition rule)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return rows <= conf.arrowMaxRecordsPerBatch() and (
+        nbytes <= conf.filesMaxPartitionBytes()
+    )
+
+
+def _arrow_schema(spark: SparkSession, schema: StructType):
+    """The Arrow schema ``toArrow`` and ``createDataFrame`` cast a frame of
+    Spark ``schema`` to."""
+    return arrow_types.to_arrow_schema(
+        schema, error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
+    )
+
+
 # -- read ----------------------------------------------------------------
 
 
@@ -257,6 +316,24 @@ def _read_source(
             evt["files_total"] = counter(plan.schema, plan.table)
         dumpset.log_event("TABLE_EXPORT_PARTITION_SCOPED", **evt)
     return df
+
+
+def _source_arrow(connector: Connector, plan: TablePlan):
+    """Read stage (EXPORT) of the Arrow lane: the source table as Arrow on
+    the driver, fetched once; None when the connector has no
+    ``read_arrow``, the dump is not parquet in a codec pyarrow writes as
+    Spark does, or a directive needs Spark (``_NEEDS_SPARK``)."""
+    read_arrow = getattr(connector, "read_arrow", None)
+    if (
+        read_arrow is None
+        or plan.dump_format != "parquet"
+        or plan.codec not in _LANE_CODECS
+        or any(getattr(plan, f) for f in _NEEDS_SPARK)
+    ):
+        return None
+    return read_arrow(
+        plan.schema, plan.table, predicate=plan.predicate, columns=plan.columns
+    )
 
 
 def _table_meta(dumpset: DumpSet, plan: TablePlan) -> dict[str, Any]:
@@ -377,15 +454,8 @@ def _read_dump(
         files = _as_of_files(plan, config.as_of_version, src_dir, tmeta)
     enc = tmeta.get("encryption")
     if enc:
-        # encrypted dump: decrypting file-list reader (crypto.py) —
-        # a plain spark.read here would die on the Parquet crypto
-        # layer, so fail with the actionable message instead
-        if not plan.encryption_password:
-            raise UsageError(
-                f"dump for {plan.source_key} is encrypted "
-                f"(scope {enc['scope']}); IMPORT requires "
-                "ENCRYPTION_PASSWORD"
-            )
+        # encrypted dump: decrypting file-list reader (crypto.py); the
+        # caller checked for the password
         if files is None:
             files = [
                 os.path.join(src_dir, n)
@@ -413,6 +483,51 @@ def _read_dump(
     if plan.columns and (not enc or plan.predicate):
         df = df.select(*plan.columns)
     return df
+
+
+def _read_dump_arrow(
+    spark: SparkSession, connector: Connector, plan: TablePlan,
+    config: PlanConfig, src_dir: str, fmt: str, tmeta: dict[str, Any],
+):
+    """Read stage (IMPORT) of the Arrow lane: a small flat parquet dump
+    read by pyarrow, cast to the manifest schema's Arrow types — the
+    Arrow a Spark read's ``toArrow`` hands the target. Returns (Arrow,
+    Spark schema), or None where the lane does not apply: a target
+    without ``read_arrow``; an encrypted, hive-partitioned or untyped
+    dump, or one in a codec pyarrow does not read (Spark's lz4); a
+    directive that reads part of the dump (AS_OF_VERSION, QUERY,
+    COLUMNS, DEPARTITION) or writes into an existing table (APPEND,
+    TRUNCATE, MERGE, schema evolution); or footers over the size rule,
+    which are read before any row is."""
+    if not (
+        hasattr(connector, "read_arrow") and fmt == "parquet"
+        and tmeta.get("codec") in _LANE_CODECS
+        and tmeta.get("spark_schema") and not tmeta.get("encryption")
+        and config.as_of_version is None
+        and config.partition_options != "DEPARTITION"
+        and not (plan.predicate or plan.columns or plan.truncate)
+        and plan.write_mode in ("error", "ignore", "overwrite")
+        and not _hive_leaves(src_dir)
+    ):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [
+        pq.ParquetFile(p, coerce_int96_timestamp_unit="us")
+        for p in sorted(data_file_paths(src_dir))
+    ]
+    metas = [f.metadata for f in files]
+    nbytes = sum(
+        m.row_group(i).total_byte_size for m in metas for i in range(m.num_row_groups)
+    )
+    if not files or not _small(spark, sum(m.num_rows for m in metas), nbytes):
+        return None
+    schema = StructType.fromJson(_json.loads(tmeta["spark_schema"]))
+    target = _arrow_schema(spark, schema)
+    return pa.concat_tables(
+        f.read().select(schema.names).cast(target) for f in files
+    ), schema
 
 
 # -- row transforms --------------------------------------------------------
@@ -596,6 +711,41 @@ def _write_dump(
     return rows, size, nfiles, None
 
 
+def _write_dump_arrow(
+    spark: SparkSession, plan: TablePlan, arrow, out_dir: str
+) -> StructType:
+    """Sink stage (EXPORT) of the Arrow lane: the table as the one part
+    file a Spark write of it would leave, with no Spark job. It is typed
+    as ``createDataFrame`` types it (a naive TIMESTAMP is taken in the
+    session time zone and stored as UTC micros), named as Spark names
+    it, and written by pyarrow under a dot-prefixed name, which readers
+    skip, then renamed into place: a failed write leaves no part file.
+    Returns the table's Spark schema."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    schema = arrow_types.from_arrow_schema(
+        arrow.schema, prefer_timestamp_ntz=is_timestamp_ntz_preferred()
+    )
+    arrow = arrow_types._check_arrow_table_timestamps_localize(
+        arrow, schema, True, spark._jconf.sessionLocalTimeZone()
+    ).cast(_arrow_schema(spark, schema))
+    compression, infix = _LANE_CODECS[plan.codec]
+    name = f"part-00000-{uuid.uuid4()}-c000{infix}.parquet"
+    # an overwrite, as Spark's writer does it
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    tmp = os.path.join(out_dir, "." + name)
+    try:
+        pq.write_table(arrow, tmp, compression=compression)
+        os.replace(tmp, os.path.join(out_dir, name))
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return schema
+
+
 def _evolve_append(spark: SparkSession, connector: Connector, plan: TablePlan, df):
     """APPEND evolution: narrow incoming (missing target columns)
     null-fills and stays a true append; widening incoming (new columns)
@@ -632,8 +782,8 @@ def _write_import_df(
     (MERGE_KEY/ORDER/DELETE_COL/PRUNE), schema evolution, and the final
     connector write. Returns the (possibly merged) frame that was
     written, and — when the connector created or replaced the target
-    from exactly that frame — the ``Observation`` holding the target's
-    fingerprint (else None: the account stage reads the target back)."""
+    from exactly that frame — the target's fingerprint, observed on the
+    write (else None: the account stage reads the target back)."""
     mode, written = plan.write_mode, False
     if mode == "merge":
         df, written = merge_df(spark, connector, dumpset, plan, config, df)
@@ -662,7 +812,7 @@ def _write_import_df(
     )
     # Observation.get blocks until an action runs: trust it only for a
     # write the connector reports it ran into a table it created
-    return df, (obs if created else None)
+    return df, (_fingerprint_value(obs.get) if created and obs is not None else None)
 
 
 def _departition(
@@ -853,19 +1003,19 @@ def _hashable_expr(col, dt):
     return col
 
 
+def _row_hash(df):
+    """The fingerprint's per-row hash: xxhash64 over all columns, sorted
+    by name so projection order can't change the value, map columns
+    canonicalized via _hashable_expr."""
+    dtypes = dict(zip(df.schema.names, (f.dataType for f in df.schema.fields)))
+    cols = (_hashable_expr(F.col(c), dtypes[c]) for c in sorted(df.columns))
+    return F.xxhash64(*cols)
+
+
 def _fingerprint_exprs(df) -> list:
     """The fingerprint's two aggregates over ``df``: ``n`` (row count)
-    and ``d`` (XOR of per-row xxhash64 over all columns, sorted by name
-    so projection order can't change the value; map columns
-    canonicalized via _hashable_expr)."""
-    dtypes = dict(zip(df.schema.names, (f.dataType for f in df.schema.fields)))
-    cols = [
-        _hashable_expr(F.col(c), dtypes[c]) for c in sorted(df.columns)
-    ]
-    return [
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*cols)).alias("d"),
-    ]
+    and ``d`` (XOR of ``_row_hash``)."""
+    return [F.count(F.lit(1)).alias("n"), F.bit_xor(_row_hash(df)).alias("d")]
 
 
 def _fingerprint_value(row) -> tuple[int, str]:
@@ -884,6 +1034,17 @@ def table_fingerprint(df) -> tuple[int, str]:
     return _fingerprint_value(df.select(*_fingerprint_exprs(df)).first())
 
 
+def _local_fingerprint(spark: SparkSession, arrow, schema: StructType) -> tuple[int, str]:
+    """``table_fingerprint`` of a driver-held Arrow table, with no Spark
+    job: over a LocalRelation the row hashes are a projection the
+    optimizer evaluates itself (ConvertToLocalRelation), so collecting
+    them runs none, and the XOR is taken here."""
+    df = spark.createDataFrame(arrow, schema)
+    hashes = [r[0] for r in df.select(_row_hash(df)).collect()]
+    d = functools.reduce(operator.xor, hashes, 0)
+    return _fingerprint_value({"n": len(hashes), "d": d})
+
+
 def _fingerprint_done(
     spark: SparkSession,
     connector: Connector,
@@ -891,20 +1052,20 @@ def _fingerprint_done(
     plan: TablePlan,
     operation: str,
     rows: int | None = None,
-    observed: Observation | None = None,
+    observed: tuple[int, str] | None = None,
 ) -> tuple[int, str]:
     """Account tail shared by IMPORT and TRANSFER (START_JOB parity):
     record the TARGET's post-load fingerprint in TABLE_<op>_DONE so
     Job.restart() can digest-verify and skip this table wholesale (there
     is no NEW dump file to checksum; the master-table analog must
     describe the target). ``observed`` is the fingerprint the sink took
-    on the write of a created or replaced target; without it, one
+    of a created or replaced target as it wrote it; without it, one
     count+xxhash64 aggregate reads the just-written table back — at
     100 TB the price of resuming a stopped multi-hour import instead of
     re-running it. ``rows`` is the dump's row count on IMPORT; TRANSFER
     reports the target's."""
     if observed is not None:
-        t_rows, t_digest = _fingerprint_value(observed.get)
+        t_rows, t_digest = observed
     else:
         t_rows, t_digest = table_fingerprint(
             connector.read_table(spark, plan.target_schema, plan.target_table)
@@ -939,7 +1100,9 @@ def export_table(
     plan: TablePlan,
 ) -> TableResult:
     """EXPORT one table: read → row transforms → layout → dump sink →
-    account."""
+    account. A small table from a driver-resident source takes the Arrow
+    lane instead: fetched as Arrow, written by pyarrow, with no Spark
+    job."""
     if not plan.data_included:
         # metadata-only export: record schema, move no rows
         df = connector.read_table(
@@ -961,16 +1124,6 @@ def export_table(
             detail={"spark_schema": df.schema.json(), "metadata_only": True},
         )
     out_dir = dumpset.table_dir(plan.schema, plan.table)
-    df, pre_dedup = _transform_rows(
-        _read_source(spark, connector, dumpset, plan), plan
-    )
-    # The pre-dedup count is a column-pruned count-star so the recorded
-    # drop is attributable. It is a SECOND scan of the same plan: exact
-    # for snapshot-stable sources (parquet, as-of reads); on a live RDBMS
-    # source rows can change between the count and the write, so the
-    # manifest rows_dropped is best-effort there.
-    n_before_dedup = None if pre_dedup is None else pre_dedup.count()
-    df = _layout(df, plan)
     pre_files = _part_names(out_dir) if not plan.partition_by else set()
     # Snapshot footer counts before an append so TABLE_EXPORT_DONE
     # reports THIS run's delta, not the cumulative dump (CDC runs).
@@ -979,11 +1132,31 @@ def export_table(
         prev_rows, prev_size, _ = _count_dump_rows(
             out_dir, plan.dump_format, spark
         )
-    rows, size, nfiles, enc_detail = _write_dump(
-        spark, dumpset, plan, df, out_dir
-    )
+    arrow = _source_arrow(connector, plan)
+    n_before_dedup = enc_detail = None
+    if arrow is not None and _small(spark, arrow.num_rows, arrow.nbytes):
+        schema = _write_dump_arrow(spark, plan, arrow, out_dir)
+        rows, size, nfiles = _count_dump_rows(out_dir)
+    else:
+        df, pre_dedup = _transform_rows(
+            _read_source(spark, connector, dumpset, plan)
+            if arrow is None
+            else arrow_frame(spark, arrow, plan.parallel),
+            plan,
+        )
+        # The pre-dedup count is a column-pruned count-star so the
+        # recorded drop is attributable. It is a SECOND scan of the same
+        # plan: exact for snapshot-stable sources (parquet, as-of reads);
+        # on a live RDBMS source rows can change between the count and
+        # the write, so the manifest rows_dropped is best-effort there.
+        n_before_dedup = None if pre_dedup is None else pre_dedup.count()
+        df = _layout(df, plan)
+        rows, size, nfiles, enc_detail = _write_dump(
+            spark, dumpset, plan, df, out_dir
+        )
+        schema = df.schema
     detail = _account_export(
-        spark, dumpset, plan, df.schema, out_dir, pre_files,
+        spark, dumpset, plan, schema, out_dir, pre_files,
         rows - prev_rows, n_before_dedup, enc_detail,
     )
     dumpset.log_event(
@@ -1005,7 +1178,10 @@ def import_table(
     plan: TablePlan,
     config: PlanConfig,
 ) -> TableResult:
-    """IMPORT one table: dump read → import sink → account."""
+    """IMPORT one table: the dump checked against its manifest entry →
+    dump read → import sink → account. A small dump into a
+    driver-resident target takes the Arrow lane: read by pyarrow,
+    written as Arrow and fingerprinted with no Spark job."""
     src_dir = dumpset.table_dir(plan.schema, plan.table)
     if not os.path.isdir(src_dir):
         # metadata-only entry in the dump set — nothing to load
@@ -1022,24 +1198,51 @@ def import_table(
         # zero rows loaded — the target catalog is untouched
         return _skip(dumpset, plan, "IMPORT", "VERIFY_ONLY")
     fmt = _sniff_dump_format(src_dir)
+    enc = tmeta.get("encryption")
+    if enc:
+        # sealed footers (ALL/METADATA_ONLY) need the key for the
+        # zero-scan accounting; the plain counter (and a plain
+        # spark.read) would die on the Parquet crypto layer, so fail
+        # with the actionable message instead
+        if not plan.encryption_password:
+            raise UsageError(
+                f"dump for {plan.source_key} is encrypted "
+                f"(scope {enc['scope']}); IMPORT requires "
+                "ENCRYPTION_PASSWORD"
+            )
+        rows, size, nfiles = count_encrypted_dump(
+            src_dir, plan.encryption_password, enc["salt_hex"]
+        )
+    else:
+        rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
+    if tmeta.get("rows") is not None and (
+        rows != tmeta["rows"]
+        or tmeta.get("files") not in (None, nfiles)
+    ):
+        # a lost, truncated or extra part file: fail the table before
+        # any row is written, never import a silently different table
+        raise FileError(
+            f"dump for {plan.source_key} holds {rows} rows in {nfiles} "
+            f"files; its export recorded {tmeta['rows']} rows in "
+            f"{tmeta.get('files')} files"
+        )
     # MERGE/NONE partition options fall through — Spark unions
     # partition dirs natively.
     if config.partition_options == "DEPARTITION":
         res = _departition(spark, connector, dumpset, plan, src_dir, fmt)
         if res is not None:
             return res
-    df = _read_dump(spark, plan, config, src_dir, fmt, tmeta)
-    df, observed = _write_import_df(spark, connector, dumpset, plan, config, df)
-    enc = tmeta.get("encryption")
-    if enc:
-        # sealed footers (ALL/METADATA_ONLY) need the key for the
-        # zero-scan accounting; the plain counter would fall back to
-        # a doomed spark.read on the encrypted files
-        rows, size, nfiles = count_encrypted_dump(
-            src_dir, plan.encryption_password, enc["salt_hex"]
+    lane = _read_dump_arrow(spark, connector, plan, config, src_dir, fmt, tmeta)
+    if lane is not None:
+        arrow, schema = lane
+        created = connector.write_table(
+            arrow, plan.target_schema, plan.target_table,
+            mode=plan.write_mode, options=plan.writer_options,
         )
+        observed = _local_fingerprint(spark, arrow, schema) if created else None
     else:
-        rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
+        df = _read_dump(spark, plan, config, src_dir, fmt, tmeta)
+        df, observed = _write_import_df(spark, connector, dumpset, plan, config, df)
     if config.validate_table_data:
         # VALIDATE_TBL_DATA (reference DATA_OPTIONS bit,
         # directives.py:227-238): post-write row-count verify. A

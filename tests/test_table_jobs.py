@@ -30,39 +30,7 @@ from oracledb_datapump_spark.directives import DirectiveBase as D
 from oracledb_datapump_spark.dumpset import DumpSet
 from oracledb_datapump_spark.job import Job
 
-# every column type of the many-tables ladder, each column null on some rows
-LADDER_DDL = """CREATE TABLE lad.all_types (
-    id BIGINT, i INTEGER, x DOUBLE, s VARCHAR, d DATE, ts TIMESTAMP,
-    b BOOLEAN, m DECIMAL(12,2))"""
-LADDER_ROWS = """INSERT INTO lad.all_types SELECT
-    range,
-    CASE WHEN range % 7 = 1 THEN NULL ELSE range * 7919 % 100003 - 50000 END,
-    CASE WHEN range % 7 = 2 THEN NULL ELSE range * 1.25 - 10 END,
-    CASE WHEN range % 7 = 3 THEN NULL ELSE 'v' || range END,
-    CASE WHEN range % 7 = 4 THEN NULL ELSE DATE '1995-01-01' + range::INTEGER END,
-    CASE WHEN range % 7 = 5 THEN NULL
-         ELSE TIMESTAMP '2020-01-01 00:00:00' + range * INTERVAL 3601 SECOND END,
-    CASE WHEN range % 7 = 6 THEN NULL ELSE range % 2 = 0 END,
-    CASE WHEN range % 7 = 0 THEN NULL ELSE range * 123.45 - 999 END
-    FROM range(40)"""
 TABLES = ("all_types", "empty_t")
-
-
-def _jobs(spark) -> int:
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-
-
-@pytest.fixture()
-def ladder(tmp_path):
-    """(source connector, its duckdb:// URI) holding lad.all_types (40
-    rows) and lad.empty_t (0 rows, same columns)."""
-    path = str(tmp_path / "src.duckdb")
-    src = DuckDbConnector(path)
-    src.execute("CREATE SCHEMA lad")
-    src.execute(LADDER_DDL)
-    src.execute(LADDER_ROWS)
-    src.execute("CREATE TABLE lad.empty_t AS SELECT * FROM lad.all_types LIMIT 0")
-    return src, f"duckdb://{path}"
 
 
 def _export(spark, src, dump, tables=TABLES):
@@ -119,33 +87,34 @@ def _target(kind, tmp_path):
 # -- one job per table ------------------------------------------------------
 
 
-def test_small_table_moves_in_one_spark_job(spark, tmp_path):
-    """A 10-row table at PARALLEL(4): one job and one part file to export
-    it, one job to import it. Before the size rule the export shuffled
+def test_small_table_moves_with_no_spark_job(spark, tmp_path, spark_jobs):
+    """A 10-row DuckDB table at PARALLEL(4) takes the Arrow lane: no job
+    and one part file to export it, no job to import it. Through Spark
+    it took one job each way; before the size rule the export shuffled
     the table over PARALLEL partitions (3 jobs, 4 files), and the import
     inferred the dump schema and read the target back (4 jobs)."""
     src = DuckDbConnector(str(tmp_path / "src.duckdb"))
     src.execute("CREATE SCHEMA s")
     src.execute("CREATE TABLE s.t AS SELECT range AS id, 'v' || range AS v FROM range(10)")
     dump = str(tmp_path / "dump")
-    j0 = _jobs(spark)
+    j0 = spark_jobs()
     st = Job(
         "EXPORT", "TABLE", dumpfiles=dump,
         directives=[D.INCLUDE_SCHEMA("s"), D.INCLUDE_TABLE("t"), D.PARALLEL(4)],
     ).run(wait=True, connection=src, spark=spark)
     assert st.job_state == "COMPLETED", st.error
-    j1 = _jobs(spark)
+    j1 = spark_jobs()
     st = Job(
         "IMPORT", "TABLE", dumpfiles=dump,
         directives=[D.INCLUDE_SCHEMA("s"), D.REMAP_SCHEMA("s", "s2"), D.PARALLEL(4)],
     ).run(wait=True, connection=src, spark=spark)
     assert st.job_state == "COMPLETED", st.error
-    j2 = _jobs(spark)
+    j2 = spark_jobs()
     parts = [
         n for n in os.listdir(DumpSet(dump).table_dir("s", "t"))
         if n.startswith("part-")
     ]
-    assert (j1 - j0, j2 - j1, len(parts)) == (1, 1, 1)
+    assert (j1 - j0, j2 - j1, len(parts)) == (0, 0, 1)
     assert src.execute("SELECT count(*) FROM s2.t").fetchone()[0] == 10
 
 
