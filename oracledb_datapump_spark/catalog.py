@@ -24,6 +24,7 @@ from typing import Any, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .dumpset import data_file_paths, recover, staged
 from .exceptions import FileError, UsageError
 
 SYSTEM_SCHEMAS = {"information_schema", "pg_catalog", "system", "temp"}
@@ -186,7 +187,10 @@ class ParquetConnector:
         return out
 
     def table_exists(self, schema: str, table: str) -> bool:
+        """Whether the table is there, after ``recover`` has restored it
+        if a crash cut its last write off between the two renames."""
         try:
+            recover(self._path(schema, table))
             return table in self.list_tables(schema)
         except UsageError:
             return False
@@ -257,12 +261,7 @@ class ParquetConnector:
         is constructed, so no scan over the unscoped table is ever
         planned; the scoped feature's contract is that the other leaves'
         data is never touched)."""
-        path = self._path(schema, table)
-        n = 0
-        for dirpath, dirnames, filenames in os.walk(path):
-            dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-            n += sum(1 for f in filenames if not f.startswith(("_", ".")))
-        return n
+        return sum(1 for _ in data_file_paths(self._path(schema, table)))
 
     def write_table(
         self,
@@ -275,16 +274,24 @@ class ParquetConnector:
         options: dict[str, str] | None = None,
     ) -> bool | None:
         path = self._path(schema, table)
-        if mode == "ignore" and os.path.exists(path):
+        recover(path)  # a table cut off mid-publish exists
+        exists = os.path.exists(path)
+        if mode == "ignore" and exists:
             return None
-        writer = df.write.mode("overwrite" if mode in ("overwrite",) else mode)
+        if mode in ("error", "errorifexists") and exists:
+            raise FileError(f"Table exists: {schema}.{table}")
+        writer = df.write.mode("append" if mode == "append" else "overwrite")
         if self.fmt == "csv":
             # source-style CSV tables stay self-describing (header row),
             # unlike dump-set CSV which is headerless + manifest-typed
             writer = writer.option("header", "true")
         for k, v in (options or {}).items():
             writer = writer.option(k, v)
-        writer.format(self.fmt).save(path)
+        # an append keeps every current file and adds its own beside them
+        # (a single-file table becomes a dir holding that file)
+        keep = data_file_paths(path) if mode == "append" else ()
+        with staged(path, keep) as stage:
+            writer.format(self.fmt).save(stage)
         # only parquet is known to read back exactly the types written
         return self.fmt == "parquet" and mode != "append" and not truncate
 
@@ -356,35 +363,15 @@ class ParquetConnector:
         self, df: DataFrame, schema: str, table: str, touched: list[str]
     ) -> int:
         """Replace exactly the ``touched`` data files with the merged
-        DataFrame's output, leaving every other file byte-identical.
-        Write-to-sibling then swap: survivors land in ``.merge_tmp``,
-        the touched files are removed, and the new parts move in under
-        collision-free names. Returns the number of files written."""
-        import shutil
-
-        path = self._path(schema, table)
-        tmp = path + ".merge_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        new_parts = sorted(
-            n
-            for n in os.listdir(tmp)
-            if n.startswith("part-") and not n.endswith(".crc")
-        )
-        for f in touched:
-            os.remove(f)
-            crc = os.path.join(
-                os.path.dirname(f), "." + os.path.basename(f) + ".crc"
-            )
-            if os.path.exists(crc):
-                os.remove(crc)
-        for i, n in enumerate(new_parts):
-            # "m<i>-" prefix keeps names unique vs the kept originals
-            os.rename(
-                os.path.join(tmp, n), os.path.join(path, f"part-m{i}-{n[5:]}")
-            )
-        shutil.rmtree(tmp, ignore_errors=True)
-        return len(new_parts)
+        DataFrame's output, leaving every other file byte-identical: one
+        ``staged`` commit that keeps the untouched files (hard links) and
+        appends the new parts beside them. Returns the number of files
+        written."""
+        path, touched = self._path(schema, table), set(touched)
+        kept = [p for p in data_file_paths(path) if p not in touched]
+        with staged(path, kept) as stage:
+            df.write.mode("append").parquet(stage)
+            return sum(1 for _ in data_file_paths(stage)) - len(kept)
 
     def snapshot_marker(self) -> str | None:
         return None

@@ -54,7 +54,6 @@ import base64
 import hashlib
 import hmac
 import os
-import shutil
 
 from .exceptions import Unsupported, UsageError
 
@@ -258,14 +257,13 @@ def write_encrypted_dump(
     partition, written by the executor that owns the partition (direct
     write with collision-free names — the standard no-commit-protocol
     append pattern; on object stores a task-commit layer would wrap
-    this). Returns {files, rows, bytes, salt_hex} from the tasks' own
-    counters so no post-write footer scan is needed (an ALL-scope dump
-    has no readable footers)."""
+    this). ``out_dir`` is an empty dir: the engine passes a ``staged``
+    one, so a failed write never touches the live dump. Returns {files,
+    rows, bytes, salt_hex} from the tasks' own counters so no post-write
+    footer scan is needed (an ALL-scope dump has no readable footers)."""
     import pandas as pd
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
     # Spark and Arrow disagree on the no-compression spelling
     codec = {"uncompressed": "none"}.get(codec, codec)
     salt = os.urandom(16)

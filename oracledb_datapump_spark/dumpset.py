@@ -9,22 +9,31 @@ chunks; here, a dump set is a directory of Parquet tables —
       _datapump_manifest.json      (reference base.py:43-56, job.py:235-259)
       _datapump_events.jsonl       (replaces the Oracle logfile, status.py:449-579)
       <schema>/<table>/part-*.parquet
+      <schema>/.<table>.__stage__/ (hidden: a write in progress)
+      <schema>/.<table>.__old__/   (hidden: the copy a publish replaces)
 
 Spark writes N part-files natively, which subsumes the reference's
 %U-substitution dump-set planner (files.py:769-885): ``parallel`` maps to
 the partition count, and no import-time file probing is needed because the
 filesystem can list directories (unlike UTL_FILE — files.py:810-857).
+
+Every write of a table directory — the dump writes, compaction, a
+Parquet target — goes through ``staged``: the new copy is written into
+the hidden stage sibling and published by rename, so a table dir is
+always absent or whole. Readers skip the hidden siblings, and
+``recover`` settles the ones a crash left behind.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
 import shutil
 import threading
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 from .base import JobMetaData
 from .exceptions import FileError
@@ -33,6 +42,89 @@ from .util import utc_now
 MANIFEST_NAME = "_datapump_manifest.json"
 EVENTS_NAME = "_datapump_events.jsonl"
 LOGFILE_NAME = "_datapump_log.txt"
+
+
+def data_file_paths(path: str) -> Iterator[str]:
+    """Paths of the data files under a table dir (hive leaves included);
+    ``_``/``.`` names — Spark markers, checksum files — are skipped. A
+    single-file table (a flat source's ``orders.parquet``) is its own
+    only data file."""
+    if os.path.isfile(path):
+        yield path
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        for name in filenames:
+            if not name.startswith(("_", ".")):
+                yield os.path.join(dirpath, name)
+
+
+# -- the staged commit of a table directory ----------------------------------
+
+
+def sibling(live: str, kind: str) -> str:
+    """The hidden sibling ``.<name>.__<kind>__`` of ``live``; ``kind`` is
+    ``stage`` (a write in progress) or ``old`` (the copy being replaced)."""
+    head, name = os.path.split(os.path.normpath(live))
+    return os.path.join(head, f".{name}.__{kind}__")
+
+
+def _drop(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
+def recover(live: str) -> bool:
+    """Settle a commit of the table dir ``live`` that a crash interrupted,
+    and return whether the table was restored. An ``__old__`` sibling
+    with no live dir is the table's only copy, cut off between
+    ``staged``'s two renames: it is renamed back. An ``__old__`` beside a
+    live dir is a superseded copy, and a ``__stage__`` is never the only
+    copy: both are dropped, so recover a table only while nothing writes
+    to it."""
+    old, restored = sibling(live, "old"), False
+    if os.path.lexists(old):
+        if os.path.lexists(live):
+            _drop(old)
+        else:
+            os.rename(old, live)
+            restored = True
+    _drop(sibling(live, "stage"))
+    return restored
+
+
+@contextlib.contextmanager
+def staged(live: str, keep: Iterable[str] = ()) -> Iterator[str]:
+    """Write a table dir beside the live one and publish it by rename.
+
+    Yields the stage dir ``.<name>.__stage__``, holding hard links to the
+    ``keep`` files of ``live`` (paths under ``live``, or ``live`` itself
+    for a single-file table, which lands in the stage under its own
+    name; listed only after ``live`` is recovered when ``keep`` is lazy)
+    and nothing else, so an append or a partial rewrite writes only its
+    new files. On a clean exit the live dir is renamed to
+    ``.<name>.__old__``, the stage to ``live``, and the old copy is
+    dropped; on an exception only the stage is removed. So ``live`` is
+    always absent or whole, and a crash between the two renames is
+    undone by ``recover``, which this runs first for ``live``."""
+    recover(live)
+    stage, old = sibling(live, "stage"), sibling(live, "old")
+    os.makedirs(stage)
+    try:
+        for path in keep:
+            rel = os.path.relpath(path, live)
+            dst = os.path.join(stage, os.path.basename(live) if rel == "." else rel)
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.link(path, dst)
+        yield stage
+    except BaseException:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    if os.path.lexists(live):
+        os.rename(live, old)
+    os.rename(stage, live)
+    _drop(old)
 
 
 @dataclass
@@ -116,16 +208,29 @@ class DumpSet:
                 out.append((schema, table))
             if out:
                 return sorted(out)
-        out = []
-        if os.path.isdir(self.root):
-            for schema in sorted(os.listdir(self.root)):
-                sdir = os.path.join(self.root, schema)
-                if not os.path.isdir(sdir) or schema.startswith("_"):
-                    continue
-                for table in sorted(os.listdir(sdir)):
-                    if os.path.isdir(os.path.join(sdir, table)):
-                        out.append((schema, table))
-        return out
+        # glob skips the ``_``/``.`` names: markers and staged siblings
+        return sorted(
+            tuple(os.path.relpath(d, self.root).split(os.sep))
+            for d in glob.glob(os.path.join(glob.escape(self.root), "[!_]*", "[!_]*/"))
+        )
+
+    def recover_tables(self) -> None:
+        """``recover`` every table dir of the dump set, logging one
+        TABLE_DIR_RECOVERED per table restored. A directory glob over
+        the hidden siblings: no manifest is read. Run it only while
+        nothing writes to the dump set."""
+        tables = set()
+        for kind in ("old", "stage"):
+            pattern = sibling(os.path.join(glob.escape(self.root), "*", "*"), kind)
+            for path in glob.glob(pattern):
+                head, name = os.path.split(path)
+                tables.add(os.path.join(head, name[1 : -len(f".__{kind}__")]))
+        for live in sorted(tables):
+            if recover(live):
+                self.log_event(
+                    "TABLE_DIR_RECOVERED",
+                    table=os.path.relpath(live, self.root).replace(os.sep, "."),
+                )
 
     def dumpfiles(self) -> list[str]:
         """All part-file paths (the dump 'files' — reference's DumpFileSet).
@@ -244,27 +349,6 @@ class DumpSet:
     # -- compaction (OPTIMIZE-style small-file consolidation) ----------------
     DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 
-    def _recover_interrupted_compaction(self) -> None:
-        """The swap in compact() is a double rename (live → .compact_old,
-        .compact_tmp → live); a crash between the two leaves the table's
-        only copy in ``.compact_old`` with no live dir. Restore it (and
-        drop any orphaned ``.compact_tmp``, which is never the only
-        copy) before compacting again."""
-        for old in glob.glob(os.path.join(self.root, "*", "*.compact_old")):
-            live = old[: -len(".compact_old")]
-            if not os.path.isdir(live):
-                os.rename(old, live)
-                self.log_event(
-                    "COMPACTION_RECOVERED",
-                    table=os.path.relpath(live, self.root).replace(os.sep, "."),
-                )
-            else:
-                # crash after the second rename: live dir is the new
-                # layout, .compact_old is a superseded copy — drop it
-                shutil.rmtree(old, ignore_errors=True)
-        for tmp in glob.glob(os.path.join(self.root, "*", "*.compact_tmp")):
-            shutil.rmtree(tmp, ignore_errors=True)
-
     def compact(
         self,
         spark,
@@ -278,15 +362,15 @@ class DumpSet:
         target layout (fewer than ``min_files`` files, or average file
         size >= target) are skipped, so the pass is idempotent.
 
-        Each table is rewritten atomically: coalesce to
-        ceil(bytes/target) partitions (coalesce — a compaction must not
-        pay a full shuffle), write to a sibling temp dir, swap, log a
-        TABLE_COMPACTED event. Returns {schema.table: {files_before,
-        files_after, bytes}}.
+        Interrupted commits are recovered first. Each table is then
+        rewritten through ``staged``: coalesce to ceil(bytes/target)
+        partitions (coalesce — a compaction must not pay a full
+        shuffle), publish by rename, log a TABLE_COMPACTED event.
+        Returns {schema.table: {files_before, files_after, bytes}}.
         """
         import math
 
-        self._recover_interrupted_compaction()
+        self.recover_tables()
         report: dict[str, dict[str, int]] = {}
         # Two-phase: decide every table FIRST, rewrite only after the
         # whole dump set validates. Raising mid-iteration would discard
@@ -296,12 +380,7 @@ class DumpSet:
         todo: list[tuple[str, str, str, list[str], int, int]] = []
         for schema, table in self.list_tables():
             d = self.table_dir(schema, table)
-            parts = [
-                p
-                for p in glob.glob(os.path.join(d, "**", "*"), recursive=True)
-                if os.path.isfile(p)
-                and not os.path.basename(p).startswith(("_", "."))
-            ]
+            parts = list(data_file_paths(d))
             # hive-partitioned layouts (EXPORT_PARTITION_BY) are laid out
             # for pruning, not file size; skip them (files under subdirs)
             if any(os.path.dirname(p) != d for p in parts):
@@ -337,26 +416,15 @@ class DumpSet:
                 )
             except Exception:
                 pass
-            tmp = d + ".compact_tmp"
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                spark.read.parquet(d)
-                .coalesce(n_target)
-                .write.mode("overwrite")
-                .option("compression", codec)
-                .parquet(tmp)
-            )
-            old = d + ".compact_old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(d, old)
-            os.rename(tmp, d)
-            shutil.rmtree(old)
-            new = [
-                p
-                for p in glob.glob(os.path.join(d, "*"))
-                if os.path.isfile(p)
-                and not os.path.basename(p).startswith(("_", "."))
-            ]
+            with staged(d) as stage:
+                (
+                    spark.read.parquet(d)
+                    .coalesce(n_target)
+                    .write.mode("overwrite")
+                    .option("compression", codec)
+                    .parquet(stage)
+                )
+            new = list(data_file_paths(d))
             after = len(new)
             report[f"{schema}.{table}"] = {
                 "files_before": len(parts),

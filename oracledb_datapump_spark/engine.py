@@ -39,6 +39,12 @@ writes a row, IMPORT checks the dump's footer row sum and file count
 against the manifest, so a lost, truncated or extra part file fails the
 table.
 
+Every table-dir write — the Spark and Arrow dump writes, FILESIZE's
+corrective rewrite, the encrypted writer, and a Parquet target's write
+— is one ``dumpset.staged`` commit: written beside the live dir and
+published by rename, so a write that fails leaves the table dir as it
+was.
+
 ``export_table``, ``import_table`` and ``transfer_table`` chain them.
 Planning (``Job._thread_plan_extras``) owns every rule about which
 directives can be combined, so no stage rejects a combination halfway
@@ -57,7 +63,6 @@ import functools
 import json as _json
 import operator
 import os
-import shutil
 import threading
 import traceback
 from dataclasses import dataclass, field
@@ -73,7 +78,7 @@ from .base import JobState
 from .catalog import Connector, arrow_frame
 from .crypto import count_encrypted_dump, read_encrypted_dump, write_encrypted_dump
 from .directives import PlanConfig
-from .dumpset import DumpSet
+from .dumpset import DumpSet, data_file_paths, staged
 from .exceptions import FileError, UsageError
 from .merge import dtype_has_map, merge_df
 from .planner import TablePlan
@@ -139,17 +144,6 @@ def _part_names(d: str) -> set:
     if not os.path.isdir(d):
         return set()
     return {n for n in os.listdir(d) if n.startswith("part-")}
-
-
-def data_file_paths(path: str):
-    """Paths of the data files under a dump table dir (hive leaves
-    included); ``_``/``.`` names — Spark markers, staging dirs — are
-    skipped."""
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
-        for name in filenames:
-            if not name.startswith(("_", ".")):
-                yield os.path.join(dirpath, name)
 
 
 def _sniff_dump_format(path: str) -> str:
@@ -611,8 +605,10 @@ def _write_dump(
     spark: SparkSession, dumpset: DumpSet, plan: TablePlan, df, out_dir: str
 ) -> tuple[int, int, int, dict[str, Any] | None]:
     """Sink stage (EXPORT): the dump writer with FILESIZE and ENCRYPTION.
-    Returns (rows, bytes, files) of the whole table dir and, for an
-    encrypted dump, its manifest ``encryption`` detail."""
+    Every write goes through ``staged``, so the table dir is replaced
+    whole or left as it was. Returns (rows, bytes, files) of the whole
+    table dir and, for an encrypted dump, its manifest ``encryption``
+    detail."""
     fmt = plan.dump_format
     codec = _map_codec(fmt, plan.codec)
     enc = plan.encryption
@@ -621,15 +617,16 @@ def _write_dump(
         # executor-distributed — see crypto.py. Row/byte counts come
         # from the write tasks themselves (an ALL-scope dump has no
         # readable footers to re-count from).
-        res = write_encrypted_dump(
-            df,
-            out_dir,
-            enc["password"],
-            enc["scope"],
-            enc["algorithm"],
-            codec,
-            encrypt_columns=enc.get("columns"),
-        )
+        with staged(out_dir) as stage:
+            res = write_encrypted_dump(
+                df,
+                stage,
+                enc["password"],
+                enc["scope"],
+                enc["algorithm"],
+                codec,
+                encrypt_columns=enc.get("columns"),
+            )
         detail = {
             "scope": enc["scope"],
             "algorithm": enc["algorithm"],
@@ -669,7 +666,9 @@ def _write_dump(
         # headerless + manifest schema on import: CSV carries no
         # types
         writer = writer.option("header", "false")
-    writer.format(fmt).save(out_dir)
+    # an append keeps every current file and adds its own beside them
+    with staged(out_dir, data_file_paths(out_dir) if append else ()) as stage:
+        writer.format(fmt).save(stage)
     rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
     if (
         filesize
@@ -678,28 +677,22 @@ def _write_dump(
         and not plan.partition_by
         and _max_data_file_bytes(out_dir) > filesize * 1.05
     ):
-        # corrective rewrite with the observed bytes/row — the
-        # atomic tmp→swap discipline of DumpSet.compact. Runs
-        # BEFORE checksum digests are recorded so the integrity
-        # map covers the final layout. Appends and hive layouts
-        # keep the estimate-only cap (a rewrite would invalidate
-        # snapshot file lists / pruning layout).
+        # corrective rewrite with the observed bytes/row, a second
+        # staged overwrite. Runs BEFORE checksum digests are recorded
+        # so the integrity map covers the final layout. Appends and
+        # hive layouts keep the estimate-only cap (a rewrite would
+        # invalidate snapshot file lists / pruning layout).
         obs_rpf = max(1, int(filesize * 0.9 * rows / size))
-        tmp, old = out_dir + ".filesize_tmp", out_dir + ".filesize_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            _dump_reader(spark, fmt, df.schema)
-            .load(out_dir)
-            .write.mode("overwrite")
-            .option("compression", codec)
-            .option("maxRecordsPerFile", obs_rpf)
-            .format(fmt)
-            .save(tmp)
-        )
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(out_dir, old)
-        os.rename(tmp, out_dir)
-        shutil.rmtree(old)
+        with staged(out_dir) as stage:
+            (
+                _dump_reader(spark, fmt, df.schema)
+                .load(out_dir)
+                .write.mode("overwrite")
+                .option("compression", codec)
+                .option("maxRecordsPerFile", obs_rpf)
+                .format(fmt)
+                .save(stage)
+            )
         rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
         dumpset.log_event(
             "TABLE_FILESIZE_ENFORCED",
@@ -718,9 +711,8 @@ def _write_dump_arrow(
     file a Spark write of it would leave, with no Spark job. It is typed
     as ``createDataFrame`` types it (a naive TIMESTAMP is taken in the
     session time zone and stored as UTC micros), named as Spark names
-    it, and written by pyarrow under a dot-prefixed name, which readers
-    skip, then renamed into place: a failed write leaves no part file.
-    Returns the table's Spark schema."""
+    it, and written by pyarrow into a ``staged`` dir: a failed write
+    leaves the table dir as it was. Returns the table's Spark schema."""
     import uuid
 
     import pyarrow.parquet as pq
@@ -733,16 +725,8 @@ def _write_dump_arrow(
     ).cast(_arrow_schema(spark, schema))
     compression, infix = _LANE_CODECS[plan.codec]
     name = f"part-00000-{uuid.uuid4()}-c000{infix}.parquet"
-    # an overwrite, as Spark's writer does it
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    tmp = os.path.join(out_dir, "." + name)
-    try:
-        pq.write_table(arrow, tmp, compression=compression)
-        os.replace(tmp, os.path.join(out_dir, name))
-    finally:
-        if os.path.exists(tmp):
-            os.remove(tmp)
+    with staged(out_dir) as stage:
+        pq.write_table(arrow, os.path.join(stage, name), compression=compression)
     return schema
 
 
@@ -1336,8 +1320,11 @@ def run_plans(
     cooperative stop at a work-item boundary): when set, tables that have
     not yet STARTED are recorded as not-run (TABLE_*_NOT_RUN events) and
     the result state is STOPPED. In-flight tables always complete — a
-    table is the atomic unit of restartability, so the dump set only ever
-    holds whole tables and ``Job.restart`` can skip them wholesale.
+    table is the atomic unit of restartability, and every table-dir write
+    is a ``staged`` commit, so the dump set only ever holds whole tables
+    (a failed write leaves the previous copy or none, and ``Job._plan``
+    recovers a commit a crash cut off) and ``Job.restart`` can skip them
+    wholesale.
     """
     workers = max(1, min(config.parallel, len(plans) or 1))
     results: list[TableResult] = []

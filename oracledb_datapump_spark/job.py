@@ -40,8 +40,8 @@ from .directives import (
     PlanConfig,
     compile_directives,
 )
-from .dumpset import DumpSet
-from .engine import EngineResult, data_file_paths, run_plans
+from .dumpset import DumpSet, data_file_paths
+from .engine import EngineResult, run_plans
 from .exceptions import JobNotFound, UsageError
 from .planner import (
     estimate_plan,
@@ -397,7 +397,10 @@ class Job:
     def _plan(self, config: PlanConfig) -> tuple[list, str]:
         """Plan the job's tables — the one planning routine of run() and
         restart() — and return them with the engine operation: EXPORT,
-        IMPORT, or TRANSFER for an impdp-side NETWORK_LINK."""
+        IMPORT, or TRANSFER for an impdp-side NETWORK_LINK. A table dir
+        a crash left mid-publish is recovered first, so planning and the
+        resume checks see it whole."""
+        self.dumpset.recover_tables()
         if self.operation == Operation.EXPORT:
             plans = plan_export(self.connector, self.operation, self.mode, config)
             engine_op = "EXPORT"
@@ -449,8 +452,19 @@ class Job:
         plan; the engine records per-file digests post-write.
         INCREMENTAL_COLUMN: thread each table's recorded watermark from
         the prior manifest so the engine exports only new rows, appended.
+        Two sources remapped (REMAP_SCHEMA) onto one target table under
+        PARALLEL above 1 are refused: their concurrent writes would share
+        one staged commit of that table.
         """
         export = self.operation == Operation.EXPORT
+        targets = [p.target_key for p in plans]
+        if not export and config.parallel > 1 and len(set(targets)) < len(targets):
+            shared = sorted({t for t in targets if targets.count(t) > 1})
+            raise UsageError(
+                f"Several source tables map onto {', '.join(shared)} "
+                "(REMAP_SCHEMA); concurrent writes of one "
+                "target cannot both commit — use PARALLEL(1)"
+            )
         enc = {}
         if config.encryption:
             from .crypto import validate_encryption

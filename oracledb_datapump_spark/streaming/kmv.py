@@ -12,8 +12,8 @@ The cycle stages the events fixture in two halves and drains them with
 ``maxFilesPerTrigger=1`` under ``availableNow``, so the state REALLY
 merges across two micro-batches (a single-batch run would prove
 nothing about incremental maintenance). foreachBatch folds each
-batch's distinct user hashes into a k-row parquet state under an
-atomic tmp-swap (the dumpset.compact() device). The KMV estimator
+batch's distinct user hashes into a k-row parquet state, published
+whole by ``dumpset.staged``. The KMV estimator
 n̂ = (k−1)·2⁶⁰ div h₍ₖ₎ is exact integer arithmetic — hash64 is
 uniform on [0, 2⁶⁰).
 
@@ -32,6 +32,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..dumpset import staged
 from ..events_source import events_stream_schema, pin_utc
 from ..functions.text import hash64, sql_hash64
 
@@ -54,14 +55,8 @@ def _fold_state(spark: SparkSession, state_dir: str, batch_df, _bid: int):
     else:
         merged = bh
     topk = merged.distinct().orderBy("h").limit(KMV_K)
-    tmp = cur + ".tmp"
-    topk.write.mode("overwrite").parquet(tmp)
-    old = cur + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(cur):
-        os.rename(cur, old)
-    os.rename(tmp, cur)
-    shutil.rmtree(old, ignore_errors=True)
+    with staged(cur) as stage:
+        topk.write.mode("overwrite").parquet(stage)
 
 
 def streaming_bottomk_distinct(spark: SparkSession, src_dir: str) -> DataFrame:

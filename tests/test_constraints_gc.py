@@ -137,16 +137,16 @@ def test_dumpset_compact(spark, tmp_path):
 
 
 def test_compact_crash_recovery(spark, tmp_path):
-    """A crash between compact()'s two renames leaves the table's only
-    copy in <dir>.compact_old; the next compact() restores it before
-    proceeding. A crash after the second rename leaves a superseded
-    .compact_old next to the live dir; that one is dropped."""
+    """A crash between the two renames of a staged commit leaves the
+    table's only copy in its old sibling; the next compact() restores it
+    before proceeding. A crash after the second rename leaves a
+    superseded old sibling next to the live dir; that one is dropped."""
     import shutil
 
     from oracledb_datapump_spark import Job
     from oracledb_datapump_spark.catalog import DuckDbConnector
     from oracledb_datapump_spark.directives import DirectiveBase as D
-    from oracledb_datapump_spark.dumpset import DumpSet
+    from oracledb_datapump_spark.dumpset import DumpSet, sibling
 
     src = DuckDbConnector(":memory:")
     src.load_parquet_dir("hr", "/root/testdata/sf0.001")
@@ -165,19 +165,20 @@ def test_compact_crash_recovery(spark, tmp_path):
     assert st.job_state == "COMPLETED"
     ds = DumpSet(dump)
     d = ds.table_dir("hr", "orders")
+    old = sibling(d, "old")
 
-    # simulate the mid-swap crash: live dir renamed away, tmp never swapped in
-    os.rename(d, d + ".compact_old")
+    # simulate the mid-swap crash: live dir renamed away, stage never swapped in
+    os.rename(d, old)
     assert not os.path.isdir(d)
     report = ds.compact(spark)
-    assert os.path.isdir(d), "live dir restored from .compact_old"
-    assert not os.path.exists(d + ".compact_old")
+    assert os.path.isdir(d), "live dir restored from the old sibling"
+    assert not os.path.exists(old)
     assert spark.read.parquet(d).count() == 1500  # no rows lost
-    assert any(e["event"] == "COMPACTION_RECOVERED" for e in ds.read_events())
+    assert any(e["event"] == "TABLE_DIR_RECOVERED" for e in ds.read_events())
     assert report.get("hr.orders", {}).get("files_after", 99) < 9
 
     # simulate the post-swap crash: superseded old copy next to live dir
-    shutil.copytree(d, d + ".compact_old")
+    shutil.copytree(d, old)
     ds.compact(spark)
-    assert not os.path.exists(d + ".compact_old")
+    assert not os.path.exists(old)
     assert spark.read.parquet(d).count() == 1500
