@@ -36,8 +36,9 @@ dump with pyarrow, hands the target Arrow, and takes the target
 fingerprint from a LocalRelation the optimizer evaluates itself
 (``_read_dump_arrow`` → ``_local_fingerprint``). Before either path
 writes a row, IMPORT checks the dump's footer row sum and file count
-against the manifest, so a lost, truncated or extra part file fails the
-table.
+against the manifest (``check_dump``), so a lost, truncated or extra
+part file fails the table. ``Job.restart`` runs the same check before
+it skips a completed export table.
 
 Every table-dir write — the Spark and Arrow dump writes, FILESIZE's
 corrective rewrite, the encrypted writer, and a Parquet target's write
@@ -368,6 +369,42 @@ def _verify_dump_checksums(
     )
 
 
+def check_dump(
+    spark: SparkSession, plan: TablePlan, src_dir: str, fmt: str, tmeta: dict
+) -> tuple[int, int, int]:
+    """(rows, bytes, files) of a table's dump, counted from its footers
+    and checked against its manifest entry ``tmeta``: a lost, truncated
+    or extra part file raises FileError, so IMPORT fails the table
+    before any row is written and ``Job.restart`` re-exports it."""
+    enc = tmeta.get("encryption")
+    if enc:
+        # sealed footers (ALL/METADATA_ONLY) need the key for the
+        # zero-scan accounting; the plain counter (and a plain
+        # spark.read) would die on the Parquet crypto layer, so fail
+        # with the actionable message instead
+        if not plan.encryption_password:
+            raise UsageError(
+                f"dump for {plan.source_key} is encrypted "
+                f"(scope {enc['scope']}); IMPORT requires "
+                "ENCRYPTION_PASSWORD"
+            )
+        rows, size, nfiles = count_encrypted_dump(
+            src_dir, plan.encryption_password, enc["salt_hex"]
+        )
+    else:
+        rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
+    if tmeta.get("rows") is not None and (
+        rows != tmeta["rows"]
+        or tmeta.get("files") not in (None, nfiles)
+    ):
+        raise FileError(
+            f"dump for {plan.source_key} holds {rows} rows in {nfiles} "
+            f"files; its export recorded {tmeta['rows']} rows in "
+            f"{tmeta.get('files')} files"
+        )
+    return rows, size, nfiles
+
+
 def _as_of_files(
     plan: TablePlan, version: int, src_dir: str, tmeta: dict[str, Any]
 ) -> list[str]:
@@ -602,11 +639,13 @@ def _layout(df, plan: TablePlan):
 
 
 def _write_dump(
-    spark: SparkSession, dumpset: DumpSet, plan: TablePlan, df, out_dir: str
+    spark: SparkSession, dumpset: DumpSet, plan: TablePlan, df, out_dir: str,
+    left: dict[str, Any],
 ) -> tuple[int, int, int, dict[str, Any] | None]:
     """Sink stage (EXPORT): the dump writer with FILESIZE and ENCRYPTION.
     Every write goes through ``staged``, so the table dir is replaced
-    whole or left as it was. Returns (rows, bytes, files) of the whole
+    whole or left as it was; ``left["published"]`` is set once the first
+    commit has replaced it. Returns (rows, bytes, files) of the whole
     table dir and, for an encrypted dump, its manifest ``encryption``
     detail."""
     fmt = plan.dump_format
@@ -627,6 +666,7 @@ def _write_dump(
                 codec,
                 encrypt_columns=enc.get("columns"),
             )
+        left["published"] = True
         detail = {
             "scope": enc["scope"],
             "algorithm": enc["algorithm"],
@@ -669,6 +709,7 @@ def _write_dump(
     # an append keeps every current file and adds its own beside them
     with staged(out_dir, data_file_paths(out_dir) if append else ()) as stage:
         writer.format(fmt).save(stage)
+    left["published"] = True
     rows, size, nfiles = _count_dump_rows(out_dir, fmt, spark)
     if (
         filesize
@@ -1046,21 +1087,19 @@ def _fingerprint_done(
     of a created or replaced target as it wrote it; without it, one
     count+xxhash64 aggregate reads the just-written table back — at
     100 TB the price of resuming a stopped multi-hour import instead of
-    re-running it. ``rows`` is the dump's row count on IMPORT; TRANSFER
-    reports the target's."""
+    re-running it. ``rows`` (what STATUS shows) is the dump's row count
+    on IMPORT; TRANSFER reports the target's."""
     if observed is not None:
         t_rows, t_digest = observed
     else:
         t_rows, t_digest = table_fingerprint(
             connector.read_table(spark, plan.target_schema, plan.target_table)
         )
-    counts = {"rows": t_rows} if rows is None else {
-        "rows": rows, "target_rows": t_rows,
-    }
     dumpset.log_event(
         f"TABLE_{operation}_DONE",
         table=plan.event_key(operation),
-        **counts,
+        rows=t_rows if rows is None else rows,
+        target_rows=t_rows,
         target_digest=t_digest,
     )
     return t_rows, t_digest
@@ -1082,11 +1121,14 @@ def export_table(
     connector: Connector,
     dumpset: DumpSet,
     plan: TablePlan,
+    left: dict[str, Any],
 ) -> TableResult:
     """EXPORT one table: read → row transforms → layout → dump sink →
     account. A small table from a driver-resident source takes the Arrow
     lane instead: fetched as Arrow, written by pyarrow, with no Spark
-    job."""
+    job. ``left["published"]`` is set once the sink has replaced the
+    table dir, so a table that fails after it is known to hold a copy
+    its manifest entry does not describe."""
     if not plan.data_included:
         # metadata-only export: record schema, move no rows
         df = connector.read_table(
@@ -1120,6 +1162,7 @@ def export_table(
     n_before_dedup = enc_detail = None
     if arrow is not None and _small(spark, arrow.num_rows, arrow.nbytes):
         schema = _write_dump_arrow(spark, plan, arrow, out_dir)
+        left["published"] = True
         rows, size, nfiles = _count_dump_rows(out_dir)
     else:
         df, pre_dedup = _transform_rows(
@@ -1136,7 +1179,7 @@ def export_table(
         n_before_dedup = None if pre_dedup is None else pre_dedup.count()
         df = _layout(df, plan)
         rows, size, nfiles, enc_detail = _write_dump(
-            spark, dumpset, plan, df, out_dir
+            spark, dumpset, plan, df, out_dir, left
         )
         schema = df.schema
     detail = _account_export(
@@ -1182,34 +1225,7 @@ def import_table(
         # zero rows loaded — the target catalog is untouched
         return _skip(dumpset, plan, "IMPORT", "VERIFY_ONLY")
     fmt = _sniff_dump_format(src_dir)
-    enc = tmeta.get("encryption")
-    if enc:
-        # sealed footers (ALL/METADATA_ONLY) need the key for the
-        # zero-scan accounting; the plain counter (and a plain
-        # spark.read) would die on the Parquet crypto layer, so fail
-        # with the actionable message instead
-        if not plan.encryption_password:
-            raise UsageError(
-                f"dump for {plan.source_key} is encrypted "
-                f"(scope {enc['scope']}); IMPORT requires "
-                "ENCRYPTION_PASSWORD"
-            )
-        rows, size, nfiles = count_encrypted_dump(
-            src_dir, plan.encryption_password, enc["salt_hex"]
-        )
-    else:
-        rows, size, nfiles = _count_dump_rows(src_dir, fmt, spark)
-    if tmeta.get("rows") is not None and (
-        rows != tmeta["rows"]
-        or tmeta.get("files") not in (None, nfiles)
-    ):
-        # a lost, truncated or extra part file: fail the table before
-        # any row is written, never import a silently different table
-        raise FileError(
-            f"dump for {plan.source_key} holds {rows} rows in {nfiles} "
-            f"files; its export recorded {tmeta['rows']} rows in "
-            f"{tmeta.get('files')} files"
-        )
+    rows, size, nfiles = check_dump(spark, plan, src_dir, fmt, tmeta)
     # MERGE/NONE partition options fall through — Spark unions
     # partition dirs natively.
     if config.partition_options == "DEPARTITION":
@@ -1376,13 +1392,16 @@ def _run_one(
 ) -> TableResult:
     """One table under the TABLE_<op>_START / TABLE_<op>_ERROR wrapper.
     The per-table functions are looked up in module globals on every
-    call, so a wrapper patched over them sees each table."""
+    call, so a wrapper patched over them sees each table. A failed
+    table's result detail is what it left on disk: ``published`` when an
+    EXPORT replaced the table dir before failing."""
     dumpset.log_event(
         f"TABLE_{operation}_START", table=plan.event_key(operation)
     )
+    left: dict[str, Any] = {}
     try:
         if operation == "EXPORT":
-            return export_table(spark, connector, dumpset, plan)
+            return export_table(spark, connector, dumpset, plan, left)
         if operation == "TRANSFER":
             return transfer_table(spark, connector, dumpset, plan, config)
         return import_table(spark, connector, dumpset, plan, config)
@@ -1396,4 +1415,6 @@ def _run_one(
             # SKIP_CONST_ERR: continue-on-error, count it
             # (reference DATA_OPTIONS, directives.py:227-238)
             return TableResult(plan, ok=False, error=str(e))
-        return TableResult(plan, ok=False, error=f"{e}\n{traceback.format_exc()}")
+        return TableResult(
+            plan, ok=False, error=f"{e}\n{traceback.format_exc()}", detail=left
+        )

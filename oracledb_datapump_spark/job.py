@@ -6,8 +6,11 @@ tag).run(wait=...)``, ``Job.attach``, ``get_status``, ``poll_for_completion``,
 ``get_logfile`` — with the Oracle server replaced by the Spark engine.
 
 Lifecycle (reference job.py:195-308 → ours). run() walks every step;
-restart() rebuilds the directive list from the dump set, resolves the
-connection (1), re-plans (7) and re-enters at 9 — one execution path:
+restart() rebuilds the job from the last JOB_OPEN event (operation,
+mode, name, directive list), resolves the connection (1), re-plans (7)
+and re-enters at 9 — one execution path. The event log is the record of
+a job (restart, attach and LIST_JOBS read it); the manifest describes
+the dump:
   1. resolve connection            (job.py:200-201)  → _resolve_connector
   2. validate operation/mode       (job.py:206-210)
   3. stamp job_date → job_name     (job.py:213-218, 88-125)
@@ -41,7 +44,7 @@ from .directives import (
     compile_directives,
 )
 from .dumpset import DumpSet, data_file_paths
-from .engine import EngineResult, run_plans
+from .engine import EngineResult, check_dump, run_plans, table_fingerprint
 from .exceptions import JobNotFound, UsageError
 from .planner import (
     estimate_plan,
@@ -238,25 +241,13 @@ class Job:
             as_of=config.as_of_marker(),
             parallel=config.parallel,
             schemas=schemas,
+            # the restart anchor of every operation (START_JOB parity):
+            # ENCRYPTION_PASSWORD serializes as the redacted sentinel
+            directives=[d.to_dict() for d in self.directives],
         )
         if engine_op == "TRANSFER":
             self.dumpset.log_event(
                 "NETWORK_TRANSFER", source=config.network_link
-            )
-        elif self.operation == Operation.IMPORT:
-            # Restart anchor for a dump-set IMPORT (impdp START_JOB
-            # parity): the export's manifest describes the DUMP and is
-            # never overwritten by an import run, so the import job's own
-            # directive list — the input restart() re-compiles — rides
-            # the event log instead; the event stream is the master-table
-            # analog for both directions. ENCRYPTION_PASSWORD serializes
-            # as the redacted sentinel and restart(password=...) must
-            # re-supply it, exactly as on the EXPORT side.
-            self.dumpset.log_event(
-                "IMPORT_JOB_PLAN",
-                job_name=self.job_name,
-                mode=self.mode.value,
-                directives=[d.to_dict() for d in self.directives],
             )
 
         # metadata sidecar (reference job.py:235-259, commands.py:234-244)
@@ -295,7 +286,13 @@ class Job:
             return info
 
         if self.operation == Operation.EXPORT and config.include_metadata:
+            old = self.dumpset.read_manifest().tables if self.dumpset.exists() else {}
             self.dumpset.write_manifest(meta)
+            # in memory only, the entries of the copies this run replaces:
+            # a table whose new copy never publishes keeps its old one
+            meta.tables = {
+                p.source_key: old[p.source_key] for p in plans if p.source_key in old
+            }
 
         self.dumpset.log_event("JOB_START")
         return self._execute(spark, plans, config, engine_op, meta, wait)
@@ -496,8 +493,8 @@ class Job:
         if config.incremental_columns and export and self.dumpset.exists():
             prior = self.dumpset.read_manifest().tables
         for p in plans:
+            p.encryption_password = enc.get("password")
             if not export:
-                p.encryption_password = enc.get("password")
                 continue
             p.encryption = enc or None
             if config.checksum:
@@ -531,16 +528,30 @@ class Job:
                     "need the password at every later export)"
                 )
 
-    def _record_tables(self, meta: JobMetaData, result: EngineResult, config) -> None:
+    def _record_tables(
+        self, meta: JobMetaData, result: EngineResult, config
+    ) -> None:
         """Enrich the manifest with per-table outcomes and write it.
-        Not-run tables (cooperative STOP before their boundary) stay out
-        — the manifest describes what the dump set actually holds, and
-        restart() re-plans the remainder from directives; a resumed run
-        merges into the existing entries, never rebuilds them."""
+        A resumed run merges into the existing entries, never rebuilds
+        them. A table the run left untouched keeps the entry of the copy
+        its dir still holds, if any: a not-run table (cooperative STOP
+        before its boundary; restart() re-plans it from directives), and
+        a failed export table whose new copy never published (a failed
+        staged write leaves the previous copy whole), marked not ok. A
+        failed table that did publish gets a bare entry, with no
+        watermark or schema to describe a copy it never accounted."""
+        export = self.operation == Operation.EXPORT
         for r in result.tables:
             if r.detail.get("not_run"):
                 continue
-            meta.tables[r.plan.source_key] = {
+            key = r.plan.source_key
+            if (
+                not r.ok and export and key in meta.tables
+                and not r.detail.get("published")
+            ):
+                meta.tables[key] = {**meta.tables[key], "ok": False, "error": r.error}
+                continue
+            meta.tables[key] = {
                 "rows": None if not r.ok else r.rows,
                 "row_count": r.rows,
                 "bytes": r.bytes,
@@ -729,38 +740,30 @@ class Job:
         spark: SparkSession | None = None,
         password: str | None = None,
     ) -> JobStatusInfo:
-        """START_JOB analog: resume a STOPPED export from its manifest —
-        the dump set's manifest/event log plays Oracle's master table.
+        """START_JOB analog: resume a STOPPED job — EXPORT, dump-set
+        IMPORT or NETWORK_LINK transfer. The dump set's event log plays
+        Oracle's master table.
 
-        Re-plans the ORIGINAL job from the manifest's recorded directive
-        list (so FLASHBACK/as-of, CHECKSUM, COMPRESSION, filters and
-        remaps are all re-applied verbatim), then skips every table whose
-        dump is already complete: manifest entry ok, data files present,
-        and — when CHECKSUM digests were recorded — the recomputed
-        per-file digests match (a tampered or truncated table is
-        re-exported, TABLE_RESUME_RECHECK_FAILED). Only the remaining
-        tables run; the manifest is merged, never rebuilt, so completed
-        tables keep their original entries byte-for-byte.
+        The last JOB_OPEN names the job: operation, mode, job name and
+        the directive list, re-compiled verbatim (FLASHBACK/as-of,
+        CHECKSUM, COMPRESSION, filters and remaps are all re-applied). A
+        table is finished when its latest TABLE_<op>_START/_DONE/_ERROR
+        event since that JOB_OPEN is a _DONE, and it is skipped once
+        verified:
 
-        NETWORK_LINK transfers (IMPORT + link) are restartable too: there
-        is no dump to digest, so completeness is verified against the
-        TARGET — each completed table recorded a row count + content
-        fingerprint (engine.table_fingerprint) at TABLE_TRANSFER_DONE,
-        and restart() recomputes both before skipping; a dropped or
-        tampered target is re-transferred with write_mode forced to
-        overwrite.
+        - EXPORT checks the dump against its manifest entry: data files
+          present, recorded CHECKSUM digests recomputed and equal, and
+          the footer row sum and file count IMPORT checks
+          (engine.check_dump).
+        - IMPORT and TRANSFER have no new dump, so they check the TARGET:
+          its row count and content fingerprint (engine.table_fingerprint)
+          must equal the _DONE event's target_rows and target_digest. The
+          re-run of a failed target is forced to overwrite it.
 
-        Dump-set IMPORT jobs (impdp ATTACH/START_JOB) resume the same
-        way: the export's manifest describes the DUMP and is never
-        overwritten by an import run, so the import job re-plans from
-        the IMPORT_JOB_PLAN event's directive list and verifies each
-        completed table against the TARGET fingerprint recorded at
-        TABLE_IMPORT_DONE (target_rows + target_digest) — verified
-        targets are skipped wholesale, a dropped/tampered target is
-        re-imported with write_mode forced to overwrite, and only
-        not-run tables execute. A stopped import from before the
-        fingerprints were recorded falls back to the idempotent
-        TABLE_EXISTS_ACTION('SKIP') re-run, loudly.
+        A failed check logs TABLE_RESUME_RECHECK_FAILED and the table runs
+        again. Only the remaining tables run; EXPORT and TRANSFER merge
+        their outcomes into the manifest, so completed tables keep their
+        entries byte-for-byte.
         """
         if self.dumpset is None:
             raise UsageError("restart requires a job with a dump set")
@@ -773,59 +776,28 @@ class Job:
                 f"Only a STOPPED job can restart (START_JOB); "
                 f"state={self._state.value}/{info.job_state}"
             )
-        # Which job is being resumed? The LAST JOB_OPEN event names it.
-        # A dump-set IMPORT leaves the export's manifest untouched, so
-        # its restart anchor is the IMPORT_JOB_PLAN event (directive
-        # list) rather than the manifest; EXPORT and TRANSFER jobs keep
-        # resuming from the manifest exactly as before.
         events = list(self.dumpset.read_events())
-        last_open = max(
-            (
-                i
-                for i, e in enumerate(events)
-                if e.get("event") == "JOB_OPEN"
-            ),
-            default=None,
-        )
-        import_plan_ev = None
-        if (
-            last_open is not None
-            and events[last_open].get("operation") == Operation.IMPORT.value
-        ):
-            import_plan_ev = next(
-                (
-                    e
-                    for e in events[last_open:]
-                    if e.get("event") == "IMPORT_JOB_PLAN"
-                ),
-                None,
+        opens = [i for i, e in enumerate(events) if e.get("event") == "JOB_OPEN"]
+        since = events[opens[-1]:] if opens else [{}]
+        opened = since[0]
+        if "directives" not in opened:
+            raise UsageError(
+                "restart() re-plans a job from the directive list of its "
+                "last JOB_OPEN event, and this dump set records none"
             )
         if connection is not None:
             self.connection = connection
         spark = spark or get_spark()
         self.job_date = utc_now()
-        meta = None
-        if import_plan_ev is not None:
-            self.operation = Operation.IMPORT
-            self.mode = JobMode(import_plan_ev["mode"])
-            self.job_name = import_plan_ev.get("job_name", self.job_name)
-            self.directives = [
-                DirectiveBase.from_dict(d)
-                for d in import_plan_ev["directives"]
-            ]
-        else:
-            meta = self.dumpset.read_manifest()
-            self.operation = Operation(meta.operation)
-            self.mode = JobMode(meta.mode)
-            self.job_name = meta.job_name
-            self.directives = [
-                DirectiveBase.from_dict(d) for d in meta.directives
-            ]
+        self.operation = Operation(opened["operation"])
+        self.mode = JobMode(opened["mode"])
+        self.job_name = opened["job_name"]
+        self.directives = [DirectiveBase.from_dict(d) for d in opened["directives"]]
         # ENCRYPTION_PASSWORD persists as the redacted '***' sentinel
-        # (never the secret) — re-planning from the manifest verbatim
-        # would seal every remaining table under a key derived from a
-        # public constant. The caller must re-supply the original
-        # password, exactly as Oracle's START_JOB re-prompts for it.
+        # (never the secret) — re-planning from it verbatim would seal
+        # every remaining table under a key derived from a public
+        # constant. The caller must re-supply the original password,
+        # exactly as Oracle's START_JOB re-prompts for it.
         enc_pw = [
             d for d in self.directives
             if getattr(d, "NAME", None) == "ENCRYPTION_PASSWORD"
@@ -833,10 +805,9 @@ class Job:
         if enc_pw:
             if not password or password == "***":
                 raise UsageError(
-                    "this job was exported with ENCRYPTION_PASSWORD; the "
-                    "manifest stores only the redacted sentinel, so "
-                    "restart() requires the original password: "
-                    "restart(password=...)"
+                    "this job ran with ENCRYPTION_PASSWORD; the event log "
+                    "stores only the redacted sentinel, so restart() "
+                    "requires the original password: restart(password=...)"
                 )
             for d in enc_pw:
                 d.value = password
@@ -846,66 +817,65 @@ class Job:
                 "no ENCRYPTION_PASSWORD directive"
             )
         config = compile_directives(self.directives, mode=self.mode.value)
-        is_import = import_plan_ev is not None
-        if (
-            self.operation == Operation.IMPORT
-            and not config.network_link
-            and not is_import
-        ):
-            raise UsageError(
-                "restart() supports EXPORT, NETWORK_LINK transfer and "
-                "dump-set IMPORT jobs; this stopped import predates the "
-                "IMPORT_JOB_PLAN restart anchor — re-run it with "
-                "TABLE_EXISTS_ACTION('SKIP') for resume-equivalent "
-                "semantics"
-            )
         # the connector re-resolves from the recorded directive list,
         # exactly as the original run: an expdp-side NETWORK_LINK reads
         # the link, every other job needs the connection again
         self._resolve_connector(config)
         self.config = config
         plans, engine_op = self._plan(config)
-        # Completed-table record: manifest entries for EXPORT/TRANSFER;
-        # for a dump-set IMPORT the TABLE_IMPORT_DONE events since the
-        # last JOB_OPEN (target fingerprints) play that role — earlier
-        # unrelated import runs on the same dump set stay out of scope.
-        import_done: dict[str, dict] = {}
-        if is_import:
-            for ev in events[last_open:]:
-                if (
-                    ev.get("event") == "TABLE_IMPORT_DONE"
-                    and ev.get("target_digest") is not None
-                ):
-                    import_done[ev.get("table", "")] = {
-                        "ok": True,
-                        "row_count": ev.get("target_rows"),
-                        "target_digest": ev.get("target_digest"),
-                    }
-        # IMPORT/TRANSFER completeness is verified against the TARGET,
-        # EXPORT against the dump
+        meta = None
+        if engine_op != "IMPORT":
+            # the stopped run's manifest, which the resumed run merges into
+            meta = self.dumpset.read_manifest()
+            if (meta.operation, meta.job_name) != (
+                opened["operation"], self.job_name
+            ):
+                raise UsageError(
+                    f"the dump set's manifest records {meta.operation} job "
+                    f"{meta.job_name}, not the stopped job {self.job_name}; "
+                    "re-run the job instead (REUSE_DUMPFILES('YES') for an "
+                    "export, TABLE_EXISTS_ACTION('SKIP') for an import)"
+                )
+        kinds = {f"TABLE_{engine_op}_{s}" for s in ("START", "DONE", "ERROR")}
+        latest = {ev.get("table"): ev for ev in since if ev.get("event") in kinds}
+        keys = [p.event_key(engine_op) for p in plans]
+        shared = sorted({k for k in keys if keys.count(k) > 1 and k in latest})
+        if shared:
+            # the events name the target only, so they cannot tell which
+            # of the sources remapped onto it finished
+            raise UsageError(
+                f"restart() cannot tell which of the sources remapped onto "
+                f"{', '.join(shared)} (REMAP_SCHEMA) finished; re-run the "
+                "job instead"
+            )
         on_target = engine_op != "EXPORT"
-        intact = self._transfer_intact if on_target else self._resume_intact
         remaining, skipped = [], []
         for p in plans:
-            entry = (
-                import_done.get(p.target_key)
-                if is_import
-                else meta.tables.get(p.source_key)
+            done = latest.get(p.event_key(engine_op), {})
+            # a target _DONE without a fingerprint moved no rows (SKIP,
+            # VERIFY_ONLY): it is re-run, never forced to overwrite
+            if done.get("event") != f"TABLE_{engine_op}_DONE" or (
+                on_target and done.get("target_digest") is None
+            ):
+                remaining.append(p)
+                continue
+            reason = (
+                self._transfer_intact(spark, p, done)
+                if on_target
+                else self._resume_intact(spark, p, meta.tables.get(p.source_key))
             )
-            if entry and entry.get("ok"):
-                reason = intact(spark, p, entry)
-                if reason is None:
-                    skipped.append(p)
-                    continue
-                self.dumpset.log_event(
-                    "TABLE_RESUME_RECHECK_FAILED",
-                    table=p.event_key(engine_op),
-                    reason=reason,
-                )
-                if on_target:
-                    # the target holds a tampered/partial remnant, so
-                    # the re-run must replace it, never append onto it
-                    p.write_mode, p.truncate = "overwrite", False
+            if reason is None:
+                skipped.append(p)
+                continue
+            self.dumpset.log_event(
+                "TABLE_RESUME_RECHECK_FAILED",
+                table=p.event_key(engine_op),
+                reason=reason,
+            )
+            if on_target:
+                # the target holds a tampered/partial remnant, so
+                # the re-run must replace it, never append onto it
+                p.write_mode, p.truncate = "overwrite", False
             remaining.append(p)
         self.dumpset.log_event(
             "JOB_RESTART",
@@ -922,37 +892,42 @@ class Job:
         register_job(self.job_name, self)
         return self._execute(spark, remaining, config, engine_op, meta, True)
 
-    def _resume_intact(self, spark: SparkSession, plan, entry: dict) -> str | None:
-        """Why a manifest-complete table's dump is not physically intact,
-        or None when it is. Files must exist; when the original run
-        recorded CHECKSUM digests they are recomputed (executor fan-out,
-        same as VERIFY_CHECKSUM) and compared — the digest map is the
-        proof of completeness, so a tampered file forces a re-export
-        rather than a silent skip."""
+    def _resume_intact(
+        self, spark: SparkSession, plan, entry: dict | None
+    ) -> str | None:
+        """Why a completed export table's dump does not match its manifest
+        entry, or None when it does. Files must exist; recorded CHECKSUM
+        digests are recomputed (executor fan-out, same as
+        VERIFY_CHECKSUM) and compared; a dump without them gets the
+        footer row sum and file count check IMPORT makes
+        (engine.check_dump)."""
         tdir = self.dumpset.table_dir(plan.schema, plan.table)
-        n_files = sum(1 for _ in data_file_paths(tdir))
-        if n_files == 0:
+        if not any(data_file_paths(tdir)):
             return "no data files on disk"
+        if not entry:
+            return "no manifest entry"
         cks = entry.get("checksums")
         if cks:
-            fresh = self.dumpset.file_digests(
+            # equal digests leave the footer check nothing to find
+            digests = self.dumpset.file_digests(
                 spark, tdir, cks.get("algorithm", "SHA256")
             )
-            if fresh != cks.get("files"):
-                return "checksum mismatch"
-        elif entry.get("files") and n_files != entry["files"]:
-            return f"file count {n_files} != recorded {entry['files']}"
+            return None if digests == cks.get("files") else "checksum mismatch"
+        try:
+            check_dump(spark, plan, tdir, plan.dump_format, entry)
+        except Exception as e:
+            # an unreadable dump is not intact either
+            return str(e)
         return None
 
-    def _transfer_intact(self, spark: SparkSession, plan, entry: dict) -> str | None:
+    def _transfer_intact(self, spark: SparkSession, plan, done: dict) -> str | None:
         """Target-side analog of _resume_intact for IMPORT and NETWORK_LINK
         jobs, which have no new dump to digest: the target table must
         exist and its recomputed fingerprint (row count + xxhash64-XOR
         content digest, engine.table_fingerprint) must equal the values
-        recorded at TABLE_<op>_DONE. One distributed scan per completed
-        table, the same cost class as the export path's digest recheck."""
-        from .engine import table_fingerprint
-
+        its TABLE_<op>_DONE event ``done`` recorded. One distributed scan
+        per completed table, the same cost class as the export path's
+        digest recheck."""
         if not self.connector.table_exists(
             plan.target_schema, plan.target_table
         ):
@@ -967,10 +942,9 @@ class Job:
             # an unreadable target (all data files gone, corrupt footer)
             # is the strongest possible "not intact" — re-transfer it
             return f"target unreadable: {e}"
-        if rows != entry.get("row_count"):
-            return f"target rows {rows} != recorded {entry.get('row_count')}"
-        want = entry.get("target_digest")
-        if want is not None and digest != want:
+        if rows != done.get("target_rows"):
+            return f"target rows {rows} != recorded {done.get('target_rows')}"
+        if digest != done["target_digest"]:
             return "target content digest mismatch"
         return None
 
@@ -996,20 +970,28 @@ class Job:
                 "its dump set"
             )
         ds = DumpSet(dumpdir)
-        if not ds.exists() and not list(ds.read_events()):
+        info = status_from_events(ds)
+        desc = info.job_description
+        if desc is None:
             raise JobNotFound(f"No job artifacts at {dumpdir}")
+        if desc.job_name != job_name and any(
+            e.get("event") == "JOB_OPEN" and e.get("job_name") == job_name
+            for e in ds.read_events()
+        ):
+            # an earlier job of this dump set, which a later one replaced
+            raise JobNotFound(
+                f"Job {job_name!r} is no longer the job of {dumpdir}: its "
+                f"last JOB_OPEN names {desc.job_name!r}"
+            )
+        # the last JOB_OPEN names the job the dump set holds
         job = cls(
-            Operation.EXPORT, JobMode.SCHEMA, dumpfiles=dumpdir,
-            job_name=job_name,
+            desc.operation, desc.mode, dumpfiles=dumpdir,
+            job_name=desc.job_name,
         )
         job.dumpset = ds
         job.attached_sessions = 1  # this attach handle
         try:
-            job._state = JobState(status_from_events(ds).job_state)
+            job._state = JobState(info.job_state)
         except ValueError:
             job._state = JobState.NOT_RUNNING
-        if ds.exists():
-            m = ds.read_manifest()
-            job.operation = Operation(m.operation)
-            job.mode = JobMode(m.mode)
         return job

@@ -2366,14 +2366,14 @@ def datapump_roundtrip_import_restart(
     dump-set IMPORT resumes, skipping fingerprint-verified targets (the
     reference models the state machine — status.py:32-47 — and the
     START_JOB command — commands.py:113-119 — for both directions; our
-    import-side master table is the event log: IMPORT_JOB_PLAN records
-    the directive list and each TABLE_IMPORT_DONE records the TARGET's
+    master table is the event log: the import's JOB_OPEN records its
+    directive list and each TABLE_IMPORT_DONE records the TARGET's
     row count + content fingerprint, engine.table_fingerprint).
 
     A 3-table import is stopped cooperatively from within table 1's
     write: table 1 loads WHOLE, tables 2–3 are recorded not-run, the job
     lands STOPPED (``stopped_early``). ``Job.attach(...).restart()``
-    re-compiles the import directives from IMPORT_JOB_PLAN,
+    re-compiles the import directives from the last JOB_OPEN,
     fingerprint-verifies table 1's TARGET and skips it
     (``resume_skipped_completed`` — exactly one TABLE_RESUME_SKIP, and
     exactly one TABLE_IMPORT_DONE per table across both runs proves

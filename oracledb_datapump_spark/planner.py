@@ -57,7 +57,8 @@ class TablePlan:
     truncate: bool = False
     writer_options: dict[str, str] = field(default_factory=dict)
     topo_level: int = 0  # FK wave; parents land before children
-    # in memory only, never in the manifest
+    # the key a sealed dump is read with — by IMPORT, and by restart's
+    # check of an exported table; in memory only, never in the manifest
     encryption_password: str | None = None
     # NETWORK_LINK transfer: the connector rows are read from
     src_connector: Connector | None = None

@@ -167,9 +167,10 @@ def _stop(payload: dict[str, Any], connection: Any, spark=None) -> Response:
 
 def _restart(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """START_JOB over the JSON protocol (public DBMS_DATAPUMP START_JOB:
-    resume a STOPPED job from its master table — here, the dump-set
-    manifest). Synchronous: responds when the resumed job lands.
-    Encrypted jobs: the manifest holds only the redacted '***' sentinel,
+    resume a STOPPED job from its master table — here, the dump set's
+    event log, whose last JOB_OPEN names the job and its directives).
+    Synchronous: responds when the resumed job lands.
+    Encrypted jobs: the event log holds only the redacted '***' sentinel,
     so the caller re-supplies the password — the protocol analog of
     START_JOB re-prompting for it."""
     return _on_job("RESTART", payload, lambda job: job.restart(
@@ -182,8 +183,8 @@ def _restart(payload: dict[str, Any], connection: Any, spark=None) -> Response:
 def _list_jobs(payload: dict[str, Any], connection: Any, spark=None) -> Response:
     """DBA_DATAPUMP_JOBS over the JSON protocol: enumerate the live-job
     registry plus (optionally) every dump set under ``dump_root``, with
-    operation/mode from the manifest and state replayed from the event
-    log (reference status.py:366-385 reads the Oracle view; here the
+    operation/mode/name from its last JOB_OPEN and state replayed from
+    the event log (reference status.py:366-385 reads the Oracle view; here the
     dump-set directory IS the master-table store)."""
     from .status import list_jobs
 

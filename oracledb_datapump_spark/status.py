@@ -143,11 +143,11 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
 
     Two sources, registry-first like the status strategies: every job in
     the in-process live registry, then — when ``dump_root`` is given —
-    every dump-set directory under it whose job is NOT already listed,
-    with operation/mode from the manifest and state replayed from the
-    event log (the cross-process half the in-memory registry cannot
-    see, exactly the split cleanup_orphans honors). Rows sort by
-    job_name for a stable listing."""
+    the job of every dump-set directory under it that is NOT already
+    listed: operation, mode and name from its last JOB_OPEN and state
+    replayed from its event log (the cross-process half the in-memory
+    registry cannot see, exactly the split cleanup_orphans honors). Rows
+    sort by job_name for a stable listing."""
     rows: list[dict] = []
     seen: set[str] = set()
     for name, job in sorted(_live_jobs.items()):
@@ -177,52 +177,27 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
             path = os.path.join(dump_root, entry)
             if not os.path.isdir(path):
                 continue
-            ds = DumpSet(path)
             try:
-                if not list(ds.read_events()) and not ds.exists():
-                    continue  # bare directory, not a dump set
-                info = status_from_events(ds)
+                info = status_from_events(DumpSet(path))
             except Exception:
                 continue
-            # name: manifest first, else the first event that carries one
-            name = None
-            op = mode = None
-            try:
-                meta = ds.read_manifest()
-                op, mode, name = meta.operation, meta.mode, meta.job_name
-            except Exception:
-                pass
-            if not name:
-                try:
-                    name = next(
-                        (
-                            e["job_name"]
-                            for e in ds.read_events()
-                            if e.get("job_name")
-                        ),
-                        None,
-                    )
-                except Exception:
-                    name = None
-            name = name or entry
-            if name in seen:
-                continue
+            desc = info.job_description
+            if desc is None or desc.job_name in seen:
+                continue  # no JOB_OPEN: not a dump set
             rows.append(
                 {
-                    "job_name": name,
-                    "operation": op,
-                    "mode": mode,
+                    "job_name": desc.job_name,
+                    "operation": desc.operation,
+                    "mode": desc.mode,
                     "state": info.job_state,
                     # no live process holds this job: zero attached
                     # sessions; degree replays from JOB_OPEN's parallel
                     "attached_sessions": 0,
-                    "degree": getattr(
-                        info.job_description, "parallel", None
-                    ),
+                    "degree": desc.parallel,
                     "source": "events",
                 }
             )
-            seen.add(name)
+            seen.add(desc.job_name)
     return sorted(rows, key=lambda r: r["job_name"] or "")
 
 

@@ -380,3 +380,33 @@ def test_columns_without_scope_refused():
 
     with pytest.raises(UsageError, match="ENCRYPTION_COLUMNS"):
         validate_encryption({"columns": ["secret_col"]})
+
+
+def test_failed_reexport_keeps_previous_copy_importable(spark, dirs, monkeypatch):
+    """A REUSE_DUMPFILES re-export that fails mid-write leaves the
+    previous sealed copy whole, and its manifest entry keeps that copy's
+    description (the KDF salt among it), marked not ok: IMPORT still
+    decrypts and loads the previous copy."""
+    from oracledb_datapump_spark import engine
+
+    stage, wh, dump = dirs
+    src = _seed(spark, stage)
+    enc = [D.ENCRYPTION("DATA_ONLY"), D.ENCRYPTION_PASSWORD(PW)]
+    st = _export(spark, stage, dump, enc)
+    assert st.job_state == "COMPLETED", st.error
+    write = engine.write_encrypted_dump
+
+    def fail_mid_write(df, out, *a, **kw):
+        write(df, out, *a, **kw)
+        raise RuntimeError("injected failure mid-write")
+
+    monkeypatch.setattr(engine, "write_encrypted_dump", fail_mid_write)
+    st = _export(spark, stage, dump, enc + [D.REUSE_DUMPFILES("YES")])
+    assert st.job_state == "COMPLETED_WITH_ERRORS", st.job_state
+    monkeypatch.undo()
+    entry = DumpSet(dump).read_manifest().tables["main.nation"]
+    assert entry["ok"] is False and entry["encryption"]["salt_hex"]
+    st = _import(spark, wh, dump, [D.ENCRYPTION_PASSWORD(PW)])
+    assert st.job_state == "COMPLETED", st.error
+    out = ParquetConnector(wh).read_table(spark, "main", "nation")
+    assert engine.table_fingerprint(out) == engine.table_fingerprint(src)

@@ -158,3 +158,47 @@ def test_compacted_dump_imports_and_restarts_intact(
         assert tgt.read_table(spark, "imp", t).count() == (
             spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
         )
+
+
+def test_restart_reexports_truncated_table(
+    spark, sf_dir, tmp_path, max_partition_bytes
+):
+    """restart() checks a completed export table the way IMPORT checks
+    it: the last part rewritten with half its rows keeps the file count,
+    but its footer row sum no longer matches the manifest, so the table
+    is re-exported instead of skipped."""
+    stage = str(tmp_path / "stage")
+    for t in ("region", "nation"):
+        spark.read.parquet(f"{sf_dir}/{t}.parquet").repartition(4).write.parquet(
+            os.path.join(stage, f"{t}.parquet")
+        )
+    dump = str(tmp_path / "dump")
+    src = StopOnFirstRead(stage)
+    job = Job(
+        "EXPORT", "TABLE", dumpfiles=dump,
+        directives=[D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("region"),
+                    D.INCLUDE_TABLE("nation")],
+    )
+    src.job = job
+    with max_partition_bytes("1k"):
+        st = job.run(wait=True, connection=src, spark=spark)
+    assert st.job_state == "STOPPED", st.job_state
+    ds = DumpSet(dump)
+    (done,) = [e["table"] for e in ds.read_events() if e["event"] == "TABLE_EXPORT_DONE"]
+    tdir = ds.table_dir(*done.split("."))
+    _truncate_last_part(sorted(
+        os.path.join(tdir, n) for n in os.listdir(tdir) if n.startswith("part-")
+    ))
+    n0 = len(list(ds.read_events()))
+    st = Job.attach(job.job_name, dumpdir=dump).restart(
+        connection=ParquetConnector(stage), spark=spark
+    )
+    assert st.job_state == "COMPLETED", st.error
+    evs = list(ds.read_events())[n0:]
+    (recheck,) = [e for e in evs if e["event"] == "TABLE_RESUME_RECHECK_FAILED"]
+    assert recheck["table"] == done and "export recorded" in recheck["reason"]
+    assert not any(e["event"] == "TABLE_RESUME_SKIP" for e in evs)
+    assert done in [e["table"] for e in evs if e["event"] == "TABLE_EXPORT_DONE"]
+    assert spark.read.parquet(tdir).count() == (
+        spark.read.parquet(f"{sf_dir}/{done.split('.')[1]}.parquet").count()
+    )

@@ -3,17 +3,16 @@
 Oracle's impdp resumes a stopped import via ATTACH + START_JOB; the
 reference models the state machine (status.py:32-47) and the START_JOB
 command (commands.py:113-119) but never drives either locally. Our
-import-side master table is the EVENT LOG: IMPORT_JOB_PLAN records the
-import job's directive list (the export's manifest describes the DUMP
-and is never overwritten by an import run), and each TABLE_IMPORT_DONE
-records the TARGET's row count + content fingerprint
-(engine.table_fingerprint) so restart() can skip verified-loaded
-targets wholesale.
+master table is the EVENT LOG: the import's JOB_OPEN records the job's
+directive list (the export's manifest describes the DUMP and is never
+overwritten by an import run), and each TABLE_IMPORT_DONE records the
+TARGET's row count + content fingerprint (engine.table_fingerprint) so
+restart() can skip verified-loaded targets wholesale.
 
 Semantics under test:
 - stop() during an import is cooperative at a table boundary; the job
   lands STOPPED with whole tables only.
-- restart() re-compiles the IMPORT directives from IMPORT_JOB_PLAN,
+- restart() re-compiles the IMPORT directives from the last JOB_OPEN,
   fingerprint-verifies completed targets, skips them, and loads only
   the remainder — exactly one TABLE_IMPORT_DONE per table across runs.
 - negative proofs: a tampered/overwritten target fails the fingerprint
@@ -31,7 +30,7 @@ from oracledb_datapump_spark.base import JobState
 from oracledb_datapump_spark.catalog import DuckDbConnector, ParquetConnector
 from oracledb_datapump_spark.directives import DirectiveBase as D
 from oracledb_datapump_spark.dumpset import DumpSet
-from oracledb_datapump_spark.exceptions import UsageError
+from oracledb_datapump_spark.exceptions import JobNotFound, UsageError
 from oracledb_datapump_spark.job import Job
 
 TABLES = ["region", "nation", "supplier"]
@@ -113,7 +112,7 @@ def test_stopped_import_records_target_fingerprints(spark, sf_dir, tmp_path):
     _export(spark, stage, dump)
     job, n0 = _stopped_import(spark, dump, wh)
     evs = _evs(dump, n0)
-    plan_evs = [e for e in evs if e["event"] == "IMPORT_JOB_PLAN"]
+    plan_evs = [e for e in evs if e["event"] == "JOB_OPEN"]
     assert len(plan_evs) == 1
     assert any(
         d["name"] == "TABLE_EXISTS_ACTION" for d in plan_evs[0]["directives"]
@@ -123,6 +122,58 @@ def test_stopped_import_records_target_fingerprints(spark, sf_dir, tmp_path):
     assert dones[0]["target_digest"] is not None
     assert dones[0]["target_rows"] > 0
     assert sum(1 for e in evs if e["event"] == "TABLE_IMPORT_NOT_RUN") == 2
+
+
+def test_export_then_stopped_import_reports_the_import_job(
+    spark, sf_dir, tmp_path
+):
+    """One dump set, two jobs: a completed export, then a stopped
+    import. The last JOB_OPEN names the dump set's job, so LIST_JOBS and
+    attach report the import, not the export, the export's name no
+    longer attaches, and restart() finishes the import."""
+    from oracledb_datapump_spark.status import list_jobs
+
+    stage = _stage(spark, sf_dir, tmp_path)
+    root = tmp_path / "dumps"
+    dump, wh = str(root / "set1"), str(tmp_path / "wh")
+    _export(spark, stage, dump)
+    (export_name,) = [
+        e["job_name"] for e in DumpSet(dump).read_events()
+        if e["event"] == "JOB_OPEN"
+    ]
+    job, _ = _stopped_import(spark, dump, wh)
+    rows = {r["job_name"]: r for r in list_jobs(dump_root=str(root))}
+    row = rows[job.job_name]
+    assert (row["operation"], row["state"]) == ("IMPORT", "STOPPED")
+    assert rows.get(export_name, {}).get("state") != "STOPPED"
+    att = Job.attach(job.job_name, dumpdir=dump)
+    assert (att.operation.value, att.job_name) == ("IMPORT", job.job_name)
+    # the export's name no longer names the dump set's job
+    with pytest.raises(JobNotFound, match=job.job_name):
+        Job.attach(export_name, dumpdir=dump)
+    st = att.restart(connection=ParquetConnector(wh), spark=spark)
+    assert st.job_state == JobState.COMPLETED.value, st.error
+
+
+def test_restart_refuses_job_open_without_directives(spark, sf_dir, tmp_path):
+    """A last JOB_OPEN that records no directive list (an event log
+    written before JOB_OPEN carried one) cannot be re-planned."""
+    import json
+
+    stage = _stage(spark, sf_dir, tmp_path)
+    dump, wh = str(tmp_path / "dump"), str(tmp_path / "wh")
+    _export(spark, stage, dump)
+    job, _ = _stopped_import(spark, dump, wh)
+    ds = DumpSet(dump)
+    evs = list(ds.read_events())
+    for e in evs:
+        e.pop("directives", None)
+    with open(ds.events_path, "w") as f:
+        f.writelines(json.dumps(e) + "\n" for e in evs)
+    with pytest.raises(UsageError, match="directive list"):
+        Job.attach(job.job_name, dumpdir=dump).restart(
+            connection=ParquetConnector(wh), spark=spark
+        )
 
 
 def test_restart_skips_verified_target_and_finishes(spark, sf_dir, tmp_path):
@@ -257,7 +308,7 @@ def test_restart_import_requires_target_connection(spark, sf_dir, tmp_path):
 def test_restart_encrypted_import_requires_real_password(
     spark, sf_dir, tmp_path
 ):
-    """IMPORT_JOB_PLAN persists ENCRYPTION_PASSWORD only as the redacted
+    """JOB_OPEN persists ENCRYPTION_PASSWORD only as the redacted
     sentinel; a resumed encrypted import must re-supply the original,
     exactly as on the EXPORT side (Oracle START_JOB re-prompts)."""
     stage = _stage(spark, sf_dir, tmp_path)
@@ -317,7 +368,7 @@ class FailThenStop(ParquetConnector):
 
 def test_restart_import_with_remap_schema(spark, sf_dir, tmp_path):
     """restart x REMAP_SCHEMA: the resumed import re-applies the remap
-    recorded in IMPORT_JOB_PLAN — fingerprint verification and the
+    recorded in JOB_OPEN — fingerprint verification and the
     remaining loads all land in the REMAPPED schema."""
     stage = _stage(spark, sf_dir, tmp_path)
     dump, wh = str(tmp_path / "dump"), str(tmp_path / "wh")

@@ -95,3 +95,41 @@ def test_merge_apply_replay_is_idempotent(spark, tmp_path):
     )
     assert replayed == state
     shutil.rmtree(src, ignore_errors=True)
+
+
+def test_failed_append_after_publish_is_not_appended_again(
+    spark, tmp_path, monkeypatch
+):
+    """An incremental export whose append is published but whose
+    accounting then fails leaves a dump its old entry does not describe:
+    the entry is recorded bare (no watermark), so the next run rewrites
+    the table in full instead of appending the same rows again."""
+    from oracledb_datapump_spark import engine
+    from oracledb_datapump_spark.catalog import DuckDbConnector
+
+    duck = DuckDbConnector(":memory:")
+    duck.execute("CREATE SCHEMA inc1")
+    duck.execute("CREATE TABLE inc1.tx(id BIGINT, amount DOUBLE)")
+    duck.execute("INSERT INTO inc1.tx SELECT range, range * 1.5 FROM range(100)")
+    dump = str(tmp_path / "incdump")
+    assert _export(duck, spark, dump).job_state == JobState.COMPLETED.value
+    duck.execute(
+        "INSERT INTO inc1.tx SELECT range, range * 1.5 FROM range(100, 150)"
+    )
+
+    def fail_after_publish(*a, **kw):
+        raise RuntimeError("injected accounting failure")
+
+    monkeypatch.setattr(engine, "_account_export", fail_after_publish)
+    st = _export(duck, spark, dump)
+    assert st.job_state == JobState.COMPLETED_WITH_ERRORS.value, st.job_state
+    monkeypatch.undo()
+    assert spark.read.parquet(f"{dump}/inc1/tx").count() == 150
+    entry = DumpSet(dump).read_manifest().tables["inc1.tx"]
+    assert entry["ok"] is False and entry.get("watermark") is None
+
+    st = _export(duck, spark, dump)
+    assert st.job_state == JobState.COMPLETED.value, st.error
+    df = spark.read.parquet(f"{dump}/inc1/tx")
+    assert df.count() == df.select("id").distinct().count() == 150
+    assert DumpSet(dump).read_manifest().tables["inc1.tx"]["watermark"] == 149

@@ -7,7 +7,7 @@ Semantics under test:
 - stop() is cooperative at a TABLE boundary: the in-flight table
   completes, not-yet-started tables are recorded as not-run, job lands
   STOPPED (restartable), dump set holds only whole tables.
-- restart() re-plans from the manifest's recorded directives, skips
+- restart() re-plans from the last JOB_OPEN's recorded directives, skips
   tables whose dump is complete (digest-verified when CHECKSUM was on),
   runs the remainder, and merges the manifest.
 - negative proofs: a tampered completed table is RE-exported on restart;
@@ -454,6 +454,44 @@ def test_stop_restart_preserves_incremental_watermark(spark, tmp_path):
         assert m["row_count"] == 15
 
 
+def test_stopped_incremental_cycle_keeps_not_run_watermarks(spark, tmp_path):
+    """A later INCREMENTAL cycle stopped after its first table leaves the
+    second table's dump untouched, so its manifest entry (watermark and
+    snapshot history) stays: the restart appends only its new rows."""
+    from pyspark.sql import functions as F
+
+    stage, dump = str(tmp_path / "stage"), str(tmp_path / "dump")
+
+    def grow(lo, hi):
+        for t in ("ta", "tb"):
+            spark.range(lo, hi).select(
+                F.col("id"), F.col("id").cast("long").alias("ver")
+            ).write.mode("append").parquet(os.path.join(stage, f"{t}.parquet"))
+
+    dirs = [D.INCLUDE_SCHEMA("main"), D.INCLUDE_TABLE("ta"),
+            D.INCLUDE_TABLE("tb"), D.INCREMENTAL_COLUMN("ver")]
+    grow(0, 10)
+    st = Job("EXPORT", "TABLE", dumpfiles=dump, directives=dirs).run(
+        wait=True, connection=ParquetConnector(stage), spark=spark
+    )
+    assert st.job_state == JobState.COMPLETED.value, st.error
+    grow(10, 15)
+    src = StopOnFirstRead(stage)
+    job = src.job = Job("EXPORT", "TABLE", dumpfiles=dump, directives=dirs)
+    st = job.run(wait=True, connection=src, spark=spark)
+    assert st.job_state == JobState.STOPPED.value, st.job_state
+    st = Job.attach(job.job_name, dumpdir=dump).restart(
+        connection=ParquetConnector(stage), spark=spark
+    )
+    assert st.job_state == JobState.COMPLETED.value, st.error
+    ds = DumpSet(dump)
+    for key, m in ds.read_manifest().tables.items():
+        assert (m["watermark"], m["rows_this_run"], m["row_count"]) == (14, 5, 15), key
+        assert len(m["snapshots"]) == 2, key
+        tdir = ds.table_dir(*key.split("."))
+        assert spark.read.parquet(tdir).select("id").distinct().count() == 15
+
+
 # ---- ENCRYPTION × restart: the manifest persists ENCRYPTION_PASSWORD
 # as the redacted literal '***' (never the secret), so a restart that
 # re-planned from it verbatim would seal every remaining table under a
@@ -638,3 +676,76 @@ def test_transfer_restart_requires_target_connection(spark, sf_dir, tmp_path):
     att = Job.attach(job.job_name, dumpdir=events)
     with pytest.raises(UsageError, match="transfer TARGET"):
         att.restart(spark=spark)
+
+
+def test_transfer_restart_keeps_a_skipped_target(spark, sf_dir, tmp_path):
+    """TABLE_EXISTS_ACTION('SKIP') × restart: a table the stopped transfer
+    skipped logged a TABLE_TRANSFER_DONE with no target fingerprint, so
+    restart() runs it again under SKIP; it never fails a recheck and
+    forces an overwrite of the table the job was told to keep."""
+    stage = _stage(spark, sf_dir, tmp_path)
+    events, wh = str(tmp_path / "ev"), str(tmp_path / "wh")
+    out = ParquetConnector(wh)
+    remnant = spark.read.parquet(f"{sf_dir}/nation.parquet").limit(1)
+    out.write_table(remnant, "main", "nation", mode="overwrite")
+    tgt = StopOnFirstWrite(wh)
+    job = Job(
+        "IMPORT", "TABLE", dumpfiles=events,
+        directives=_transfer_directives(stage)[:-1]
+        + [D.TABLE_EXISTS_ACTION("SKIP")],
+    )
+    tgt.job = job
+    st = job.run(wait=True, connection=tgt, spark=spark)
+    assert st.job_state == JobState.STOPPED.value, st.job_state
+    evs = _events(events)
+    assert [
+        e["table"] for e in evs if e["event"] == "TABLE_TRANSFER_SKIP_EXISTS"
+    ] == ["main.nation"]
+    assert sum(1 for e in evs if e["event"] == "TABLE_TRANSFER_NOT_RUN") == 1
+    st = Job.attach(job.job_name, dumpdir=events).restart(
+        connection=ParquetConnector(wh), spark=spark
+    )
+    assert st.job_state == JobState.COMPLETED.value, st.error
+    assert not any(
+        e["event"] == "TABLE_RESUME_RECHECK_FAILED" for e in _events(events)
+    )
+    assert out.read_table(spark, "main", "nation").count() == 1
+    for t in ("region", "supplier"):
+        want = spark.read.parquet(f"{sf_dir}/{t}.parquet").count()
+        assert out.read_table(spark, "main", t).count() == want
+
+
+def test_transfer_restart_refuses_a_shared_target_after_one_source(
+    spark, sf_dir, tmp_path
+):
+    """Two sources remapped (REMAP_SCHEMA) onto one target, stopped after
+    the first: the TABLE_TRANSFER_* events name the target only, so they
+    cannot tell which source finished. restart() refuses rather than
+    take the first source's _DONE for the second and drop its rows."""
+    stage, wh = str(tmp_path / "stage"), str(tmp_path / "wh")
+    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    for s in ("a", "b"):
+        nation.write.parquet(os.path.join(stage, s, "nation.parquet"))
+    events = str(tmp_path / "ev")
+    tgt = StopOnFirstWrite(wh)
+    job = tgt.job = Job(
+        "IMPORT", "SCHEMA", dumpfiles=events,
+        directives=[
+            D.NETWORK_LINK(f"parquet://{stage}"),
+            D.INCLUDE_SCHEMA("a"), D.INCLUDE_SCHEMA("b"),
+            D.REMAP_SCHEMA("a", "main"), D.REMAP_SCHEMA("b", "main"),
+            D.TABLE_EXISTS_ACTION("APPEND"),
+        ],
+    )
+    st = job.run(wait=True, connection=tgt, spark=spark)
+    assert st.job_state == JobState.STOPPED.value, st.job_state
+    evs = _events(events)
+    assert [e["event"] for e in evs if e.get("table") == "main.nation"] == [
+        "TABLE_TRANSFER_START", "TABLE_TRANSFER_DONE", "TABLE_TRANSFER_NOT_RUN"
+    ]
+    att = Job.attach(job.job_name, dumpdir=events)
+    with pytest.raises(UsageError, match="main.nation"):
+        att.restart(connection=ParquetConnector(wh), spark=spark)
+    assert ParquetConnector(wh).read_table(spark, "main", "nation").count() == (
+        nation.count()
+    )
