@@ -54,7 +54,9 @@ through a write.
 Failures are per-table: ``_run_one`` logs ``TABLE_*_START``, catches,
 logs ``TABLE_*_ERROR`` and the error counts into COMPLETED_WITH_ERRORS
 (reference status.py:38 precedent; test expectation
-tests/test_import.py:179).
+tests/test_import.py:179). Every ``TABLE_<op>_*`` event is written by
+``_table_event``, keyed by ``TablePlan.event_key``; ``status.replay``
+folds the job's state events by that key.
 """
 
 from __future__ import annotations
@@ -263,6 +265,17 @@ def _arrow_schema(spark: SparkSession, schema: StructType):
     )
 
 
+def _table_event(
+    dumpset: DumpSet, plan: TablePlan, operation: str, what: str, **fields
+) -> None:
+    """Log TABLE_<operation>_<what> for ``plan``'s table: the one writer
+    of per-table events, all keyed by ``plan.event_key`` (status.replay
+    folds them by that key)."""
+    dumpset.log_event(
+        f"TABLE_{operation}_{what}", table=plan.event_key(operation), **fields
+    )
+
+
 # -- read ----------------------------------------------------------------
 
 
@@ -302,14 +315,13 @@ def _read_source(
         # exact O(all-partitions) listing this feature exists to avoid.
         # Connectors without a cheap counter just omit the total.
         evt: dict[str, Any] = {
-            "table": plan.source_key,
             "partition": part,
             "files_scanned": len(df.inputFiles()),
         }
         counter = getattr(connector, "count_data_files", None)
         if counter is not None:
             evt["files_total"] = counter(plan.schema, plan.table)
-        dumpset.log_event("TABLE_EXPORT_PARTITION_SCOPED", **evt)
+        _table_event(dumpset, plan, "EXPORT", "PARTITION_SCOPED", **evt)
     return df
 
 
@@ -676,9 +688,8 @@ def _write_dump(
             # which columns are sealed is public metadata (the
             # footer is plaintext under this scope anyway)
             detail["columns"] = list(enc["columns"])
-        dumpset.log_event(
-            "TABLE_EXPORT_ENCRYPTED",
-            table=plan.source_key,
+        _table_event(
+            dumpset, plan, "EXPORT", "ENCRYPTED",
             scope=enc["scope"],
             algorithm=enc["algorithm"],
         )
@@ -876,11 +887,7 @@ def _departition(
             truncate=plan.truncate,
             options=plan.writer_options,
         )
-    dumpset.log_event(
-        "TABLE_IMPORT_DONE",
-        table=plan.target_key,
-        departitioned=len(part_dirs),
-    )
+    _table_event(dumpset, plan, "IMPORT", "DONE", departitioned=len(part_dirs))
     return TableResult(
         plan, ok=True, detail={"departitioned_tables": len(part_dirs)}
     )
@@ -927,11 +934,8 @@ def _account_export(
             "tiebreak": tie,
             "rows_dropped": rows_dropped,
         }
-        dumpset.log_event(
-            "TABLE_EXPORT_DEDUPED",
-            table=plan.source_key,
-            key=key,
-            rows_dropped=rows_dropped,
+        _table_event(
+            dumpset, plan, "EXPORT", "DEDUPED", key=key, rows_dropped=rows_dropped
         )
     if plan.source_type:
         # VIEWS_AS_TABLES provenance: the dump holds materialized
@@ -1095,9 +1099,8 @@ def _fingerprint_done(
         t_rows, t_digest = table_fingerprint(
             connector.read_table(spark, plan.target_schema, plan.target_table)
         )
-    dumpset.log_event(
-        f"TABLE_{operation}_DONE",
-        table=plan.event_key(operation),
+    _table_event(
+        dumpset, plan, operation, "DONE",
         rows=t_rows if rows is None else rows,
         target_rows=t_rows,
         target_digest=t_digest,
@@ -1107,9 +1110,8 @@ def _fingerprint_done(
 
 def _skip(dumpset: DumpSet, plan: TablePlan, operation: str, why: str) -> TableResult:
     """A table that moves no rows: TABLE_<op>_<why>, then its DONE."""
-    key = plan.event_key(operation)
-    dumpset.log_event(f"TABLE_{operation}_{why}", table=key)
-    dumpset.log_event(f"TABLE_{operation}_DONE", table=key, rows=0)
+    _table_event(dumpset, plan, operation, why)
+    _table_event(dumpset, plan, operation, "DONE", rows=0)
     return TableResult(plan, ok=True, rows=0, skipped=True)
 
 
@@ -1134,17 +1136,13 @@ def export_table(
         df = connector.read_table(
             spark, plan.schema, plan.table, columns=plan.columns
         )
-        dumpset.log_event(
-            "TABLE_EXPORT_METADATA_ONLY",
-            table=plan.source_key,
-            schema_json=df.schema.json(),
+        _table_event(
+            dumpset, plan, "EXPORT", "METADATA_ONLY", schema_json=df.schema.json()
         )
-        # a worker that never logs _DONE stays EXECUTING in
-        # status_from_events forever (it matches only the
-        # _START/_DONE/_ERROR suffixes)
-        dumpset.log_event(
-            "TABLE_EXPORT_DONE", table=plan.source_key, rows=0, bytes=0
-        )
+        # METADATA_ONLY is not a state event (status.replay folds only
+        # _START/_DONE/_ERROR/_NOT_RUN): without a _DONE the table stays
+        # EXECUTING in STATUS and restart() exports it again
+        _table_event(dumpset, plan, "EXPORT", "DONE", rows=0, bytes=0)
         return TableResult(
             plan, ok=True, rows=0, bytes=0, files=0,
             detail={"spark_schema": df.schema.json(), "metadata_only": True},
@@ -1186,9 +1184,8 @@ def export_table(
         spark, dumpset, plan, schema, out_dir, pre_files,
         rows - prev_rows, n_before_dedup, enc_detail,
     )
-    dumpset.log_event(
-        "TABLE_EXPORT_DONE",
-        table=plan.source_key,
+    _table_event(
+        dumpset, plan, "EXPORT", "DONE",
         rows=rows - prev_rows,
         bytes=size - prev_size,
         cumulative_rows=rows,
@@ -1334,7 +1331,8 @@ def run_plans(
     ``stop_event`` is the STOP_JOB analog (reference status.py:32-47
     models STOP_PENDING/STOPPING/STOPPED; Oracle's public contract is a
     cooperative stop at a work-item boundary): when set, tables that have
-    not yet STARTED are recorded as not-run (TABLE_*_NOT_RUN events) and
+    not yet STARTED are recorded as not-run (TABLE_<op>_NOT_RUN events,
+    which STATUS lists as NOT_RUN workers until a restart runs them) and
     the result state is STOPPED. In-flight tables always complete — a
     table is the atomic unit of restartability, and every table-dir write
     is a ``staged`` commit, so the dump set only ever holds whole tables
@@ -1356,9 +1354,7 @@ def run_plans(
             if not stop_seen[0]:
                 stop_seen[0] = True
                 dumpset.log_event("JOB_STOPPING", next_table=p.source_key)
-        dumpset.log_event(
-            f"TABLE_{operation}_NOT_RUN", table=p.event_key(operation)
-        )
+        _table_event(dumpset, p, operation, "NOT_RUN")
         return TableResult(p, ok=True, skipped=True, detail={"not_run": True})
 
     # Imports execute in topo waves (parents before children — the FK
@@ -1395,9 +1391,7 @@ def _run_one(
     call, so a wrapper patched over them sees each table. A failed
     table's result detail is what it left on disk: ``published`` when an
     EXPORT replaced the table dir before failing."""
-    dumpset.log_event(
-        f"TABLE_{operation}_START", table=plan.event_key(operation)
-    )
+    _table_event(dumpset, plan, operation, "START")
     left: dict[str, Any] = {}
     try:
         if operation == "EXPORT":
@@ -1406,11 +1400,7 @@ def _run_one(
             return transfer_table(spark, connector, dumpset, plan, config)
         return import_table(spark, connector, dumpset, plan, config)
     except Exception as e:
-        dumpset.log_event(
-            f"TABLE_{operation}_ERROR",
-            table=plan.event_key(operation),
-            error=str(e),
-        )
+        _table_event(dumpset, plan, operation, "ERROR", error=str(e))
         if operation == "IMPORT" and config.skip_constraint_errors:
             # SKIP_CONST_ERR: continue-on-error, count it
             # (reference DATA_OPTIONS, directives.py:227-238)

@@ -9,8 +9,8 @@ Lifecycle (reference job.py:195-308 → ours). run() walks every step;
 restart() rebuilds the job from the last JOB_OPEN event (operation,
 mode, name, directive list), resolves the connection (1), re-plans (7)
 and re-enters at 9 — one execution path. The event log is the record of
-a job (restart, attach and LIST_JOBS read it); the manifest describes
-the dump:
+a job (``status.replay`` reads it for STATUS, restart, attach and
+LIST_JOBS); the manifest describes the dump:
   1. resolve connection            (job.py:200-201)  → _resolve_connector
   2. validate operation/mode       (job.py:206-210)
   3. stamp job_date → job_name     (job.py:213-218, 88-125)
@@ -62,6 +62,7 @@ from .status import (
     live_job,
     poll_for_completion,
     register_job,
+    replay,
     status_from_events,
 )
 from .util import MAX_IDENTIFIER_LENGTH, string_shortener, utc_now
@@ -744,12 +745,12 @@ class Job:
         IMPORT or NETWORK_LINK transfer. The dump set's event log plays
         Oracle's master table.
 
-        The last JOB_OPEN names the job: operation, mode, job name and
-        the directive list, re-compiled verbatim (FLASHBACK/as-of,
-        CHECKSUM, COMPRESSION, filters and remaps are all re-applied). A
-        table is finished when its latest TABLE_<op>_START/_DONE/_ERROR
-        event since that JOB_OPEN is a _DONE, and it is skipped once
-        verified:
+        One ``status.replay`` of the log gives the job. The last JOB_OPEN
+        names it: operation, mode, job name and the directive list,
+        re-compiled verbatim (FLASHBACK/as-of, CHECKSUM, COMPRESSION,
+        filters and remaps are all re-applied). A table is finished when
+        its latest state event since that JOB_OPEN is a _DONE (a _NOT_RUN
+        never replaces an earlier one), and it is skipped once verified:
 
         - EXPORT checks the dump against its manifest entry: data files
           present, recorded CHECKSUM digests recomputed and equal, and
@@ -767,19 +768,13 @@ class Job:
         """
         if self.dumpset is None:
             raise UsageError("restart requires a job with a dump set")
-        info = status_from_events(self.dumpset)
-        if (
-            self._state != JobState.STOPPED
-            and info.job_state != JobState.STOPPED.value
-        ):
+        rec = replay(self.dumpset)
+        if self._state != JobState.STOPPED and rec.state != JobState.STOPPED.value:
             raise UsageError(
                 f"Only a STOPPED job can restart (START_JOB); "
-                f"state={self._state.value}/{info.job_state}"
+                f"state={self._state.value}/{rec.state}"
             )
-        events = list(self.dumpset.read_events())
-        opens = [i for i, e in enumerate(events) if e.get("event") == "JOB_OPEN"]
-        since = events[opens[-1]:] if opens else [{}]
-        opened = since[0]
+        opened = rec.opened or {}
         if "directives" not in opened:
             raise UsageError(
                 "restart() re-plans a job from the directive list of its "
@@ -836,10 +831,11 @@ class Job:
                     "re-run the job instead (REUSE_DUMPFILES('YES') for an "
                     "export, TABLE_EXISTS_ACTION('SKIP') for an import)"
                 )
-        kinds = {f"TABLE_{engine_op}_{s}" for s in ("START", "DONE", "ERROR")}
-        latest = {ev.get("table"): ev for ev in since if ev.get("event") in kinds}
+        ran = {
+            k for k, ev in rec.tables.items() if not ev["event"].endswith("_NOT_RUN")
+        }
         keys = [p.event_key(engine_op) for p in plans]
-        shared = sorted({k for k in keys if keys.count(k) > 1 and k in latest})
+        shared = sorted({k for k in keys if keys.count(k) > 1 and k in ran})
         if shared:
             # the events name the target only, so they cannot tell which
             # of the sources remapped onto it finished
@@ -851,7 +847,7 @@ class Job:
         on_target = engine_op != "EXPORT"
         remaining, skipped = [], []
         for p in plans:
-            done = latest.get(p.event_key(engine_op), {})
+            done = rec.tables.get(p.event_key(engine_op), {})
             # a target _DONE without a fingerprint moved no rows (SKIP,
             # VERIFY_ONLY): it is re-run, never forced to overwrite
             if done.get("event") != f"TABLE_{engine_op}_DONE" or (
@@ -970,28 +966,25 @@ class Job:
                 "its dump set"
             )
         ds = DumpSet(dumpdir)
-        info = status_from_events(ds)
-        desc = info.job_description
-        if desc is None:
+        rec = replay(ds)
+        if rec.opened is None:
             raise JobNotFound(f"No job artifacts at {dumpdir}")
-        if desc.job_name != job_name and any(
-            e.get("event") == "JOB_OPEN" and e.get("job_name") == job_name
-            for e in ds.read_events()
-        ):
+        name = rec.opened.get("job_name", "")
+        if name != job_name and job_name in rec.earlier:
             # an earlier job of this dump set, which a later one replaced
             raise JobNotFound(
                 f"Job {job_name!r} is no longer the job of {dumpdir}: its "
-                f"last JOB_OPEN names {desc.job_name!r}"
+                f"last JOB_OPEN names {name!r}"
             )
         # the last JOB_OPEN names the job the dump set holds
         job = cls(
-            desc.operation, desc.mode, dumpfiles=dumpdir,
-            job_name=desc.job_name,
+            rec.opened.get("operation", ""), rec.opened.get("mode", ""),
+            dumpfiles=dumpdir, job_name=name,
         )
         job.dumpset = ds
         job.attached_sessions = 1  # this attach handle
         try:
-            job._state = JobState(info.job_state)
+            job._state = JobState(rec.state)
         except ValueError:
             job._state = JobState.NOT_RUNNING
         return job

@@ -144,10 +144,11 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
     Two sources, registry-first like the status strategies: every job in
     the in-process live registry, then — when ``dump_root`` is given —
     the job of every dump-set directory under it that is NOT already
-    listed: operation, mode and name from its last JOB_OPEN and state
-    replayed from its event log (the cross-process half the in-memory
-    registry cannot see, exactly the split cleanup_orphans honors). Rows
-    sort by job_name for a stable listing."""
+    listed: one ``replay`` of its event log gives name, operation, mode
+    and degree from the last JOB_OPEN and the state since it (the
+    cross-process half the in-memory registry cannot see, exactly the
+    split cleanup_orphans honors). Rows sort by job_name for a stable
+    listing."""
     rows: list[dict] = []
     seen: set[str] = set()
     for name, job in sorted(_live_jobs.items()):
@@ -178,10 +179,10 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
             if not os.path.isdir(path):
                 continue
             try:
-                info = status_from_events(DumpSet(path))
+                r = replay(DumpSet(path))
             except Exception:
                 continue
-            desc = info.job_description
+            desc = _description(r.opened)
             if desc is None or desc.job_name in seen:
                 continue  # no JOB_OPEN: not a dump set
             rows.append(
@@ -189,7 +190,7 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
                     "job_name": desc.job_name,
                     "operation": desc.operation,
                     "mode": desc.mode,
-                    "state": info.job_state,
+                    "state": r.state,
                     # no live process holds this job: zero attached
                     # sessions; degree replays from JOB_OPEN's parallel
                     "attached_sessions": 0,
@@ -201,71 +202,113 @@ def list_jobs(dump_root: str | None = None) -> list[dict]:
     return sorted(rows, key=lambda r: r["job_name"] or "")
 
 
-def status_from_events(
-    dumpset: DumpSet, request: StatusRequestType = StatusRequestType.ALL
-) -> JobStatusInfo:
-    """Strategy 2 — event-log derivation (replaces logfile regex parse,
-    reference status.py:449-579)."""
-    state = JobState.UNDEFINED.value
-    desc: JobDescription | None = None
-    workers: dict[str, JobWorkerStatus] = {}
-    errors: list[JobLogEntry] = []
-    wip: list[JobLogEntry] = []
-    dumpfiles: list[str] = []
-    bytes_done = 0
+# The per-table state events, TABLE_<op>_<what>, and the worker state each
+# one shows in STATUS.
+_TABLE_STATES = {
+    "START": "EXECUTING",
+    "DONE": "COMPLETED",
+    "ERROR": "ERROR",
+    "NOT_RUN": "NOT_RUN",
+}
+
+
+@dataclass
+class Replay:
+    """A dump set's job as its event log records it: the fold of the
+    events since the last JOB_OPEN (of the whole log when it has none)."""
+
+    opened: dict | None = None  # that JOB_OPEN event
+    state: str = JobState.UNDEFINED.value
+    # table → its latest TABLE_<op>_START/_DONE/_ERROR/_NOT_RUN event
+    tables: dict[str, dict] = field(default_factory=dict)
+    earlier: list[str] = field(default_factory=list)  # earlier jobs' names
+    dumpfiles: list[str] = field(default_factory=list)
+    errors: list[JobLogEntry] = field(default_factory=list)
+    wip: list[JobLogEntry] = field(default_factory=list)
+
+
+def replay(dumpset: DumpSet) -> Replay:
+    """The one reader of a job's event log (Oracle's master table):
+    STATUS, restart(), attach() and LIST_JOBS all read the job from here.
+    The log is read once; every JOB_OPEN starts the fold afresh, so only
+    the last job's events count. A _NOT_RUN marks a table the job has
+    not reached: it never replaces the table's earlier state event."""
+    r, names = Replay(), []
     for ev in dumpset.read_events():
         et = ev.get("event", "")
         ts = ev.get("ts")
         if et == "JOB_OPEN":
-            state = JobState.DEFINING.value
-            desc = JobDescription(
-                job_name=ev.get("job_name", ""),
-                operation=ev.get("operation", ""),
-                mode=ev.get("mode", ""),
-                as_of=ev.get("as_of"),
-                parallel=ev.get("parallel", 1),
-                schemas=ev.get("schemas", []),
-            )
+            r = Replay(opened=ev, state=JobState.DEFINING.value, earlier=names[:])
+            names.append(ev.get("job_name", ""))
         elif et == "JOB_START":
-            state = JobState.EXECUTING.value
+            r.state = JobState.EXECUTING.value
         elif et == "JOB_DONE":
-            state = ev.get("state", JobState.COMPLETED.value)
-            dumpfiles = ev.get("dumpfiles", [])
-        elif et.startswith("TABLE_") and et.endswith("_START"):
+            r.state = ev.get("state", JobState.COMPLETED.value)
+            r.dumpfiles = ev.get("dumpfiles", [])
+        elif et.startswith("TABLE_") and et.split("_", 2)[-1] in _TABLE_STATES:
             t = ev.get("table", "")
-            workers[t] = JobWorkerStatus(name=t, state="EXECUTING")
-            wip.append(JobLogEntry(log_line=f"{et} {t}", timestamp=ts))
-        elif et.startswith("TABLE_") and et.endswith("_DONE"):
-            t = ev.get("table", "")
-            w = workers.setdefault(t, JobWorkerStatus(name=t, state=""))
-            w.state = "COMPLETED"
-            w.completed_rows = ev.get("rows")
-            w.completed_bytes = ev.get("bytes")
-            bytes_done += ev.get("bytes") or 0
-        elif et.startswith("TABLE_") and et.endswith("_ERROR"):
-            t = ev.get("table", "")
-            w = workers.setdefault(t, JobWorkerStatus(name=t, state=""))
-            w.state = "ERROR"
-            w.error = ev.get("error")
-            errors.append(JobLogEntry(log_line=str(ev.get("error")), timestamp=ts))
-    n = len(workers) or 1
-    done = sum(1 for w in workers.values() if w.state in ("COMPLETED", "ERROR"))
+            if et.endswith("_NOT_RUN") and t in r.tables:
+                continue
+            r.tables[t] = ev
+            if et.endswith("_START"):
+                r.wip.append(JobLogEntry(log_line=f"{et} {t}", timestamp=ts))
+            elif et.endswith("_ERROR"):
+                err = str(ev.get("error"))
+                r.errors.append(JobLogEntry(log_line=err, timestamp=ts))
+    return r
+
+
+def _description(opened: dict | None) -> JobDescription | None:
+    if opened is None:
+        return None
+    return JobDescription(
+        job_name=opened.get("job_name", ""),
+        operation=opened.get("operation", ""),
+        mode=opened.get("mode", ""),
+        as_of=opened.get("as_of"),
+        parallel=opened.get("parallel", 1),
+        schemas=opened.get("schemas", []),
+    )
+
+
+def status_from_events(
+    dumpset: DumpSet, request: StatusRequestType = StatusRequestType.ALL
+) -> JobStatusInfo:
+    """Strategy 2 — event-log derivation (replaces logfile regex parse,
+    reference status.py:449-579): renders ``replay``. The workers are the
+    tables of the last job only, each in the state of its latest event; a
+    _NOT_RUN table is listed as NOT_RUN and not counted as done, and
+    bytes_processed sums each table's latest _DONE."""
+    r = replay(dumpset)
+    workers = [
+        JobWorkerStatus(
+            name=t,
+            state=_TABLE_STATES[ev["event"].split("_", 2)[-1]],
+            completed_rows=ev.get("rows"),
+            completed_bytes=ev.get("bytes"),
+            error=ev.get("error"),
+        )
+        for t, ev in r.tables.items()
+    ]
+    done = sum(1 for w in workers if w.state in ("COMPLETED", "ERROR"))
     info = JobStatusInfo(
-        job_state=state,
-        wip=wip if request & StatusRequestType.WIP else [],
-        job_description=desc if request & StatusRequestType.DESC else None,
+        job_state=r.state,
+        wip=r.wip if request & StatusRequestType.WIP else [],
+        job_description=_description(r.opened)
+        if request & StatusRequestType.DESC
+        else None,
         job_status=JobStatus(
-            state=state,
-            bytes_processed=bytes_done,
-            percent_done=100.0 * done / n,
-            worker_status_list=list(workers.values()),
-            files=[JobDumpFile(file_name=f) for f in dumpfiles],
+            state=r.state,
+            bytes_processed=sum(w.completed_bytes or 0 for w in workers),
+            percent_done=100.0 * done / (len(workers) or 1),
+            worker_status_list=workers,
+            files=[JobDumpFile(file_name=f) for f in r.dumpfiles],
         )
         if request & StatusRequestType.STATUS
         else None,
-        error=errors if request & StatusRequestType.ERROR else [],
+        error=r.errors if request & StatusRequestType.ERROR else [],
         logfile=dumpset.logfile_path,
-        dumpfiles=dumpfiles,
+        dumpfiles=r.dumpfiles,
     )
     if request & StatusRequestType.LOG_STATUS:
         info.log_contents = dumpset.read_logfile()

@@ -148,6 +148,12 @@ def test_export_then_stopped_import_reports_the_import_job(
     assert rows.get(export_name, {}).get("state") != "STOPPED"
     att = Job.attach(job.job_name, dumpdir=dump)
     assert (att.operation.value, att.job_name) == ("IMPORT", job.job_name)
+    # STATUS shows the import's tables only: one loaded, two never reached
+    js = att.get_status().job_status
+    workers = {w.name: w.state for w in js.worker_status_list}
+    assert sorted(workers) == sorted(f"main.{t}" for t in TABLES)
+    assert sorted(workers.values()) == ["COMPLETED", "NOT_RUN", "NOT_RUN"]
+    assert js.percent_done < 100
     # the export's name no longer names the dump set's job
     with pytest.raises(JobNotFound, match=job.job_name):
         Job.attach(export_name, dumpdir=dump)

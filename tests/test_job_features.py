@@ -395,6 +395,59 @@ def test_status_survives_torn_event_log_tail(tmp_path):
         status_from_events(ds)
 
 
+def test_status_replays_the_last_job_only(tmp_path):
+    """A dump set holds a completed export of two tables, then an import
+    stopped after its first. STATUS reports the import: one table loaded,
+    one NOT_RUN, half done, none of the export's bytes. Once a restart
+    loads the other table the import is whole."""
+    from oracledb_datapump_spark.status import status_from_events
+
+    ds = DumpSet(str(tmp_path / "two_jobs"))
+
+    def log(*events):
+        for ev, fields in events:
+            ds.log_event(ev, **fields)
+
+    def workers():
+        info = status_from_events(ds)
+        return info, {w.name: w.state for w in info.job_status.worker_status_list}
+
+    log(
+        ("JOB_OPEN", {"job_name": "EXP", "operation": "EXPORT", "mode": "TABLE"}),
+        ("JOB_START", {}),
+        ("TABLE_EXPORT_START", {"table": "main.a"}),
+        ("TABLE_EXPORT_DONE", {"table": "main.a", "rows": 10, "bytes": 100}),
+        ("TABLE_EXPORT_START", {"table": "main.b"}),
+        ("TABLE_EXPORT_DONE", {"table": "main.b", "rows": 20, "bytes": 200}),
+        ("JOB_DONE", {"state": "COMPLETED", "dumpfiles": ["main/a", "main/b"]}),
+        ("JOB_OPEN", {"job_name": "IMP", "operation": "IMPORT", "mode": "TABLE"}),
+        ("JOB_START", {}),
+        ("TABLE_IMPORT_START", {"table": "main.a"}),
+        ("TABLE_IMPORT_DONE", {"table": "main.a", "rows": 10, "target_rows": 10}),
+        ("JOB_STOPPING", {"next_table": "main.b"}),
+        ("TABLE_IMPORT_NOT_RUN", {"table": "main.b"}),
+        ("JOB_DONE", {"state": "STOPPED", "dumpfiles": [], "errors": 0}),
+    )
+    info, states = workers()
+    assert info.job_state == JobState.STOPPED.value
+    assert info.job_description.job_name == "IMP"
+    assert states == {"main.a": "COMPLETED", "main.b": "NOT_RUN"}
+    assert info.job_status.percent_done == 50.0
+    assert info.job_status.bytes_processed == 0
+
+    log(
+        ("JOB_RESTART", {"job_name": "IMP", "skipped": ["main.a"],
+                         "remaining": ["main.b"]}),
+        ("TABLE_RESUME_SKIP", {"table": "main.a"}),
+        ("TABLE_IMPORT_START", {"table": "main.b"}),
+        ("TABLE_IMPORT_DONE", {"table": "main.b", "rows": 20, "target_rows": 20}),
+        ("JOB_DONE", {"state": "COMPLETED", "dumpfiles": [], "errors": 0}),
+    )
+    info, states = workers()
+    assert info.job_status.percent_done == 100.0
+    assert states == {"main.a": "COMPLETED", "main.b": "COMPLETED"}
+
+
 def test_log_event_cuts_torn_tail_before_append(tmp_path):
     """An append after a torn last line must not glue onto the fragment:
     the torn bytes are cut, so every complete event and the new one read

@@ -115,8 +115,19 @@ def test_restart_skips_completed_and_finishes(spark, sf_dir, tmp_path):
 
     att = Job.attach(job.job_name, dumpdir=dump)
     assert att.state == JobState.STOPPED
+    # STATUS of the stopped job names the two tables it never reached
+    js = att.get_status().job_status
+    assert sorted(w.state for w in js.worker_status_list) == [
+        "COMPLETED", "NOT_RUN", "NOT_RUN"
+    ]
+    assert js.percent_done < 100
     st = att.restart(connection=ParquetConnector(stage), spark=spark)
     assert st.job_state == JobState.COMPLETED.value, st.error
+    # ... and of the restarted one lists each planned table once, done
+    workers = st.job_status.worker_status_list
+    assert sorted(w.name for w in workers) == sorted(f"main.{t}" for t in TABLES)
+    assert all(w.state == "COMPLETED" for w in workers)
+    assert st.job_status.percent_done == 100.0
 
     evs = _events(dump)
     skipped = [e["table"] for e in evs if e["event"] == "TABLE_RESUME_SKIP"]
