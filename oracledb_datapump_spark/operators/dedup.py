@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .docs_source import load_docs
+from ..functions.fixpoint import star_components
 from ..functions.text import TOKEN_SPLIT_RE, hash64, sql_hash64, sql_tokens_cte
 
 NUM_HASHES = 16
@@ -745,15 +746,14 @@ def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     chains (a~b, b~c but not a~c); group formation is what production
     dedup actually ships (keep ``doc_id == group_id``).
 
-    Spark plan: min-label propagation to a fixpoint. The verified edge
-    list is cached once; each round is one join (pull neighbor labels)
-    + one groupBy(min) + one label merge, i.e. O(|E|) shuffle per
-    round. LSH-verified clusters are near-cliques (diameter ~2), so
-    convergence takes ~2-3 rounds; the driver only ever sees a changed-
-    row COUNT, never data. At 100 TB with adversarial long-chain
-    components, swap the propagation loop for alternating large-star/
-    small-star contraction (Kiveris et al., "Connected Components in
-    MapReduce") — same per-round plan shape, O(log n) rounds.
+    Spark plan: ``functions.fixpoint.star_components`` contracts the
+    verified pairs to per-cluster stars (large-star/small-star, Kiveris
+    et al., SoCC'14: O(log n) rounds even for long chains, each round
+    one checkpoint that observes its own convergence witness, so the
+    driver never reads rows). A document's group is its star root, or
+    its own id when it is a root or has no verified pair; a group's size
+    is its star's edge count + 1, so both joins onto the documents take
+    star-sized tables.
 
     Oracle: DuckDB recursive CTE computing min reachable label — exact
     same fixpoint, so the hash matches.
@@ -761,58 +761,24 @@ def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # memoized: the histogram query re-runs dedup_groups, and the verify
     # pipeline is the dominant cost — see _VERIFIED_PAIRS_CACHE
     pairs = verified_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    # localCheckpoint (not cache): each fixpoint round would otherwise
-    # chain the FULL prior plan — the r2/r3 plan audit measured 558
-    # exchanges / 332 scans in the final plan. Checkpointing truncates
-    # lineage to the materialized blocks, so the final plan is O(1) in
-    # the number of rounds and the LSH pipeline is planned exactly once.
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
+    stars = star_components(pairs, "dedup_groups")
+    sizes = stars.groupBy(F.col("v").alias("group_id")).agg(
+        (F.count(F.lit(1)) + 1).alias("group_size")
     )
-    labels = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.col("doc_id").alias("lbl"))
-        .localCheckpoint(eager=True)
-    )
-    while True:
-        pulled = (
-            edges.join(
-                labels.select(
-                    F.col("doc_id").alias("dst"), F.col("lbl").alias("dst_lbl")
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("doc_id"))
-            .agg(F.min("dst_lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(pulled, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.select("doc_id", F.col("lbl").alias("new_lbl"))
-            .join(labels, "doc_id")
-            .filter(F.col("new_lbl") != F.col("lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("group_size"))
+    # a document without a star edge is a root or a singleton
     return (
-        labels.join(F.broadcast(sizes), "lbl")
+        _docs(spark, sf_dir)
+        .join(
+            stars.select(F.col("u").alias("doc_id"), F.col("v").alias("root")),
+            "doc_id",
+            "left",
+        )
+        .select("doc_id", F.coalesce("root", "doc_id").alias("group_id"))
+        .join(sizes, "group_id", "left")
         .select(
-            "doc_id", F.col("lbl").alias("group_id"), "group_size"
+            "doc_id",
+            "group_id",
+            F.coalesce("group_size", F.lit(1)).cast("long").alias("group_size"),
         )
         .orderBy("doc_id")
     )

@@ -16,20 +16,34 @@ k-means operator uses to put an iterative algorithm inside the hard
 hash gate. The DIV-based mass loss (< 1 unit per edge per round) is the
 documented cost of exactness; rankings are unaffected.
 
-Plan shape: degrees and edges are computed once and cached; each
-iteration is one join (ranks onto the edge list, hash on src) + one
-groupBy(dst) sum — O(|E|) shuffle per round, no driver data reads (the
-iteration count is fixed, so the loop is pure lineage, and Spark
-pipelines all rounds into one job). At 100 TB-scale graphs the same
-plan holds; skewed hub nodes are the known risk (salt the dst key or
-pre-combine map-side, which groupBy's partial aggregation already does).
+Plan shape: the edge list is pinned once by a localCheckpoint that
+also carries each edge's source degree (a window count over src, so no
+degree table and no degree join) and observes N on the same job
+(``functions.fixpoint.checkpoint_observed``: the number of src window
+partitions), so the driver never runs a separate count. The window
+costs one full shuffle and sort of the edges by src, where a
+groupBy(src) count shuffles about one partial row per src per map
+partition and is then broadcast-joined onto the edges; it saves two
+Spark jobs. The checkpoint keeps that src partitioning and sort, so
+when the rank join is a sort-merge join (graphs too big to broadcast)
+it shuffles only the ranks, never the edges again. Iteration 1
+needs no rank join, because every rank is SCALE DIV N; each later
+iteration is one join (ranks onto the edge list on src) + one
+groupBy(dst) sum, pinned by a localCheckpoint. The edge list is
+symmetric, so every node is some edge's dst and the groupBy output is
+the whole rank vector: no join against a node list. O(|E|) shuffle per
+round, no driver data reads. At 100 TB-scale graphs the same plan
+holds; skewed hub nodes are the known risk: the degree window sends a
+hub's edges to one task with no map-side partial count (salt the src
+key), while the groupBy(dst) sum keeps its partial aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import checkpoint_observed
 from ..functions.local_table import values_df
 
 PR_SCALE = 1_000_000_000
@@ -61,42 +75,43 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node_id, pr): top-PR_TOPK nodes after PR_ITERS quantized power
     iterations; ties broken by node id."""
-    # localCheckpoint: each power iteration would otherwise chain the
-    # prior iteration's full plan (r3 audit: 33 exchanges in the final
-    # plan) — truncating lineage per round keeps the final plan at one
-    # join + one agg regardless of PR_ITERS.
-    edges = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    # deg is pinned once (node-sized) and nodes is DERIVED from it:
-    # groupBy(src) keys ARE the distinct srcs, so the former separate
-    # edges.distinct() pass — a second full-edge-stream aggregation +
-    # exchange — is free off deg (guide §2.4). The pinned deg also
-    # broadcast-joins onto edges without re-running its aggregation.
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
+    # One pinned edge list carries each edge's source degree (a window
+    # count over src: one edge shuffle and sort, which the rank joins
+    # below reuse) and its checkpoint observes n as the number of src
+    # partitions. Each checkpoint also cuts the lineage, so the final
+    # plan stays one join + one agg regardless of PR_ITERS.
+    by_src = Window.partitionBy("src").orderBy("dst")
+    everything = by_src.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
     )
-    ed = edges.join(deg, "src").localCheckpoint(eager=True)
-    nodes = deg.select(F.col("src").alias("node"))
-    n = nodes.count()
+    ed, obs = checkpoint_observed(
+        _edges(spark, sf_dir).select(
+            "src",
+            "dst",
+            F.count(F.lit(1)).over(everything).alias("deg"),
+            (F.row_number().over(by_src) == 1).alias("first"),
+        ),
+        F.sum(F.col("first").cast("long")).alias("n"),
+    )
+    n = obs["n"]
     base = (15 * PR_SCALE) // (100 * n)
-    ranks = nodes.select("node", F.lit(PR_SCALE // n).cast("long").alias("pr"))
+    # iteration 1 needs no rank join: every rank is PR_SCALE DIV n
+    ranked = ed.select(
+        "dst", "deg", F.lit(PR_SCALE // n).cast("long").alias("pr")
+    )
     for _ in range(PR_ITERS):
-        msgs = (
-            ed.join(ranks, ed.src == ranks.node)
-            .select("dst", F.expr("pr DIV deg").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
+        # _edges is symmetric, so every node is some edge's dst and the
+        # groupBy(dst) output is the whole rank vector
+        ranks = (
+            ranked.groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("pr DIV deg")).alias("s"))
+            .select(
+                "node",
+                (F.lit(base) + F.expr("85 * s DIV 100")).cast("long").alias("pr"),
+            )
+            .localCheckpoint(eager=True)
         )
-        ranks = nodes.join(
-            msgs, nodes.node == msgs.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr("85 * coalesce(s, CAST(0 AS BIGINT)) DIV 100")
-            ).cast("long").alias("pr"),
-        ).localCheckpoint(eager=True)
+        ranked = ed.join(ranks, F.col("src") == F.col("node"))
     return (
         ranks.orderBy(F.desc("pr"), "node")
         .limit(PR_TOPK)

@@ -7,9 +7,11 @@ inventory) — these are the data-management queries a 100 TB training-
 data pipeline runs between ingest and tokenization:
 
 - ``connected_components_sizes``: exact connected components of the
-  sparse customer-part co-purchase graph by min-label propagation — the general
-  form of dedup-group discovery (dedup.dedup_groups is the same
-  algorithm specialized to near-dup edges). Iterative-until-fixpoint
+  sparse customer-part co-purchase graph by large-star/small-star
+  contraction (``functions.fixpoint.star_components``, the package's one
+  connected-components loop; dedup.dedup_groups and
+  pipeline68.dedup_medoid_select run the same loop over near-dup
+  edges). Iterative-until-fixpoint
   under the hard value hash: the DuckDB oracle derives the identical
   components with a recursive CTE (min reachable node id), so the
   Spark loop's convergence is checked bit-exactly, not just row counts.
@@ -22,8 +24,9 @@ data pipeline runs between ingest and tokenization:
   to keep small high-quality sources from drowning) with an epoch cap,
   all in integer arithmetic so the plan is bit-identical cross-engine.
 
-Scale notes per operator in the docstrings; every loop is O(diameter)
-keyed shuffles with localCheckpoint lineage cuts, never row collection.
+Scale notes per operator in the docstrings; the one loop is O(log n)
+rounds of keyed shuffles with localCheckpoint lineage cuts, never row
+collection.
 """
 
 from __future__ import annotations
@@ -31,19 +34,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import star_components
+
 # -- connected components ----------------------------------------------------
 
 CC_QTY = 50  # only max-quantity lines: ~2% of lineitem, scale-invariant
 CC_PART_BASE = 1 << 40  # part node ids, disjoint from custkeys at any SF
-CC_MAX_ITERS = 40  # safety valve far above the sparse graph's diameter
 
 
 def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected (src, dst) edges of the sparse customer—part
-    co-purchase graph: an edge connects a customer to every part they
-    ordered at the maximum line quantity ({CC_QTY}). The quantity filter
-    keeps ~2% of lineitem at every scale while the part side stays
-    larger than the edge count, so the graph has REAL component
+    """Undirected (c, p) edges of the sparse customer—part co-purchase
+    graph, one row per edge: an edge connects a customer to every part
+    they ordered at the maximum line quantity ({CC_QTY}). The quantity
+    filter keeps ~2% of lineitem at every scale while the part side
+    stays larger than the edge count, so the graph has REAL component
     structure (hundreds of non-trivial components) instead of one
     supplier-hub giant — the regime where component discovery is the
     interesting question. Part ids offset by CC_PART_BASE into the
@@ -54,7 +58,7 @@ def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet").filter(
         F.col("l_quantity") == CC_QTY
     ).select("l_orderkey", "l_partkey")
-    pairs = (
+    return (
         o.join(l, o.o_orderkey == l.l_orderkey)
         .select(
             F.col("o_custkey").cast("long").alias("c"),
@@ -62,114 +66,30 @@ def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    return pairs.select(F.col("c").alias("src"), F.col("p").alias("dst")).unionAll(
-        pairs.select(F.col("p").alias("src"), F.col("c").alias("dst"))
-    )
 
 
 def connected_components_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(component_size, n_components): exact connected components of the
     sparse customer-part co-purchase graph (max-quantity lines only),
-    reported as a size histogram. Min-label
-    propagation to fixpoint: every node starts labeled with its own id;
-    each round a node takes the minimum of its label and its neighbors'
-    labels; at convergence a component's shared label is its minimum
-    node id — exactly the "min reachable node" the oracle's recursive
-    CTE computes, so an unconverged loop hash-mismatches.
+    reported as a size histogram. A component's id is its minimum node
+    id — exactly the "min reachable node" the oracle's recursive CTE
+    computes, so an unconverged loop hash-mismatches.
 
-    Plan: per round a neighbor-min step (labels onto edges, keyed on
-    src; groupBy(dst) partial min) PLUS a pointer-doubling shortcut
-    (label ← label's label), localCheckpointed so lineage stays flat;
-    convergence is a single scalar count of changed labels per round
-    (the k-means/pagerank convention — a bounded driver scalar, never
-    rows). The shortcut is what makes the loop O(log diameter) instead
-    of O(diameter) — a chain component of length 2^k converges in ~k
-    rounds — the same short-cutting idea as large-star/small-star. At
-    100 TB each round shuffles |E| + |V| keyed rows and hub skew is
-    absorbed by map-side partial min."""
-    # r17 (verdict item 5, guide §2.1): the min-label + single-hop
-    # pointer-doubling loop converged in 16 rounds at sf0.1 with ~0.8 s
-    # of per-round fixed cost — the rounds, not the per-round plan, were
-    # the bill. Replaced by the alternating large-star/small-star
-    # algorithm (Kiveris et al., "Connected Components in MapReduce and
-    # Beyond", SoCC'14), which contracts toward per-component stars in
-    # O(log n) rounds. Each round is two edge-set rewrites:
-    #   large-star(x): every neighbor w > x re-points to
-    #                  m = min(Γ(x) ∪ {x});
-    #   small-star(u): u and its smaller neighbors re-point to
-    #                  m = min(Γ≤(u) ∪ {u}).
-    # Both preserve component connectivity and only ever decrease edge
-    # endpoint ids; the fixpoint is exactly the star set
-    # {(node, component-min)}, so the final histogram is bit-identical
-    # to the old loop's (and to the oracle's recursive min-reachable
-    # CTE). Convergence witness: per input edge both rewrites emit
-    # exactly one edge whose endpoint-sum never increases, and the
-    # distinct() can only merge — so the (count, Σ(u+v)) pair over the
-    # round's output is non-increasing and constant iff the round was
-    # an identity. One 1-row aggregate per round (DECIMAL(38,0) exact;
-    # ids ≤ 2^40 + partkey, far inside).
+    Plan: ``functions.fixpoint.star_components`` contracts the edge list
+    to per-component stars by alternating large-star/small-star rounds
+    (Kiveris et al., SoCC'14; O(log n) rounds, where min-label
+    propagation needs O(diameter)). Each round is one eager
+    localCheckpoint whose Observation carries the convergence witness,
+    so the driver never reads rows and never runs a separate witness
+    action. At the fixpoint every non-root node has one edge to its
+    component's root, so the histogram is two groupBys over that edge
+    set. At 100 TB each round shuffles the edge set three times (two
+    per-node windows and a distinct); hub nodes lose the map-side
+    partial min a groupBy would give them (see star_components)."""
     edges = _cc_edges(spark, sf_dir)
-    # canonical undirected form: one (u, v) row per edge with u > v
-    # (customer and part ids are disjoint, so u ≠ v always)
-    E = edges.filter(F.col("src") > F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    # size the iteration's partitioning to the GRAPH, not the session
-    # default (same rationale as before): ~500k edges per partition.
-    n_edges = E.count()
-    n_parts = max(2, min(int(n_edges // 500_000) + 1, 2048))
-    E = E.repartition(n_parts, "u").localCheckpoint(eager=True)
-
-    def _witness(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.sum(
-                (F.col("u") + F.col("v")).cast("decimal(38,0)")
-            ).alias("s"),
-        ).collect()[0]
-        return row["c"], row["s"]
-
-    prev = _witness(E)
-    for _ in range(CC_MAX_ITERS):
-        # large-star: process every node x over its full neighborhood
-        # (symmetrized view); re-point larger neighbors at the min.
-        sym = E.unionAll(
-            E.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", F.col("u")).alias("m"))
-        )
-        large = (
-            sym.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # small-star: edges are (u > v); re-point u and its smaller
-        # neighbors at the group min. m < u always, and exactly the
-        # v == m row is dropped as a self-loop, so the emitted count
-        # matches the input count pre-distinct.
-        minsS = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(minsS, "u")
-            .select(F.col("v").alias("x"), "m")
-            .filter(F.col("x") != F.col("m"))
-            .unionAll(minsS.select(F.col("u").alias("x"), "m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _witness(small)
-        E = small
-        if cur == prev:
-            break
-        prev = cur
-    # at the star fixpoint every non-root node carries exactly one edge
-    # to its component min; roots appear only on the v side
+    stars = star_components(edges, "connected_components_sizes")
     return (
-        E.groupBy("v")
+        stars.groupBy("v")
         .agg((F.count(F.lit(1)) + F.lit(1)).cast("long").alias("component_size"))
         .groupBy("component_size")
         .agg(F.count(F.lit(1)).alias("n_components"))

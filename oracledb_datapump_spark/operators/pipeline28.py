@@ -106,7 +106,7 @@ def dedup_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-item metric.
 
     Plan: two assignment tables (pred rides the verified-pair memo +
-    label propagation; truth is one groupBy), one (pred,truth)
+    star_components; truth is one groupBy), one (pred,truth)
     intersection count, three keyed side-table joins (unhinted — AQE
     broadcasts at small sf, shuffle-joins at scale; the side tables are
     O(#clusters) ~ corpus-proportional, so a forced broadcast would be

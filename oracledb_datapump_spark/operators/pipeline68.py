@@ -10,11 +10,12 @@ Johnson–Lindenstrauss distortion audit.
   trend line.
 - ``dedup_medoid_select`` — canonical-representative selection for
   duplicate clusters: exact-Jaccard pairs (≥{MEDOID_J_PPM} ppm)
-  transitively closed by min-label propagation, then per cluster the
-  MEDOID — the member minimizing Σ(1e6 − J) to the others (absent
-  pair = distance 1e6). dedup_keep_best keeps the highest-QUALITY
-  member; the medoid is the most CENTRAL one — what MinHash-cluster
-  canonicalization actually wants when quality scores are untrusted.
+  transitively closed by ``functions.fixpoint.star_components``, then
+  per cluster the MEDOID — the member minimizing Σ(1e6 − J) to the
+  others (absent pair = distance 1e6). dedup_keep_best keeps the
+  highest-QUALITY member; the medoid is the most CENTRAL one — what
+  MinHash-cluster canonicalization actually wants when quality scores
+  are untrusted.
 - ``jl_distortion_report`` — the Johnson–Lindenstrauss check for a
   ±1-sign random projection 64 → {JL_K} dims (signs md5-derived, so
   both engines build the SAME matrix): over consecutive-id vector
@@ -31,19 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.fixpoint import star_components
 from ..functions.text import hash64, sql_hash64
 from ..functions.local_table import values_df
 
 DAY_US = 86_400_000_000
 #: medoid clustering threshold (dedup.py's 0.6 in ppm).
 MEDOID_J_PPM = 600_000
-#: hard cap on label-propagation rounds (min-label moves one hop per
-#: round, so rounds = cluster diameter; near-dup clusters at the 0.6
-#: Jaccard threshold are tiny-diameter by construction — a cluster
-#: needing more hops than this means pathological input, and the loop
-#: must fail loudly rather than spin: graph.py's pointer-doubling
-#: connected components is the log-diameter escape hatch).
-MEDOID_MAX_ROUNDS = 64
 #: JL target dimensionality and component quantization.
 JL_K = 16
 JL_QUANT = 1_000
@@ -193,17 +188,18 @@ FROM trough CROSS JOIN peak_row CROSS JOIN recov
 def dedup_medoid_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(group_id, group_size, medoid_doc, sum_dist_q): for every
     duplicate cluster (transitive closure of exact-Jaccard ≥
-    {MEDOID_J_PPM} ppm pairs; min-label propagation, dedup_groups'
-    fixpoint), the medoid — the member whose Σ(1e6 − J_ppm) over the
-    other members is smallest (pairs the verifier never scored count
-    the full 1e6; ties → smaller doc_id). Only clusters of size ≥ 2
-    appear. Where dedup_keep_best trusts a quality column, the medoid
-    is pure geometry — the canonicalization default.
+    {MEDOID_J_PPM} ppm pairs; ``functions.fixpoint.star_components``,
+    the loop dedup_groups runs), the medoid — the member whose
+    Σ(1e6 − J_ppm) over the other members is smallest (pairs the
+    verifier never scored count the full 1e6; ties → smaller doc_id).
+    Only clusters of size ≥ 2 appear. Where dedup_keep_best trusts a
+    quality column, the medoid is pure geometry — the canonicalization
+    default.
 
     Scale shape: the pair stage is the blocked shingle join
     (guarded-quadratic posture at 100 TB: ride LSH candidates);
-    propagation is O(|pairs|) per round with diameter-bounded rounds;
-    the medoid reduce is pair-list-sized."""
+    star contraction is O(|pairs|) per round over O(log n) rounds; the
+    medoid reduce is pair-list-sized."""
     from .dedup import _shingles, shingle_pair_intersections
 
     # r16: pin the shingle table once (sizes + the pair stage both ride
@@ -238,54 +234,14 @@ def dedup_medoid_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        jac.select(F.col("d1").alias("doc_id"))
-        .unionAll(jac.select(F.col("d2").alias("doc_id")))
-        .distinct()
+    stars = star_components(jac.select("d1", "d2"), "dedup_medoid_select")
+    gsize = stars.groupBy(F.col("v").alias("group_id")).agg(
+        (F.count(F.lit(1)) + 1).alias("group_size")
     )
-    labels = nodes.select("doc_id", F.col("doc_id").alias("lbl"))
-    edges = jac.select("d1", "d2").unionAll(
-        jac.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).localCheckpoint(eager=True)
-    rounds = 0
-    while True:
-        rounds += 1
-        if rounds > MEDOID_MAX_ROUNDS:
-            raise RuntimeError(
-                "dedup_medoid_select: label propagation exceeded "
-                f"{MEDOID_MAX_ROUNDS} rounds — cluster diameter is "
-                "pathological for a near-dup graph; use graph.py's "
-                "pointer-doubling components instead"
-            )
-        nbr = (
-            edges.join(
-                labels.withColumnRenamed("doc_id", "d2").withColumnRenamed(
-                    "lbl", "nlbl"
-                ),
-                "d2",
-            )
-            .groupBy(F.col("d1").alias("doc_id"))
-            .agg(F.min("nlbl").alias("mlbl"))
-        )
-        merged = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("lbl"), F.coalesce("mlbl", F.col("lbl"))).alias(
-                    "nlbl"
-                ),
-                "lbl",
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = merged.filter(F.col("nlbl") != F.col("lbl")).count()
-        labels = merged.select("doc_id", F.col("nlbl").alias("lbl"))
-        if changed == 0:
-            break
-    groups = labels.select("doc_id", F.col("lbl").alias("group_id"))
-    gsize = groups.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("group_size")
-    )
+    # every pair endpoint is a star member (u) or a root (v)
+    groups = stars.select(
+        F.col("u").alias("doc_id"), F.col("v").alias("group_id")
+    ).unionAll(gsize.select(F.col("group_id").alias("doc_id"), "group_id"))
     # per member: sum of distances to scored partners + 1e6 per
     # unscored co-member
     pair_dist = (
